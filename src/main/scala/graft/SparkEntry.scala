@@ -974,12 +974,12 @@ object SparkEntry {
         k = 5, floor = 0.6)
     }),
     // GATED ef sweep — the reference's ACTUAL accuracy knob
-    // (executor.py:66-70 set_ef), driver-visible as a curve. Unlike the
-    // IVF/BQ sweeps there is NO one-scan decomposition: a beam at
-    // smaller ef is not a prefix of a larger beam's traversal, so each
-    // level is its own (cheap: broadcast batch × in-memory graphs)
-    // search. Beam recall is also not STRUCTURALLY monotone in ef the
-    // way nested candidate sets are, so the gate pins the two robust
+    // (executor.py:66-70 set_ef), driver-visible as a curve. All levels
+    // share one shuffle and one shard restore (KnnHnsw.searchMulti);
+    // only the beams are separate, since a beam at smaller ef is not a
+    // prefix of a larger beam's traversal. Beam recall is also not
+    // STRUCTURALLY monotone in ef the way the IVF/BQ sweeps' nested
+    // candidate sets are, so the gate pins the two robust
     // properties instead of per-step monotonicity: the curve must not
     // collapse (recall at max ef >= recall at min ef) and the max-ef
     // endpoint must clear the pinned floor.

@@ -1,8 +1,9 @@
 package graft.operators
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph-shaped ANN: shard-partitioned navigable-small-world graphs — the
@@ -53,7 +54,21 @@ object KnnHnsw {
     private val mMax = 2 * m // reverse-edge degree cap (layer-0 HNSW rule)
     private[operators] val ids = new mutable.ArrayBuffer[Long]
     private[operators] val vecs = new mutable.ArrayBuffer[Array[Float]]
-    private[operators] val adj = new mutable.ArrayBuffer[mutable.ArrayBuffer[Int]]
+    private[operators] val adj = new mutable.ArrayBuffer[Array[Int]]
+
+    /** Restore one persisted shard for serving. Adjacency arrives as
+      * persisted LOCAL indices, so restore is one array placement per
+      * row: no sort, no id→index map (the cost the pre-r11 global-id
+      * layout paid per query batch). A restored graph only serves, so
+      * its build knobs are unused. */
+    def this(shard: Array[ShardRow]) = {
+      this(0, 0)
+      val byIdx = new Array[ShardRow](shard.length)
+      shard.foreach(r => byIdx(r._2) = r)
+      byIdx.foreach { case (_, _, id, vec, nbs, _) =>
+        ids += id; vecs += vec; adj += nbs
+      }
+    }
 
     private def dist(q: Array[Float], idx: Int): Double =
       cosineDist(q, vecs(idx))
@@ -117,23 +132,25 @@ object KnnHnsw {
       * closest (its own distances, id tiebreak). */
     private[operators] def insert(id: Long, vec: Array[Float]): Unit = {
       val idx = ids.length
-      ids += id; vecs += vec; adj += new mutable.ArrayBuffer[Int]
+      ids += id; vecs += vec; adj += Array.emptyIntArray
       if (idx == 0) return
-      val near = searchBeam(vec, efConstruction).take(m)
-      near.foreach { case (_, nb) =>
-        adj(idx) += nb
-        adj(nb) += idx
-        if (adj(nb).length > mMax) {
-          val kept = adj(nb)
+      val near = searchBeam(vec, efConstruction).take(m).map(_._2).toArray
+      adj(idx) = near
+      near.foreach { nb =>
+        val grown = adj(nb) :+ idx
+        adj(nb) =
+          if (grown.length <= mMax) grown
+          else grown
             .map(x => (cosineDist(vecs(nb), vecs(x)), x))
             .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
               .on[(Double, Int)] { case (d, i) => (d, i) })
             .take(mMax).map(_._2)
-          adj(nb).clear(); adj(nb) ++= kept
-        }
       }
     }
   }
+
+  /** A served graph row: (shard, local_idx, vec_id, embedding, neighbor_idx, deleted). */
+  private[operators] type ShardRow = (Int, Int, Long, Array[Float], Array[Int], Boolean)
 
   /** Same arithmetic as the codegen'd CosineSim kernel (double
     * accumulators over float reads, same loop order) so JVM-side scores
@@ -160,7 +177,7 @@ object KnnHnsw {
     val g = new NswGraph(m, efConstruction)
     sorted.foreach { case (_, id, vec) => g.insert(id, vec) }
     (0 until g.ids.length).iterator.map { i =>
-      (shard, i, g.ids(i), g.vecs(i), g.adj(i).toArray.sorted)
+      (shard, i, g.ids(i), g.vecs(i), g.adj(i).sorted)
     }
   }
 
@@ -195,19 +212,24 @@ object KnnHnsw {
   def save(graph: DataFrame, path: String): Unit =
     Scale.dumpPartitionedBy(graph, path, "shard")
 
-  def load(spark: SparkSession, path: String): DataFrame = {
+  def load(spark: SparkSession, path: String): DataFrame =
+    restoreColumns(Scale.loadPartitioned(spark, path))
+
+  /** The schema restoration shared by [[load]] and [[loadVersioned]]. */
+  private def restoreColumns(raw: DataFrame): DataFrame = {
     // partition-column reads widen shard to long and append it last;
     // restore the written schema so load is a true inverse of save
-    val raw = Scale.loadPartitioned(spark, path)
     val base = Seq(col("shard").cast("int").as("shard"),
       col("local_idx").cast("int").as("local_idx"),
       col("vec_id"), col("embedding"),
       col("neighbor_idx").cast("array<int>").as("neighbor_idx"))
     // a graph saved after markDeleted carries its tombstones through
     // the round-trip (the reference persists its id map + deleted
-    // accounting the same way, executor.py:227-236)
+    // accounting the same way, executor.py:227-236); files written
+    // before the first tombstone read the flag as null, i.e. live
     if (raw.columns.contains("deleted"))
-      raw.select(base :+ col("deleted").cast("boolean").as("deleted"): _*)
+      raw.select(base :+
+        coalesce(col("deleted").cast("boolean"), lit(false)).as("deleted"): _*)
     else raw.select(base: _*)
   }
 
@@ -224,40 +246,58 @@ object KnnHnsw {
   def appendTo(spark: SparkSession, path: String, newRows: DataFrame,
                numShards: Int, m: Int = 8, efConstruction: Int = 64,
                idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+    overwriteShards(rebuildTouched(load(spark, path), newRows, idCol, vecCol,
+      numShards, m, efConstruction,
+      _.localCheckpoint(true))._2, // read completes before its source dirs rewrite
+      path)
+  }
+
+  /** The shards `rows` hash to, sorted: ≤ numShards ints. */
+  private def shardsOf(rows: DataFrame, numShards: Int): Array[Int] =
+    rows.select(pmod(xxhash64(col("vec_id")), lit(numShards)).cast("int").as("shard"))
+      .distinct().collect().map(_.getInt(0)).sorted
+
+  private def inShards(shards: Array[Int]) =
+    col("shard").isin(shards.map(Integer.valueOf): _*)
+
+  /** The upsert rebuild of [[appendTo]] and [[appendToVersioned]]: the
+    * shards `newRows` touch rebuild from their survivors plus the batch.
+    * `pin` materializes the survivors before a publish over their own
+    * files. Returns (touched shards, rebuilt rows). */
+  private def rebuildTouched(saved: DataFrame, newRows: DataFrame,
+      idCol: String, vecCol: String, numShards: Int, m: Int,
+      efConstruction: Int, pin: DataFrame => DataFrame): (Array[Int], DataFrame) = {
     val incoming = newRows.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).cast("array<float>").as("embedding"))
-    val touched = incoming
-      .select(pmod(xxhash64(col("vec_id")), lit(numShards)).cast("int").as("shard"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val saved = load(spark, path)
+    val touched = shardsOf(incoming, numShards)
     val hasTombstones = saved.columns.contains("deleted")
     val survivingCols =
       if (hasTombstones) Seq(col("vec_id"), col("embedding"), col("deleted"))
       else Seq(col("vec_id"), col("embedding"))
-    val surviving = saved
-      .filter(col("shard").isin(touched.map(Integer.valueOf): _*))
+    val surviving = pin(saved
+      .filter(inShards(touched))
       .select(survivingCols: _*)
-      .join(incoming.select("vec_id"), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true) // read completes before its source dirs rewrite
+      .join(incoming.select("vec_id"), Seq("vec_id"), "left_anti"))
     val rebuilt = build(
       surviving.select("vec_id", "embedding").unionByName(incoming),
       numShards, m, efConstruction)
-    val withFlags =
+    // tombstoned survivors keep their flag (they must keep routing);
+    // an upserted id revives as live — the reference's re-index path
+    // treats a deleted id as brand new (executor.py:151-161 after
+    // :224 removed it from the id map)
+    (touched,
       if (!hasTombstones) rebuilt
-      else
-        // tombstoned survivors keep their flag (they must keep routing);
-        // an upserted id revives as live — the reference's re-index path
-        // treats a deleted id as brand new (executor.py:151-161 after
-        // :224 removed it from the id map)
-        rebuilt.join(surviving.select(col("vec_id"), col("deleted")),
-            Seq("vec_id"), "left")
-          .withColumn("deleted", coalesce(col("deleted"), lit(false)))
-          .select(col("shard"), col("local_idx"), col("vec_id"),
-            col("embedding"), col("neighbor_idx"), col("deleted"))
-    withFlags
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(path)
+      else rebuilt.join(surviving.select(col("vec_id"), col("deleted")),
+          Seq("vec_id"), "left")
+        .withColumn("deleted", coalesce(col("deleted"), lit(false)))
+        .select(col("shard"), col("local_idx"), col("vec_id"),
+          col("embedding"), col("neighbor_idx"), col("deleted")))
   }
+
+  /** In-place publish: rewrite only the shard directories `rows` hold. */
+  private def overwriteShards(rows: DataFrame, path: String): Unit =
+    rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("shard").parquet(path)
 
   /** Purge tombstones from a SAVED graph: shards containing any deleted
     * row rebuild from their live rows only ([[appendTo]]'s
@@ -271,35 +311,39 @@ object KnnHnsw {
     * routed-but-excluded tombstones while deletion churn is low, compact
     * when the deleted fraction makes the extra routing work matter. */
   def compact(spark: SparkSession, path: String, numShards: Int,
-              m: Int = 8, efConstruction: Int = 64): Unit = {
-    val g = load(spark, path)
-    if (!g.columns.contains("deleted")) return
+              m: Int = 8, efConstruction: Int = 64): Unit =
+    rebuildLive(load(spark, path), numShards, m, efConstruction,
+        _.localCheckpoint(true)) // read completes before the dirs it read from rewrite
+      .foreach { case (touched, live, rebuilt) =>
+        overwriteShards(rebuilt, path)
+        // a shard whose rows were ALL deleted emits nothing — dynamic
+        // overwrite leaves its stale directory in place; drop it explicitly
+        val emptied = touched.filterNot(shardsOf(live, numShards).toSet)
+        if (emptied.nonEmpty) {
+          val root = new org.apache.hadoop.fs.Path(path)
+          val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+          emptied.foreach { sh =>
+            fs.delete(new org.apache.hadoop.fs.Path(root, s"shard=$sh"), true): Unit
+          }
+        }
+      }
+
+  /** The compact rebuild of [[compact]] and [[compactVersioned]]:
+    * (tombstoned shards, their live rows, those rebuilt), None if none. */
+  private def rebuildLive(g: DataFrame, numShards: Int, m: Int,
+      efConstruction: Int, pin: DataFrame => DataFrame)
+      : Option[(Array[Int], DataFrame, DataFrame)] = {
+    if (!g.columns.contains("deleted")) return None
     val touched = g.filter(col("deleted")).select("shard").distinct()
       .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-    val live = g.filter(col("shard").isin(touched.map(Integer.valueOf): _*))
+    if (touched.isEmpty) return None
+    val live = pin(g.filter(inShards(touched))
       .filter(!col("deleted"))
-      .select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true) // read completes before the dirs it read from rewrite
-    build(live, numShards, m, efConstruction)
-      // rebuilt shards keep the column so every file in the directory
-      // tree shares one schema (the untouched shards still carry it)
-      .withColumn("deleted", lit(false))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(path)
-    // a shard whose rows were ALL deleted emits nothing — dynamic
-    // overwrite leaves its stale directory in place; drop it explicitly
-    val liveShards = live
-      .select(pmod(xxhash64(col("vec_id")), lit(numShards)).cast("int").as("shard"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val emptied = touched.filterNot(liveShards)
-    if (emptied.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      emptied.foreach { sh =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"shard=$sh"), true): Unit
-      }
-    }
+      .select(col("vec_id"), col("embedding")))
+    // rebuilt shards keep the column so every file in the table shares
+    // one schema (the untouched shards still carry it)
+    Some((touched, live,
+      build(live, numShards, m, efConstruction).withColumn("deleted", lit(false))))
   }
 
   // ---------------------------------------------------------------------
@@ -332,16 +376,8 @@ object KnnHnsw {
   /** Restore a versioned graph at a pinned version (latest by default),
     * with the same schema restoration as [[load]]. */
   def loadVersioned(spark: SparkSession, path: String,
-                    version: Option[Int] = None): DataFrame = {
-    val raw = Versioned.read(spark, path, version)
-    val base = Seq(col("shard").cast("int").as("shard"),
-      col("local_idx").cast("int").as("local_idx"),
-      col("vec_id"), col("embedding"),
-      col("neighbor_idx").cast("array<int>").as("neighbor_idx"))
-    if (raw.columns.contains("deleted"))
-      raw.select(base :+ coalesce(col("deleted"), lit(false)).as("deleted"): _*)
-    else raw.select(base: _*)
-  }
+                    version: Option[Int] = None): DataFrame =
+    restoreColumns(Versioned.read(spark, path, version))
 
   /** Append/upsert into a versioned graph as a partition-COW commit:
     * new rows hash to their shards, ONLY those shards rebuild
@@ -366,34 +402,16 @@ object KnnHnsw {
                                          m: Int, efConstruction: Int,
                                          idCol: String, vecCol: String,
                                          base: Versioned.Snapshot): Int = {
-    val incoming = newRows.select(col(idCol).cast("long").as("vec_id"),
-      col(vecCol).cast("array<float>").as("embedding"))
-    val touched = incoming
-      .select(pmod(xxhash64(col("vec_id")), lit(numShards)).cast("int").as("shard"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return base.version
-    val saved = loadVersioned(spark, path, Some(base.version))
-    val hasTombstones = saved.columns.contains("deleted")
-    val survivingCols =
-      if (hasTombstones) Seq(col("vec_id"), col("embedding"), col("deleted"))
-      else Seq(col("vec_id"), col("embedding"))
-    val surviving = saved
-      .filter(col("shard").isin(touched.map(Integer.valueOf): _*))
-      .select(survivingCols: _*)
-      .join(incoming.select("vec_id"), Seq("vec_id"), "left_anti")
-    val rebuilt = build(
-      surviving.select("vec_id", "embedding").unionByName(incoming),
-      numShards, m, efConstruction)
-    val withFlags =
-      if (!hasTombstones) rebuilt
-      else rebuilt.join(surviving.select(col("vec_id"), col("deleted")),
-          Seq("vec_id"), "left")
-        .withColumn("deleted", coalesce(col("deleted"), lit(false)))
-        .select(col("shard"), col("local_idx"), col("vec_id"),
-          col("embedding"), col("neighbor_idx"), col("deleted"))
-    Versioned.replacePartitions(arrangeByShard(withFlags, touched.length),
-      path, "shard", touched.map(_.toLong), base)
+    val (touched, rows) = rebuildTouched(loadVersioned(spark, path, Some(base.version)),
+      newRows, idCol, vecCol, numShards, m, efConstruction, identity)
+    if (touched.isEmpty) base.version else replaceShards(rows, path, touched, base)
   }
+
+  /** Versioned publish: a partition-COW commit replacing `touched`. */
+  private def replaceShards(rows: DataFrame, path: String, touched: Array[Int],
+                            base: Versioned.Snapshot): Int =
+    Versioned.replacePartitions(arrangeByShard(rows, touched.length),
+      path, "shard", touched.map(_.toLong), base)
 
   /** Tombstone ids in a versioned graph as a partition-COW commit:
     * shards containing a marked id rewrite with the `deleted` flag set
@@ -409,10 +427,8 @@ object KnnHnsw {
     val touched = g.join(broadcast(marks), Seq("vec_id"), "left_semi")
       .select("shard").distinct().collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return base.version
-    val rewritten = markDeleted(
-      g.filter(col("shard").isin(touched.map(Integer.valueOf): _*)), marks)
-    Versioned.replacePartitions(arrangeByShard(rewritten, touched.length),
-      path, "shard", touched.map(_.toLong), base)
+    replaceShards(markDeleted(g.filter(inShards(touched)), marks),
+      path, touched, base)
   }
 
   /** Purge tombstones from a versioned graph as a partition-COW commit:
@@ -423,18 +439,11 @@ object KnnHnsw {
   def compactVersioned(spark: SparkSession, path: String, numShards: Int,
                        m: Int = 8, efConstruction: Int = 64): Int = {
     val base = Versioned.snapshot(spark, path)
-    val g = loadVersioned(spark, path, Some(base.version))
-    if (!g.columns.contains("deleted")) return base.version
-    val touched = g.filter(col("deleted")).select("shard").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return base.version
-    val live = g.filter(col("shard").isin(touched.map(Integer.valueOf): _*))
-      .filter(!col("deleted"))
-      .select(col("vec_id"), col("embedding"))
-    val rebuilt = build(live, numShards, m, efConstruction)
-      .withColumn("deleted", lit(false))
-    Versioned.replacePartitions(arrangeByShard(rebuilt, touched.length),
-      path, "shard", touched.map(_.toLong), base)
+    rebuildLive(loadVersioned(spark, path, Some(base.version)), numShards,
+        m, efConstruction, identity)
+      .fold(base.version) { case (touched, _, rebuilt) =>
+        replaceShards(rebuilt, path, touched, base)
+      }
   }
 
   /** Tombstone rows of a graph frame: every `vec_id` in `ids` keeps
@@ -455,62 +464,55 @@ object KnnHnsw {
       .drop("__mark")
   }
 
-  /** Search every shard graph for the broadcast query batch and merge
-    * per-shard top-k globally. efQuery is the reference's ef knob
-    * (`executor.py:66-70`): beam width per shard, recall-vs-cost. The
-    * collect is the bounded query batch (same contract as IVF's probe
-    * resolve); the graphs never leave their tasks. A `deleted` column
-    * (from [[markDeleted]]) tombstones rows: routed, never returned. */
-  def search(graph: DataFrame, queries: DataFrame, k: Int, efQuery: Int,
-             queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
+  /** The serve path of [[search]], [[searchMulti]] and [[searchBq]]:
+    * collect the bounded query batch (IVF's probe-resolve contract),
+    * restore each shard graph ONCE inside its task, and run `emit` there
+    * with the tombstone filter — a `deleted` column (from [[markDeleted]])
+    * routes but is never returned. The graphs never leave their tasks. */
+  private def serveShards[T <: Product : TypeTag](graph: DataFrame, queries: DataFrame,
+      queryId: String, queryVec: String)(
+      emit: (NswGraph, Int => Boolean, Array[(Long, Array[Float])]) => Iterator[T])
+      : Dataset[T] = {
     import graph.sparkSession.implicits._
     val qs: Array[(Long, Array[Float])] = queries
       .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val ef = math.max(1, efQuery)
     val delCol =
       if (graph.columns.contains("deleted")) col("deleted") else lit(false)
-    val scored = graph
+    graph
       .select(col("shard"), col("local_idx"), col("vec_id"), col("embedding"),
         col("neighbor_idx"), delCol.as("deleted"))
-      .as[(Int, Int, Long, Array[Float], Array[Int], Boolean)]
+      .as[ShardRow]
       // shards are whole within a hash partition; a partition may hold
       // several, so restore each shard's graph separately
       .repartition(col("shard"))
       .mapPartitions { rows =>
-        val byShard = rows.toArray.groupBy(_._1)
-        byShard.iterator.flatMap { case (_, shardRows) =>
-          // adjacency arrives as persisted LOCAL indices: restore is one
-          // array placement per row — no sort, no id→index map (the cost
-          // the pre-r11 global-id layout paid per query batch)
-          val n = shardRows.length
-          val g = new NswGraph(1, 1) // container only; adjacency is restored
-          val ids = new Array[Long](n)
-          val vecs = new Array[Array[Float]](n)
-          val adjs = new Array[Array[Int]](n)
-          val dels = new Array[Boolean](n)
-          shardRows.foreach { case (_, li, id, vec, nbs, del) =>
-            ids(li) = id; vecs(li) = vec; adjs(li) = nbs; dels(li) = del
-          }
-          var i = 0
-          while (i < n) {
-            g.ids += ids(i); g.vecs += vecs(i)
-            g.adj += (new mutable.ArrayBuffer[Int](adjs(i).length) ++= adjs(i))
-            i += 1
-          }
-          val anyDeleted = dels.exists(identity)
-          val allowed: Int => Boolean =
-            if (anyDeleted) (i: Int) => !dels(i) else (_: Int) => true
-          qs.iterator.flatMap { case (qid, qvec) =>
-            g.searchBeam(qvec, ef, allowed).take(k).map { case (d, i) =>
-              (qid, g.ids(i), roundHalfUp4(d))
-            }
-          }
+        rows.toArray.groupBy(_._1).iterator.flatMap { case (_, shardRows) =>
+          val dead = mutable.BitSet.fromSpecific(shardRows.iterator.filter(_._6).map(_._2))
+          val allowed: Int => Boolean = if (dead.isEmpty) _ => true else i => !dead(i)
+          emit(new NswGraph(shardRows), allowed, qs)
         }
       }
-      .toDF("query_id", "match_id", "score")
+  }
+
+  /** Search every shard graph for the broadcast query batch and merge
+    * per-shard top-k globally. efQuery is the reference's ef knob
+    * (`executor.py:66-70`): beam width per shard, recall-vs-cost. */
+  def search(graph: DataFrame, queries: DataFrame, k: Int, efQuery: Int,
+             queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
+    val scored = serveShards(graph, queries, queryId, queryVec)(
+      beamTopK(_, _, _, k, math.max(1, efQuery))).toDF("query_id", "match_id", "score")
     KnnTopK.boundedTopK(scored, k, asc = true)
   }
+
+  /** Every query's per-shard top-k at beam width `ef`: (query, match, score). */
+  private def beamTopK(g: NswGraph, allowed: Int => Boolean,
+      qs: Array[(Long, Array[Float])], k: Int, ef: Int): Iterator[(Long, Long, Double)] =
+    qs.iterator.flatMap { case (qid, qvec) =>
+      g.searchBeam(qvec, ef, allowed).take(k).map { case (d, i) =>
+        (qid, g.ids(i), roundHalfUp4(d))
+      }
+    }
 
   /** [[search]] at SEVERAL beam widths in ONE pass over the graph — the
     * ef-sweep shape ([[KnnIvf.searchPrunedMulti]]'s precedent for the
@@ -524,49 +526,11 @@ object KnnHnsw {
   def searchMulti(graph: DataFrame, queries: DataFrame, k: Int,
                   efQueries: Seq[Int], queryId: String = "query_id",
                   queryVec: String = "query_vec"): DataFrame = {
-    import graph.sparkSession.implicits._
-    val qs: Array[(Long, Array[Float])] = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
     val efs = efQueries.map(e => math.max(1, e))
-    val delCol =
-      if (graph.columns.contains("deleted")) col("deleted") else lit(false)
-    val scored = graph
-      .select(col("shard"), col("local_idx"), col("vec_id"), col("embedding"),
-        col("neighbor_idx"), delCol.as("deleted"))
-      .as[(Int, Int, Long, Array[Float], Array[Int], Boolean)]
-      .repartition(col("shard"))
-      .mapPartitions { rows =>
-        val byShard = rows.toArray.groupBy(_._1)
-        byShard.iterator.flatMap { case (_, shardRows) =>
-          val n = shardRows.length
-          val g = new NswGraph(1, 1) // container only; adjacency is restored
-          val ids = new Array[Long](n)
-          val vecs = new Array[Array[Float]](n)
-          val adjs = new Array[Array[Int]](n)
-          val dels = new Array[Boolean](n)
-          shardRows.foreach { case (_, li, id, vec, nbs, del) =>
-            ids(li) = id; vecs(li) = vec; adjs(li) = nbs; dels(li) = del
-          }
-          var i = 0
-          while (i < n) {
-            g.ids += ids(i); g.vecs += vecs(i)
-            g.adj += (new mutable.ArrayBuffer[Int](adjs(i).length) ++= adjs(i))
-            i += 1
-          }
-          val anyDeleted = dels.exists(identity)
-          val allowed: Int => Boolean =
-            if (anyDeleted) (i: Int) => !dels(i) else (_: Int) => true
-          efs.iterator.flatMap { ef =>
-            qs.iterator.flatMap { case (qid, qvec) =>
-              g.searchBeam(qvec, ef, allowed).take(k).map { case (d, i) =>
-                (ef.toLong, qid, g.ids(i), roundHalfUp4(d))
-              }
-            }
-          }
-        }
-      }
-      .toDF("ef", "query_id", "match_id", "score")
+    val scored = serveShards(graph, queries, queryId, queryVec) { (g, allowed, qs) =>
+      efs.iterator.flatMap(ef => beamTopK(g, allowed, qs, k, ef)
+        .map { case (qid, id, score) => (ef.toLong, qid, id, score) })
+    }.toDF("ef", "query_id", "match_id", "score")
     KnnTopK.boundedTopK(scored, k, asc = true, extraKeys = Seq("ef"))
   }
 
@@ -588,13 +552,7 @@ object KnnHnsw {
     * @param efQuery beam width AND rerank pool size per shard */
   def searchBq(graph: DataFrame, queries: DataFrame, k: Int, efQuery: Int,
                queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
-    import graph.sparkSession.implicits._
-    val qs: Array[(Long, Array[Float])] = queries
-      .select(col(queryId).cast("long"), col(queryVec).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
     val ef = math.max(1, efQuery)
-    val delCol =
-      if (graph.columns.contains("deleted")) col("deleted") else lit(false)
     def pack(v: Array[Float]): Array[Long] = {
       val words = new Array[Long]((v.length + 63) >>> 6)
       var i = 0
@@ -604,56 +562,27 @@ object KnnHnsw {
       }
       words
     }
-    val packedQs = qs.map { case (qid, qv) => (qid, qv, pack(qv)) }
-    val scored = graph
-      .select(col("shard"), col("local_idx"), col("vec_id"), col("embedding"),
-        col("neighbor_idx"), delCol.as("deleted"))
-      .as[(Int, Int, Long, Array[Float], Array[Int], Boolean)]
-      .repartition(col("shard"))
-      .mapPartitions { rows =>
-        val byShard = rows.toArray.groupBy(_._1)
-        byShard.iterator.flatMap { case (_, shardRows) =>
-          val n = shardRows.length
-          val g = new NswGraph(1, 1)
-          val ids = new Array[Long](n)
-          val vecs = new Array[Array[Float]](n)
-          val adjs = new Array[Array[Int]](n)
-          val dels = new Array[Boolean](n)
-          shardRows.foreach { case (_, li, id, vec, nbs, del) =>
-            ids(li) = id; vecs(li) = vec; adjs(li) = nbs; dels(li) = del
+    val scored = serveShards(graph, queries, queryId, queryVec) { (g, allowed, qs) =>
+      val codes = g.vecs.map(pack)
+      qs.iterator.flatMap { case (qid, qvec) =>
+        val qcode = pack(qvec)
+        def hamming(j: Int): Double = {
+          val c = codes(j)
+          var w = 0; var h = 0
+          while (w < c.length) {
+            h += java.lang.Long.bitCount(qcode(w) ^ c(w)); w += 1
           }
-          var i = 0
-          while (i < n) {
-            g.ids += ids(i); g.vecs += vecs(i)
-            g.adj += (new mutable.ArrayBuffer[Int](adjs(i).length) ++= adjs(i))
-            i += 1
-          }
-          val codes = new Array[Array[Long]](n)
-          i = 0
-          while (i < n) { codes(i) = pack(vecs(i)); i += 1 }
-          val anyDeleted = dels.exists(identity)
-          val allowed: Int => Boolean =
-            if (anyDeleted) (j: Int) => !dels(j) else (_: Int) => true
-          packedQs.iterator.flatMap { case (qid, qvec, qcode) =>
-            def hamming(j: Int): Double = {
-              val c = codes(j)
-              var w = 0; var h = 0
-              while (w < c.length) {
-                h += java.lang.Long.bitCount(qcode(w) ^ c(w)); w += 1
-              }
-              h.toDouble
-            }
-            val pool = g.searchBeamWith(hamming, ef, allowed)
-            // exact-cosine rerank of the Hamming-routed pool, id tiebreak
-            pool.map { case (_, j) => (cosineDist(qvec, vecs(j)), j) }
-              .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-                .on[(Double, Int)] { case (d, j) => (d, g.ids(j)) })
-              .take(k)
-              .map { case (d, j) => (qid, g.ids(j), roundHalfUp4(d)) }
-          }
+          h.toDouble
         }
+        val pool = g.searchBeamWith(hamming, ef, allowed)
+        // exact-cosine rerank of the Hamming-routed pool, id tiebreak
+        pool.map { case (_, j) => (cosineDist(qvec, g.vecs(j)), j) }
+          .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+            .on[(Double, Int)] { case (d, j) => (d, g.ids(j)) })
+          .take(k)
+          .map { case (d, j) => (qid, g.ids(j), roundHalfUp4(d)) }
       }
-      .toDF("query_id", "match_id", "score")
+    }.toDF("query_id", "match_id", "score")
     KnnTopK.boundedTopK(scored, k, asc = true)
   }
 }

@@ -83,18 +83,23 @@ class KnnHnswSpec extends SparkSuite {
 
   test("searchMulti per-ef rows equal search at that ef (the sweep-sharing contract)") {
     val efs = Seq(4, 8, 16, 32, 64)
-    val multi = KnnHnsw.searchMulti(graph, queries, k = 5, efs)
-      .select(col("ef"), col("query_id"), col("match_id"), col("score"), col("rank"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4)))
-      .toSet
-    val single = efs.flatMap { ef =>
-      KnnHnsw.search(graph, queries, k = 5, efQuery = ef)
+    // a tombstoned graph pins the shared `allowed` filter for the sweep too
+    val marked = KnnHnsw.markDeleted(graph,
+      corpus.select(col("vec_id")).filter(col("vec_id") % 3 === 0))
+    Seq("plain" -> graph, "tombstoned" -> marked).foreach { case (label, g) =>
+      val multi = KnnHnsw.searchMulti(g, queries, k = 5, efs)
+        .select(col("ef"), col("query_id"), col("match_id"), col("score"), col("rank"))
         .collect()
-        .map(r => (ef.toLong, r.getAs[Long]("query_id"), r.getAs[Long]("match_id"),
-          r.getAs[Double]("score"), r.getAs[Long]("rank")))
-    }.toSet
-    assert(multi === single)
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4)))
+        .toSet
+      val single = efs.flatMap { ef =>
+        KnnHnsw.search(g, queries, k = 5, efQuery = ef)
+          .collect()
+          .map(r => (ef.toLong, r.getAs[Long]("query_id"), r.getAs[Long]("match_id"),
+            r.getAs[Double]("score"), r.getAs[Long]("rank")))
+      }.toSet
+      assert(multi === single, label)
+    }
   }
 
   test("bq beam: exhaustive pool reranks to exactly the exact top-k (ids AND scores)") {
@@ -212,6 +217,45 @@ class KnnHnswSpec extends SparkSuite {
       corpus.filter(col("vec_id") % 5 === 0), numShards = 4)
     assert(structureOf(KnnHnsw.load(spark, path)) ===
       structureOf(KnnHnsw.build(corpus, numShards = 4)))
+  }
+
+  test("upsert into a tombstoned graph keeps survivor flags and revives upserted ids") {
+    import graft.operators.Versioned
+    val tmp = java.nio.file.Files.createTempDirectory("graft_hnsw_upsert_dead").toString
+    val n = corpus.count().toInt
+    val deleted = corpus.select(col("vec_id")).filter(col("vec_id") % 5 === 0)
+    // re-upsert half of the tombstoned ids; the other half stay dead
+    val revived = corpus.filter(col("vec_id") % 10 === 0)
+    val inPlace = s"$tmp/in_place"
+    KnnHnsw.save(KnnHnsw.markDeleted(KnnHnsw.build(corpus, numShards = 4), deleted), inPlace)
+    KnnHnsw.appendTo(spark, inPlace, revived, numShards = 4)
+    val versioned = s"$tmp/versioned"
+    KnnHnsw.saveVersioned(KnnHnsw.build(corpus, numShards = 4), versioned, 4)
+    KnnHnsw.markDeletedVersioned(spark, versioned, deleted)
+    KnnHnsw.appendToVersioned(spark, versioned, revived, numShards = 4)
+    val exactLive = KnnTopK.knnExact(queries,
+        corpus.filter(col("vec_id") % 10 =!= 5), k = 5)
+      .select("query_id", "match_id", "score").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    Seq("appendTo" -> KnnHnsw.load(spark, inPlace),
+        "appendToVersioned" -> KnnHnsw.loadVersioned(spark, versioned))
+      .foreach { case (label, g) =>
+        val flags = g.collect()
+          .map(r => (r.getAs[Int]("shard"), r.getAs[Long]("vec_id"), r.getAs[Boolean]("deleted")))
+        val touched = flags.filter(_._2 % 10 == 0).map(_._1).toSet
+        val dead = flags.filter(_._2 % 10 == 5)
+        // the batch rebuilt shards that hold still-tombstoned survivors ...
+        assert(dead.exists(d => touched.contains(d._1)), label)
+        // ... and those survivors kept their flag through the rebuild
+        assert(dead.forall(_._3), label)
+        assert(flags.filter(_._2 % 10 == 0).forall(!_._3), s"$label: upsert revives")
+        assert(flags.count(!_._3) === flags.count(_._2 % 10 != 5), label)
+        val got = KnnHnsw.search(g, queries, k = 5, efQuery = n)
+          .select("query_id", "match_id", "score").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        assert(got === exactLive, label)
+      }
+    assert(Versioned.versions(spark, versioned) === Seq(0, 1, 2))
   }
 
   test("save/load round-trips the graph and searches identically") {

@@ -59,7 +59,6 @@ cal.extend(d.get("calibration", []))
 # coverage: a query present only in the base sweep (or only in the
 # final sweeps) means a dropped/added row — surface it, never shrink
 # the record silently
-diff = set(merged) ^ set(d["queries"])
 extra_final = set(merged) - set(d["queries"])
 missing_final = set(d["queries"]) - set(merged)
 assert not missing_final, f"queries missing from final sweeps: {sorted(missing_final)}"
