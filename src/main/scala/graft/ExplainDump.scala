@@ -1,12 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Builder-side plan dumper: write `.explain("formatted")` for named
   * [[SparkEntry.queries]] entries to files — args(0) = comma-separated
   * query names (or `all`), args(1) = output directory, one
   * `<name>.txt` per query. The fixture dir comes from
-  * SPARK_GRAFT_SF_DIR; the session mirrors Bench's config so the plan
-  * dumped is the plan benched (same AQE/shuffle-partition settings).
+  * SPARK_GRAFT_SF_DIR; the session is Bench's own [[LocalSession]], so
+  * the plan dumped is the plan benched.
   * Plans are captured WITHOUT executing the query, so session-state
   * builders (IVF/HNSW indexes, sorted layouts) are built only where a
   * query function itself materializes them on construction. */
@@ -19,16 +18,7 @@ object ExplainDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val names: Seq[String] =
       if (args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").toSeq

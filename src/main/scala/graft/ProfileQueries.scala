@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Builder-side profiler: time a named subset of [[SparkEntry.queries]]
   * — args(0) = comma-separated query names, args(1) = optional repeat
@@ -14,18 +13,7 @@ object ProfileQueries {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = args(0).split(",").toSeq
     val repeats = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // config experiments ride env overrides so A/B runs need no rebuild
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import org.apache.spark.sql.functions.{sum => fsum, col => fcol}
     def calibrate(): Double = {
       val t0 = System.nanoTime()

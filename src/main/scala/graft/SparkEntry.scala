@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
+
+import org.apache.hadoop.fs.FileUtil
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1165,7 +1170,7 @@ object SparkEntry {
     // side table (O(marks) append, no cell directory touched), load
     // anti-joins it out so EVERY serve composition excludes deleted ids,
     // and compact folds the tombstones into touched-cell rewrites. The
-    // gate serves BOTH states of a once-per-JVM mutated quarter-corpus
+    // gate serves BOTH states of a once-mutated quarter-corpus
     // index pair — tombstone-served and compacted — at full probe and
     // pins both equal to the exact top-k over the live slice (floor 1.0),
     // plus a zero-leak check on the tombstoned serve. Any surviving
@@ -1210,7 +1215,7 @@ object SparkEntry {
     // and appended under only their touched cell directories
     // (IndexStream.indexEachBatch). Cell assignment is a pure per-row
     // function of the FIXED model, so stream==batch is EXACT, and the
-    // gate pins it twice on a once-per-JVM built twin pair: (a) the
+    // gate pins it twice on a once-built twin pair: (a) the
     // streamed index's (vec_id, cell) corpus EQUALS the single-call
     // batch-append twin's, and (b) the streamed index served at full
     // probe EQUALS the exact top-k over base ∪ delta (floor 1.0) — a
@@ -1261,8 +1266,8 @@ object SparkEntry {
     // versioned table's commit discipline (the one place the in-place
     // flavor keeps the reference's single-writer /dump semantics,
     // executor.py:227-236: two concurrent appends could tear the saved
-    // cell directories). The fixture stages the full race matrix once
-    // per JVM: two REAL racing threads append file-disjoint cell ranges
+    // cell directories). The fixture stages the full race matrix
+    // once: two REAL racing threads append file-disjoint cell ranges
     // (both MUST land via commit rebase, whatever the interleave), a
     // stale-base overlap replay MUST refuse typed, compact lands as a
     // commit, and an append pinned to the pre-compact snapshot MUST
@@ -1942,7 +1947,7 @@ object SparkEntry {
     // two-pipeline composition row: the near-dup components are the
     // INPUT (their pipeline keeps honest timing as dedup_components);
     // this row's value is the leakage-safe KEY choice, so the component
-    // frame pins once per (context, dir) under the composition-row
+    // frame pins once under the composition-row
     // policy (pipeline_clean/dedup_span_clean precedent) and the split
     // rule runs live per call
     "split_leakage_safe" -> ((s, dir) =>
@@ -2669,7 +2674,7 @@ object SparkEntry {
     "text_bpe_merges" -> ((s, dir) =>
       Bpe.learnMerges(Tables.documents(s, dir), 6)),
     // encode the corpus with the LEARNED tokenizer: segment every word
-    // with the 6 merges (learned once per (JVM, fixture) — the
+    // with the 6 merges (learned once — the
     // build-once/serve-many lifecycle the index family uses) and emit
     // the freq-weighted token table; the oracle extends the merge
     // chain one application further and re-counts
@@ -3398,7 +3403,7 @@ object SparkEntry {
     // leaves), compact, and pin BOTH content identity (exceptAll both
     // ways == 0) and the file-count collapse in one in-plan gate
     "maintenance_compact" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_compact/${artifactKey(dir)}"
+      val path = artifactDir(s, "compact", dir)
       // corpus-independent contract (identity + collapse), so a fifth of
       // the corpus carries it — the fragment/compact/double-scan cycle
       // runs per bench iteration and its cost is file-count-shaped
@@ -3445,14 +3450,14 @@ object SparkEntry {
     //     oracle sees the logical rows straight from parquet, so any
     //     quoting/escaping/trimming loss hash-diverges ---
     "source_jsonl" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl/${artifactKey(dir)}"
+      val path = artifactDir(s, "jsonl", dir)
       TextSources.jsonlRoundTrip(docsWithHostileText(s, dir), path)
         .select(col("doc_id"), col("lang"),
           length(col("text")).cast("long").as("text_chars"),
           md5(col("text")).as("text_md5"))
     }),
     "source_csv" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_csv/${artifactKey(dir)}"
+      val path = artifactDir(s, "csv", dir)
       TextSources.csvRoundTrip(docsWithHostileText(s, dir), path)
         .select(col("doc_id"), col("lang"),
           length(col("text")).cast("long").as("text_chars"),
@@ -3536,15 +3541,64 @@ object SparkEntry {
     ).toDF("doc_id", "lang", "text"))
   }
 
-  /** Build + persist the IVF index once per (JVM, fixture dir); query
-    * paths then pay load + probe only — mirroring the reference's
-    * build-once/serve-many lifecycle (executor.py:51-57). Index lands
-    * under java.io.tmpdir, keyed by the fixture dir. */
   /** Fixture dir → filesystem-safe artifact key. Must NOT start with
     * '_' or '.': Spark's file index treats such basenames as metadata
     * and skips them ("All paths were ignored"). */
   private def artifactKey(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^[_.]+", "")
+
+  /** Session artifacts — built indexes, trained models, pinned frames,
+    * versioned tables — keyed by (application, name, fixture dir). */
+  private val artifacts = new ConcurrentHashMap[(String, String, String), FutureTask[Any]]()
+  private val appRoots = new ConcurrentHashMap[String, String]()
+
+  /** The artifact directory `<tmpdir>/graft_<applicationId>_<suffix>/<name>/<dir key>`
+    * (not created). Each application's root is made once, by the first
+    * call, as a fresh temp directory, so two JVMs on one host never share
+    * a path even when their application ids match; a listener registered
+    * with it deletes the root and evicts the application's [[memo]]
+    * entries when the SparkContext stops. */
+  private[graft] def artifactDir(s: SparkSession, name: String, dir: String): String = {
+    val app = s.sparkContext.applicationId
+    val root = appRoots.computeIfAbsent(app, _ => {
+      val made = Files.createTempDirectory(
+        Paths.get(System.getProperty("java.io.tmpdir")), s"graft_${app}_").toString
+      s.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+          artifacts.keySet.removeIf(_._1 == app)
+          appRoots.remove(app, made)
+          FileUtil.fullyDelete(new java.io.File(made))
+        }
+      })
+      made
+    })
+    s"$root/$name/${artifactKey(dir)}"
+  }
+
+  /** Build-once session artifact: `build` runs once per (application,
+    * name, dir) and every later call — from any thread, any session of
+    * the same SparkContext — serves its value until the context stops.
+    * Concurrent callers of a missing key wait for the one build instead
+    * of racing their own; the build runs outside the map's lock, so a
+    * build may call other memos. A build that throws is not cached: its
+    * waiters see the failure and the next call builds again. `build`
+    * receives its [[artifactDir]], emptied first so a retried build
+    * never sees a failed one's files. */
+  private[graft] def memo[T](s: SparkSession, name: String, dir: String)
+                            (build: String => T): T = {
+    val path = artifactDir(s, name, dir)
+    val key = (s.sparkContext.applicationId, name, dir)
+    val task = artifacts.computeIfAbsent(key, _ => new FutureTask[Any](() => {
+      FileUtil.fullyDelete(new java.io.File(path))
+      build(path)
+    }))
+    task.run()
+    try task.get().asInstanceOf[T]
+    catch { case e: ExecutionException =>
+      artifacts.remove(key, task)
+      throw e.getCause
+    }
+  }
 
   private val qualityFeatureCols =
     Seq("len_score", "punct_ratio", "stopword_ratio", "repetition_ratio")
@@ -3558,199 +3612,167 @@ object SparkEntry {
         (col("lang") === "en").cast("double").as("__y")), "doc_id")
   }
 
-  /** Trained-then-6dp-rounded quality model, memoized per (JVM, fixture
-    * dir) — the eval row serves from a trained model the way the ANN
+  /** Trained-then-6dp-rounded quality model, memoized — the eval row serves
+    * from a trained model the way the ANN
     * rows serve from a built index; `quality_train_logistic` itself
     * always re-trains (it IS the training operator under test). */
-  private val qualityModelTrained =
-    scala.collection.concurrent.TrieMap.empty[String, Scoring.LinearModel]
   private def trainedQualityModel(s: SparkSession, dir: String): Scoring.LinearModel =
-    qualityModelTrained.getOrElseUpdate(dir,
+    memo(s, "quality_model", dir) { _ =>
       Scoring.roundedModel(Scoring.trainLogistic(
-        qualityLabeledFeatures(s, dir), "__y", qualityFeatureCols)))
+        qualityLabeledFeatures(s, dir), "__y", qualityFeatureCols)) }
 
-  /** Learned BPE merges, memoized per (JVM, fixture dir) — the encode
+  /** Learned BPE merges, memoized — the encode
     * row serves from the trained tokenizer the way the ANN rows serve
     * from a built index; `text_bpe_merges` itself always re-learns
     * (it IS the training operator under test). */
-  private val bpeLearned =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
   private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeLearned.getOrElseUpdate(dir,
+    memo(s, "bpe_merges", dir) { _ =>
       Bpe.learnMerges(Tables.documents(s, dir), 6).orderBy("t").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq)
+        .map(r => (r.getString(1), r.getString(2))).toSeq }
 
   /** Both BPE trainings (recount twin + delta-maintained) at t=32 over
-    * a 5% corpus slice, memoized per (SparkContext, dir) — the
+    * a 5% corpus slice, memoized — the
     * `text_bpe_delta_agreement` fixture. The slice bounds the 64 total
     * merge rounds to vocabulary-of-a-slice size; the CONTRACT
     * (delta == recount merge-for-merge) is corpus-independent. At
     * sf0.01 the slice still learns the full 32 merges (minCount-
     * guarded in the gate row). localCheckpoint pins both tables so the
     * per-sweep agreement join reads materialized frames. */
-  private val bpeDeltaBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (DataFrame, DataFrame)]
   private def bpeDeltaTables(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeDeltaBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "bpe_delta", dir) { _ =>
       val slice = Tables.documents(s, dir)
         .filter(col("doc_id") % 20 === 0).select("doc_id", "text")
       (Bpe.learnMerges(slice, 32).localCheckpoint(true),
         Bpe.learnMergesDelta(slice, 32).localCheckpoint(true))
-    })
+    }
 
-  /** SemDeDup's fitted cluster assignment, pinned once per (context,
-    * fixture dir): the KMeans fit is BUILD state exactly like
+  /** SemDeDup's fitted cluster assignment, pinned once: the KMeans fit is
+    * BUILD state exactly like
     * [[ivfIndexPath]]'s index (same model family, same lifecycle), and
     * refitting it on every flagship invocation timed the fit four times
     * under the bench's four-window protocol while the SERVE half — pair
     * generation, component closure, keep-the-outlier rule, the part
     * that IS the operator — still executes in full on every call. Same
     * params/seed as before, so the selection is bit-identical. */
-  private val semdedupFitted =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), KnnIvf.IvfIndex]
   private def semdedupIdx(s: SparkSession, dir: String): KnnIvf.IvfIndex =
-    semdedupFitted.getOrElseUpdate(
-      (System.identityHashCode(s.sparkContext), dir), {
-        val idx = Dedup.semdedupFit(embWithDupes(s, dir), numClusters = 16)
-        idx.copy(corpusWithCell = idx.corpusWithCell.localCheckpoint(true))
-      })
+    memo(s, "semdedup_fit", dir) { _ =>
+      val idx = Dedup.semdedupFit(embWithDupes(s, dir), numClusters = 16)
+      idx.copy(corpusWithCell = idx.corpusWithCell.localCheckpoint(true))
+    }
 
-  private val ivfBuilt = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Build + persist the IVF index once; query paths then pay load +
+    * probe only — mirroring the reference's build-once/serve-many
+    * lifecycle (executor.py:51-57). */
   private def ivfIndexPath(s: SparkSession, dir: String): String =
-    ivfBuilt.getOrElseUpdate(dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf/${artifactKey(dir)}"
+    memo(s, "ivf", dir) { path =>
       KnnIvf.save(KnnIvf.build(Tables.embeddings(s, dir), numCells = 16), path)
       path
-    })
+    }
 
-  /** The loaded flagship IVF index, memoized per (context, dir) for the
+  /** The loaded flagship IVF index, memoized for the
     * gate/composition rows: [[KnnIvf.load]] re-reads the KMeansModel
     * (a driver-side Spark-ML parquet load) on every call, pure restore
     * overhead a serving system pays once. The corpus side stays the
     * LAZY partition-pruned scan — no checkpoint, so every probe still
     * reads only its cells' directories (PartitionFilters spec intact).
     * The flagship `ann_ivf` row keeps its honest fresh restore. */
-  private val ivfLoadedShared =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), KnnIvf.IvfIndex]
   private def ivfIndexLoaded(s: SparkSession, dir: String): KnnIvf.IvfIndex =
-    ivfLoadedShared.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir),
-      KnnIvf.load(s, ivfIndexPath(s, dir)))
+    memo(s, "ivf_loaded", dir) { _ => KnnIvf.load(s, ivfIndexPath(s, dir)) }
 
-  /** The loaded flagship NSW graph, pinned in memory per (context, dir)
+  /** The loaded flagship NSW graph, pinned in memory
     * for the gate rows — the reference serves its graph from process
     * RAM (hnswlib mmap, executor.py:51-57), and the stream-ingest/
     * build-sweep gates already hold theirs pinned. The flagship
     * `ann_hnsw` row keeps its honest load+search. */
-  private val hnswLoadedShared =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
   private def hnswGraphLoaded(s: SparkSession, dir: String): DataFrame =
-    hnswLoadedShared.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir),
-      KnnHnsw.load(s, hnswIndexPath(s, dir)).localCheckpoint(true))
+    memo(s, "hnsw_loaded", dir) { _ =>
+      KnnHnsw.load(s, hnswIndexPath(s, dir)).localCheckpoint(true) }
 
-  /** BM25 inverted index built + persisted once per (JVM, fixture dir) —
+  /** BM25 inverted index built + persisted once —
     * the TEXT retrieval build/serve split, same lifecycle as
     * [[ivfIndexPath]]: queries pay only pruned postings reads. */
-  private val bm25Built = scala.collection.concurrent.TrieMap.empty[String, String]
   private def bm25IndexPath(s: SparkSession, dir: String): String =
-    bm25Built.getOrElseUpdate(dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_bm25/${artifactKey(dir)}"
+    memo(s, "bm25", dir) { path =>
       Retrieval.buildBm25Index(
         Tables.documents(s, dir).select(col("doc_id"), col("text")),
         path, numBuckets = 32)
       path
-    })
+    }
 
   /** BM25 index built on the even-id half then APPENDED with the odd-id
-    * half — once per (JVM, fixture dir), the stream-ingest gates' memo
+    * half — once, the stream-ingest gates' memo
     * pattern: the append runs once, the serving contract (appended index
     * == full-corpus scan) is re-gated on every call. */
-  private val bm25AppendBuilt = scala.collection.concurrent.TrieMap.empty[String, String]
   private def bm25AppendedIndexPath(s: SparkSession, dir: String): String =
-    bm25AppendBuilt.getOrElseUpdate(dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_app/${artifactKey(dir)}"
+    memo(s, "bm25_app", dir) { path =>
       val corpus = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       Retrieval.buildBm25Index(corpus.filter(col("doc_id") % 2 === 0), path, numBuckets = 32)
       Retrieval.appendToBm25Index(corpus.filter(col("doc_id") % 2 =!= 0), path)
       path
-    })
+    }
 
-  /** Sharded-NSW graph built + persisted once per fixture dir (the
+  /** Sharded-NSW graph built + persisted once (the
     * build-once/serve-many split of [[ivfIndexPath]]); queries load the
     * shard-partitioned parquet fresh each time. */
-  private val hnswBuilt = scala.collection.concurrent.TrieMap.empty[String, String]
   private def hnswIndexPath(s: SparkSession, dir: String): String =
-    hnswBuilt.getOrElseUpdate(dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw/${artifactKey(dir)}"
+    memo(s, "hnsw", dir) { path =>
       KnnHnsw.save(KnnHnsw.build(Tables.embeddings(s, dir), numShards = 4), path)
       path
-    })
+    }
 
   /** The three graphs of the BUILD-knob sweep (m ∈ {4, 8, 16} at fixed
-    * efConstruction/efQuery), half corpus, built once per JVM: the one
+    * efConstruction/efQuery), half corpus, built once: the one
     * reference build knob without a driver-visible curve was M
     * (executor.py:24 defaults M=16; KnnHnsw.build defaults m=8 for
     * bounded shards). Half slice: the knob's shape is structural, and
     * three full builds per window would triple the flagship's build
     * cost for no extra signal. The m=8 point is the shared
     * [[hnswHalfDefaultGraph]], not a fresh build. */
-  private val hnswBuildSweepBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), Map[Int, DataFrame]]
   private def hnswBuildSweepGraphs(s: SparkSession, dir: String): Map[Int, DataFrame] =
-    hnswBuildSweepBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "hnsw_m_sweep", dir) { root =>
       val half = Tables.embeddings(s, dir).filter(col("vec_id") % 2 === 0)
       Seq(4, 16).map { m =>
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_m$m/${artifactKey(dir)}"
+        val path = s"$root/m$m"
         KnnHnsw.save(KnnHnsw.build(half, numShards = 4, m = m), path)
         // serve from the persisted-then-loaded frame, pinned: fresh
         // parquet loads per window would dominate the row's time
         m -> KnnHnsw.load(s, path).localCheckpoint(true)
       }.toMap + (8 -> hnswHalfDefaultGraph(s, dir))
-    })
+    }
 
   /** The SHARED (m=8, efConstruction=64) half-corpus graph — the point
     * both build-knob sweeps pass through (the m sweep's middle degree,
-    * the efC sweep's middle beam). Built + persisted ONCE per (JVM,
-    * fixture dir) and served pinned to both, so the bench pays five
+    * the efC sweep's middle beam). Built + persisted ONCE and served pinned
+    * to both, so the bench pays five
     * half-corpus builds, not six. */
-  private val hnswHalfDefaultBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), DataFrame]
   private def hnswHalfDefaultGraph(s: SparkSession, dir: String): DataFrame =
-    hnswHalfDefaultBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "hnsw_m8", dir) { path =>
       val half = Tables.embeddings(s, dir).filter(col("vec_id") % 2 === 0)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_m8/${artifactKey(dir)}"
       KnnHnsw.save(KnnHnsw.build(half, numShards = 4), path)
       KnnHnsw.load(s, path).localCheckpoint(true)
-    })
+    }
 
-  /** Quarter-corpus graph for the tombstone gate (built once per JVM,
+  /** Quarter-corpus graph for the tombstone gate (built once,
     * the [[hnswIndexPath]] policy): the gate's contracts — tombstones
     * route but never surface; exhaustive filtered beam == exact live
     * top-k — are corpus-independent, while their cost (ef = n beam +
     * exact twin) scales with n. The flagship rows keep the full index. */
-  private val hnswGateBuilt = scala.collection.concurrent.TrieMap.empty[String, String]
   private def hnswGateIndexPath(s: SparkSession, dir: String): String =
-    hnswGateBuilt.getOrElseUpdate(dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_gate/${artifactKey(dir)}"
+    memo(s, "hnsw_gate", dir) { path =>
       KnnHnsw.save(KnnHnsw.build(
         Tables.embeddings(s, dir).filter(col("vec_id") % 4 === 0), numShards = 4), path)
       path
-    })
+    }
 
   /** Quarter-corpus IVF indexes for the deletion-lifecycle gate, built +
-    * mutated ONCE per JVM (the [[hnswGateIndexPath]] policy — the gate's
+    * mutated ONCE (the [[hnswGateIndexPath]] policy — the gate's
     * contracts are corpus-independent; only their cost scales with n):
     * two identical saves of the same built index, a third of the slice
     * tombstoned into BOTH, and one of them compacted. The gate row then
     * only reads + compares — re-running it never re-mutates, so the
-    * bench's repeated sweeps time the serve path, not the mutation.
-    * Cross-JVM reruns are safe: [[KnnIvf.save]] fully overwrites the
-    * corpus, and stale tombstone marks from a prior JVM name the same
-    * deterministic id slice the fresh marks do. */
-  private val ivfDeleteGateBuilt =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+    * bench's repeated sweeps time the serve path, not the mutation. */
   private def ivfDeleteGatePaths(s: SparkSession, dir: String): (String, String) =
-    ivfDeleteGateBuilt.getOrElseUpdate(dir, {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_gate/${artifactKey(dir)}"
+    memo(s, "ivf_gate", dir) { root =>
       val slice = Tables.embeddings(s, dir).filter(col("vec_id") % 4 === 0)
       val idx = KnnIvf.build(slice, numCells = 8)
       val tombstoned = s"$root/tombstoned"; val compacted = s"$root/compacted"
@@ -3760,30 +3782,27 @@ object SparkEntry {
       KnnIvf.markDeletedSaved(s, compacted, dels)
       KnnIvf.compact(s, compacted)
       (tombstoned, compacted)
-    })
+    }
 
-  /** Loaded-and-pinned gate index pair, once per (SparkContext, dir):
+  /** Loaded-and-pinned gate index pair, once:
     * the gate's contract is AGREEMENT between the two serve states and
     * the exact twin, not per-call restore cost (ann_ivf keeps the
     * honest load-per-serve timing), and Spark ML's KMeansModel.load is
     * multiple jobs per call — two loads per sweep was the whole cost of
     * the row. The pinned corpus frames make repeated sweeps time the
     * serve-and-compare plan itself. */
-  private val ivfDeleteGateLoaded = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (KnnIvf.IvfIndex, KnnIvf.IvfIndex)]
   private def ivfDeleteGateIndexes(s: SparkSession, dir: String)
       : (KnnIvf.IvfIndex, KnnIvf.IvfIndex) =
-    ivfDeleteGateLoaded.getOrElseUpdate(
-      (System.identityHashCode(s.sparkContext), dir), {
-        val (tombstonedPath, compactedPath) = ivfDeleteGatePaths(s, dir)
-        def pin(p: String) = {
-          val idx = KnnIvf.load(s, p)
-          idx.copy(corpusWithCell = idx.corpusWithCell.localCheckpoint(true))
-        }
-        (pin(tombstonedPath), pin(compactedPath))
-      })
+    memo(s, "ivf_gate_loaded", dir) { _ =>
+      val (tombstonedPath, compactedPath) = ivfDeleteGatePaths(s, dir)
+      def pin(p: String) = {
+        val idx = KnnIvf.load(s, p)
+        idx.copy(corpusWithCell = idx.corpusWithCell.localCheckpoint(true))
+      }
+      (pin(tombstonedPath), pin(compactedPath))
+    }
 
-  /** Stream-vs-batch ingest twin indexes, built ONCE per JVM (same memo
+  /** Stream-vs-batch ingest twin indexes, built ONCE (same memo
     * policy as [[ivfDeleteGatePaths]]): one base IVF index saved twice,
     * the delta half streamed into one copy as two genuine micro-batches
     * ([[graft.streaming.IndexStream.indexEachBatch]] — the collect feeds
@@ -3791,12 +3810,9 @@ object SparkEntry {
     * operator under test is the distributed assign-and-append itself)
     * and batch-appended into the other in one [[KnnIvf.appendTo]] call.
     * The gate row reads + compares only. */
-  private val ivfStreamIngestBuilt =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def ivfStreamIngestPaths(s: SparkSession, dir: String): (String, String) =
-    ivfStreamIngestBuilt.getOrElseUpdate(dir, {
+    memo(s, "ivf_stream", dir) { root =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_stream/${artifactKey(dir)}"
       val slice = Tables.embeddings(s, dir).filter(col("vec_id") % 4 === 0)
         .select(col("vec_id"), col("embedding"))
       val base = slice.filter(col("vec_id") % 8 === 0)
@@ -3823,21 +3839,18 @@ object SparkEntry {
         input.addData(b2.toSeq); q.processAllAvailable()
       } finally q.stop()
       (streamed, batched)
-    })
+    }
 
-  /** Graph-index stream-vs-batch twin pair, once per JVM — the
+  /** Graph-index stream-vs-batch twin pair, once — the
     * [[ivfStreamIngestPaths]] mutation for the SHARDED-NSW graph: one
     * base graph saved twice, the delta streamed into one copy as two
     * micro-batches ([[graft.streaming.IndexStream.indexEachBatchGraph]])
     * and batch-appended into the other. Per-shard build determinism
     * makes the two graphs row-for-row identical — the gate compares
     * FRAMES, so the pinned pair is all it needs. */
-  private val hnswStreamIngestBuilt =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def hnswStreamIngestPaths(s: SparkSession, dir: String): (String, String) =
-    hnswStreamIngestBuilt.getOrElseUpdate(dir, {
+    memo(s, "hnsw_stream", dir) { root =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_stream/${artifactKey(dir)}"
       val slice = Tables.embeddings(s, dir).filter(col("vec_id") % 4 === 0)
         .select(col("vec_id"), col("embedding"))
       val base = slice.filter(col("vec_id") % 8 === 0)
@@ -3862,35 +3875,29 @@ object SparkEntry {
         input.addData(b2.toSeq); q.processAllAvailable()
       } finally q.stop()
       (streamed, batched)
-    })
+    }
 
-  /** Loaded-and-pinned stream/batch graph pair per (SparkContext, dir). */
-  private val hnswStreamIngestLoaded = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (DataFrame, DataFrame)]
+  /** Loaded-and-pinned stream/batch graph pair. */
   private def hnswStreamIngestFrames(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    hnswStreamIngestLoaded.getOrElseUpdate(
-      (System.identityHashCode(s.sparkContext), dir), {
-        val (streamedPath, batchedPath) = hnswStreamIngestPaths(s, dir)
-        (KnnHnsw.load(s, streamedPath).localCheckpoint(true),
-         KnnHnsw.load(s, batchedPath).localCheckpoint(true))
-      })
+    memo(s, "hnsw_stream_loaded", dir) { _ =>
+      val (streamedPath, batchedPath) = hnswStreamIngestPaths(s, dir)
+      (KnnHnsw.load(s, streamedPath).localCheckpoint(true),
+       KnnHnsw.load(s, batchedPath).localCheckpoint(true))
+    }
 
-  /** Loaded-and-pinned twin pair, once per (SparkContext, dir) — the
+  /** Loaded-and-pinned twin pair, once — the
     * [[ivfDeleteGateIndexes]] policy for the stream-ingest gate. */
-  private val ivfStreamIngestLoaded = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (KnnIvf.IvfIndex, KnnIvf.IvfIndex)]
   private def ivfStreamIngestIndexes(s: SparkSession, dir: String)
       : (KnnIvf.IvfIndex, KnnIvf.IvfIndex) =
-    ivfStreamIngestLoaded.getOrElseUpdate(
-      (System.identityHashCode(s.sparkContext), dir), {
-        val (streamedPath, batchedPath) = ivfStreamIngestPaths(s, dir)
-        def pin(p: String) = {
-          val idx = KnnIvf.load(s, p)
-          idx.copy(corpusWithCell = idx.corpusWithCell.localCheckpoint(true))
-        }
-        (pin(streamedPath), pin(batchedPath))
-      })
+    memo(s, "ivf_stream_loaded", dir) { _ =>
+      val (streamedPath, batchedPath) = ivfStreamIngestPaths(s, dir)
+      def pin(p: String) = {
+        val idx = KnnIvf.load(s, p)
+        idx.copy(corpusWithCell = idx.corpusWithCell.localCheckpoint(true))
+      }
+      (pin(streamedPath), pin(batchedPath))
+    }
 
   /** One-time-per-session bucketed copies of orders + lineitem, co-
     * bucketed on the order key so their join needs no exchange (the
@@ -3905,7 +3912,7 @@ object SparkEntry {
     val key = bucketedSuffix(dir)
     if (!s.catalog.tableExists(s"graft_ord_$key") ||
         !s.catalog.tableExists(s"graft_li_$key")) {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_buckets/$key"
+      val base = artifactDir(s, "buckets", dir)
       Tables.table(s, dir, "orders")
         .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$base/orders").saveAsTable(s"graft_ord_$key")
@@ -3915,30 +3922,19 @@ object SparkEntry {
     }
   }
 
-  /** Range-sorted events layout, built once per (SparkContext, fixture
-    * dir) — the zone-map write half of `scale_sorted_events_range`; the
+  /** Range-sorted events layout, built once — the zone-map write half of
+    * `scale_sorted_events_range`; the
     * query entry pays only the pruned read. */
-  private val rangeSortedBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
   private def sortedEventsPath(s: SparkSession, dir: String): String =
-    rangeSortedBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_rangesorted/${artifactKey(dir)}"
+    memo(s, "rangesorted", dir) { path =>
       Scale.dumpRangeSorted(Tables.events(s, dir), path, "ts")
       path
-    })
+    }
 
   /** Versioned documents table: v0 = (doc_id, lang, n_chars), v1 = copy-
-    * on-write upsert of every 10th doc relabeled. Built once per
-    * (SparkContext, fixture dir); the dir is wiped first so stale
-    * manifests from a previous JVM can never double-commit. */
-  private val versionedBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
+    * on-write upsert of every 10th doc relabeled. Built once. */
   private def versionedDocsPath(s: SparkSession, dir: String): String =
-    versionedBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
         .repartition(8) // several files, so copy-on-write has carry-over to prove
       Versioned.init(docs, path)
@@ -3947,10 +3943,10 @@ object SparkEntry {
           lit("xx").as("lang"), (col("n_chars") * 2).as("n_chars")),
         path, "doc_id")
       path
-    })
+    }
 
-  /** Versioned table exercising LOSSLESS TYPE WIDENING, built once per
-    * (ctx, dir): v0 = even docs with cnt:int / score:float over 4
+  /** Versioned table exercising LOSSLESS TYPE WIDENING, built once: v0 =
+    * even docs with cnt:int / score:float over 4
     * files, then an odd-docs delta arriving long/double promotes the
     * committed columns (int->long, float->double), then a NARROW
     * int/float delta lands after the promotion and reads under the wide
@@ -3960,15 +3956,9 @@ object SparkEntry {
     * Spark 4 parquet cast-on-read does the conversion at scan time,
     * which is the whole 100 TB point: a year of int32 files keeps
     * serving under the bigint column). */
-  private val versionedWidenBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean, Boolean, Boolean)]
   private def versionedWidenInfo(s: SparkSession, dir: String)
       : (String, Boolean, Boolean, Boolean) =
-    versionedWidenBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_widen/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_widen", dir) { path =>
       val docs = Tables.documents(s, dir)
       Versioned.init(
         docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("lang"),
@@ -3997,10 +3987,10 @@ object SparkEntry {
         v0Schema("cnt").dataType == IntegerType &&
           v0Schema("score").dataType == FloatType,
         v0Files.subsetOf(latest.files.toSet))
-    })
+    }
 
-  /** Versioned table read ACROSS A COLUMN RENAME, built once per (ctx,
-    * dir): v0 = documents (doc_id, lang, n_chars) over 6 files, v1 =
+  /** Versioned table read ACROSS A COLUMN RENAME, built once: v0 = documents
+    * (doc_id, lang, n_chars) over 6 files, v1 =
     * `renameColumn(n_chars -> len)` — a metadata-only commit — then v2
     * appends a delta under the NEW logical name. Records the facts the
     * row pins: the rename carried every v0 file by reference (zero
@@ -4009,15 +3999,9 @@ object SparkEntry {
     * file PHYSICALLY stores the baseline name `n_chars` on disk (the
     * column-mapping invariant that lets one read schema cover files on
     * both sides of the rename). */
-  private val versionedRenameBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean, Boolean, Boolean, Boolean)]
   private def versionedRenameInfo(s: SparkSession, dir: String)
       : (String, Boolean, Boolean, Boolean, Boolean) =
-    versionedRenameBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_rename/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_rename", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       Versioned.init(docs.repartition(6), path)
       val v0Files = Versioned.snapshot(s, path).files
@@ -4037,9 +4021,9 @@ object SparkEntry {
         latestNames == Seq("doc_id", "lang", "len"),
         Versioned.snapshot(s, path, Some(0)).schema.get.fieldNames.contains("n_chars"),
         newFile.nonEmpty && s.read.parquet(newFile: _*).columns.contains("n_chars"))
-    })
+    }
 
-  /** Merge-on-read delete lifecycle, built once per (ctx, dir): v0 =
+  /** Merge-on-read delete lifecycle, built once: v0 =
     * documents over 8 files, v1 = `deleteIdsMergeOnRead` of every
     * doc_id % 7 == 3 (an O(deleted ids) sidecar commit — at 100 TB the
     * difference between kilobytes and a copy-on-write file rewrite),
@@ -4050,15 +4034,9 @@ object SparkEntry {
     * reference, v1 carried a standing vector, the compact dropped it,
     * v1 (masked) / v2 (materialized) / v3 (restored-masked) all serve
     * the same row count, and the restore brought the vector back. */
-  private val versionedMorBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean, Boolean, Boolean, Boolean, Boolean)]
   private def versionedMorInfo(s: SparkSession, dir: String)
       : (String, Boolean, Boolean, Boolean, Boolean, Boolean) =
-    versionedMorBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_mor/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_mor", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       Versioned.init(docs.repartition(8), path)
       val v0Files = Versioned.snapshot(s, path).files
@@ -4077,20 +4055,14 @@ object SparkEntry {
         v2.dvFiles.isEmpty && v2.dvCol.isEmpty,
         v2Count == v1Count && Versioned.read(s, path).count() == v1Count,
         v3.files == v0Files && v3.dvFiles == v1.dvFiles)
-    })
+    }
 
   /** Versioned documents exercised through [[Versioned.mergeIfNewer]]:
     * v0 = documents(8 files), v1 = a MERGE delta planting every rule —
     * strictly newer (applies), stale (must not clobber), exact tie
-    * (current wins), and pure inserts. Built once per (ctx, dir). */
-  private val versionedMergeBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
+    * (current wins), and pure inserts. Built once. */
   private def versionedMergePath(s: SparkSession, dir: String): String =
-    versionedMergeBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_merge/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_merge", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
         .repartition(8)
       Versioned.init(docs, path)
@@ -4107,9 +4079,9 @@ object SparkEntry {
         newer.unionByName(stale).unionByName(tied).unionByName(inserts),
         path, "doc_id", "n_chars")
       path
-    })
+    }
 
-  /** Shallow-clone lifecycle, built once per (ctx, dir): src = documents
+  /** Shallow-clone lifecycle, built once: src = documents
     * over 6 files, clone = [[Versioned.cloneShallow]] (one manifest
     * write, ZERO data copied — the clone's v0 must reference the
     * source's own data files), then an upsert into the CLONE diverges it
@@ -4119,15 +4091,9 @@ object SparkEntry {
     * identical before and after the clone mutation. At 100 TB this is
     * branch-for-experiment: one manifest write buys a full writable
     * corpus branch. */
-  private val versionedCloneBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean, Boolean)]
   private def versionedCloneInfo(s: SparkSession, dir: String)
       : (String, Boolean, Boolean) =
-    versionedCloneBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_clone/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_clone", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       Versioned.init(docs.repartition(6), s"$path/src")
       Versioned.cloneShallow(s, s"$path/src", s"$path/clone")
@@ -4144,23 +4110,17 @@ object SparkEntry {
         srcAfter.version == srcBefore.version &&
           srcAfter.files == srcBefore.files &&
           Versioned.read(s, s"$path/src").count() == docs.count())
-    })
+    }
 
-  /** Timestamp-travel fixture, built once per (ctx, dir): three commits
+  /** Timestamp-travel fixture, built once: three commits
     * with recorded `committedAt` stamps — init, then two appends — and a
     * probe BETWEEN the last two stamps. Records the resolution facts the
     * row pins in-plan (probe resolves v1, the first stamp resolves v0,
     * far-future resolves latest, stamps strictly increase); wall-clock
     * itself never enters the hashed output. */
-  private val versionedAsofBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Long, Boolean)]
   private def versionedAsofInfo(s: SparkSession, dir: String)
       : (String, Long, Boolean) =
-    versionedAsofBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_asof/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_asof", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       Versioned.init(docs.repartition(4), path)
       Thread.sleep(10)
@@ -4179,10 +4139,10 @@ object SparkEntry {
           Versioned.versionAsOf(s, path, probe) == 1 &&
           Versioned.versionAsOf(s, path, ts(0)) == 0 &&
           Versioned.versionAsOf(s, path, ts(2) + 3600000L) == 2)
-    })
+    }
 
-  /** DSv2 catalog lifecycle driven ENTIRELY through SQL, built once per
-    * (ctx, dir): a [[graft.sources.VersionedCatalog]] registered on the
+  /** DSv2 catalog lifecycle driven ENTIRELY through SQL, built once: a
+    * [[graft.sources.VersionedCatalog]] registered on the
     * session conf (warehouse under tmpdir), then
     * CREATE TABLE (idColumn/statsColumn properties; v0 = empty
     * schema-stamped commit) -> INSERT INTO..SELECT the even-id docs
@@ -4194,17 +4154,11 @@ object SparkEntry {
     * a TIMESTAMP AS OF probe between the v1/v2 stamps counts exactly
     * v1, and VERSION AS OF 0 is empty. The plain-SQL user's second,
     * third and fourth statements — the wall the v1 provider left. */
-  private val versionedSqlBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean)]
   private def versionedSqlInfo(s: SparkSession, dir: String)
       : (String, Boolean) =
-    versionedSqlBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "versioned_sql", dir) { wh =>
       val key = artifactKey(dir).replace('.', '_').replace('-', '_')
       val cat = s"graft_sql_$key"
-      val wh = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_sql/$key"
-      val whRoot = new org.apache.hadoop.fs.Path(wh)
-      val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(whRoot)) fs.delete(whRoot, true)
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.VersionedCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -4248,10 +4202,10 @@ object SparkEntry {
           tsCount == v1Count &&
           s.sql(s"SELECT count(*) FROM $cat.docs VERSION AS OF 0")
             .head().getLong(0) == 0L)
-    })
+    }
 
-  /** Row-level SQL lifecycle (UPDATE / MERGE INTO), built once per
-    * (ctx, dir) on its own catalog table so the DELETE fixture's
+  /** Row-level SQL lifecycle (UPDATE / MERGE INTO), built once on its own
+    * catalog table so the DELETE fixture's
     * oracles stay untouched: CREATE (v0) -> INSERT the doc_id % 3 = 0
     * slice (v1) -> `UPDATE ... WHERE doc_id % 2 = 1` rewriting the odd
     * ids in place (v2, one atomic write_delta commit) -> `MERGE INTO`
@@ -4261,17 +4215,13 @@ object SparkEntry {
     * Returns the table name and pinned facts: exactly the versions
     * 0..3 exist, both statements committed as ONE write_delta each,
     * and the stage directory was reclaimed. */
-  private val versionedSqlRlBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean)]
   private def versionedSqlRlInfo(s: SparkSession, dir: String)
       : (String, Boolean) =
-    versionedSqlRlBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "versioned_sqlrl", dir) { wh =>
       val key = artifactKey(dir).replace('.', '_').replace('-', '_')
       val cat = s"graft_sqlrl_$key"
-      val wh = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_sqlrl/$key"
-      val whRoot = new org.apache.hadoop.fs.Path(wh)
-      val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(whRoot)) fs.delete(whRoot, true)
+      val fs = new org.apache.hadoop.fs.Path(wh)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.VersionedCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -4304,9 +4254,9 @@ object SparkEntry {
         Versioned.versions(s, tdir) == Seq(0, 1, 2, 3) &&
           op(2) == "write_delta" && op(3) == "write_delta" &&
           (!fs.exists(staged) || fs.listStatus(staged).isEmpty))
-    })
+    }
 
-  /** Staged-CTAS lifecycle, built once per (ctx, dir) on its own
+  /** Staged-CTAS lifecycle, built once on its own
     * catalog: `CREATE TABLE ... AS SELECT` lands ATOMICALLY (the whole
     * table builds under a hidden `.staging/<uuid>` path and ONE
     * directory rename publishes it — v0 + the query's append commit,
@@ -4318,17 +4268,13 @@ object SparkEntry {
     * Facts pinned: versions 0..2, idColumn property + NOT NULL
     * constraint carried through the staged CREATE, the staging area
     * reclaimed, and the refused REPLACE destroyed nothing. */
-  private val versionedCtasBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean)]
   private def versionedCtasInfo(s: SparkSession, dir: String)
       : (String, Boolean) =
-    versionedCtasBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "versioned_ctas", dir) { wh =>
       val key = artifactKey(dir).replace('.', '_').replace('-', '_')
       val cat = s"graft_ctas_$key"
-      val wh = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_ctas/$key"
-      val whRoot = new org.apache.hadoop.fs.Path(wh)
-      val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(whRoot)) fs.delete(whRoot, true)
+      val fs = new org.apache.hadoop.fs.Path(wh)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.VersionedCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -4355,9 +4301,9 @@ object SparkEntry {
           meta.contains("constraint.doc_id_not_null") &&
           (!fs.exists(staging) || fs.listStatus(staging).isEmpty) &&
           refused && s.table(s"$cat.derived").count() == before)
-    })
+    }
 
-  /** INSERT OVERWRITE lifecycle, built once per (ctx, dir) on its own
+  /** INSERT OVERWRITE lifecycle, built once on its own
     * catalog: CREATE + one INSERT slice, then `INSERT OVERWRITE` with a
     * different slice — the full refresh a medallion silver table runs
     * nightly, landed as ONE versioned commit. Facts pinned: versions
@@ -4365,17 +4311,11 @@ object SparkEntry {
     * time-travelable (revertible — the line that separates overwrite
     * from the refused REPLACE TABLE), and the catalog identity carried
     * through the rewrite. */
-  private val versionedOwBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean)]
   private def versionedOwInfo(s: SparkSession, dir: String)
       : (String, Boolean) =
-    versionedOwBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "versioned_ow", dir) { wh =>
       val key = artifactKey(dir).replace('.', '_').replace('-', '_')
       val cat = s"graft_ow_$key"
-      val wh = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_ow/$key"
-      val whRoot = new org.apache.hadoop.fs.Path(wh)
-      val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(whRoot)) fs.delete(whRoot, true)
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.VersionedCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -4400,9 +4340,9 @@ object SparkEntry {
           meta.getOrElse("op", "?") == "overwrite" &&
           meta.get("catalog.idColumn").contains("doc_id") &&
           v1Rows == v1Expected && v1Rows > 0)
-    })
+    }
 
-  /** Change-feed lifecycle, built once per (ctx, dir): v0 = documents
+  /** Change-feed lifecycle, built once: v0 = documents
     * over 8 files, v1 = append (pure inserts), v2 = copy-on-write upsert
     * (updates), v3 = merge-on-read delete of every doc_id % 9 == 4
     * (deletes driven by the DV sidecar delta — ZERO data files churn,
@@ -4414,15 +4354,9 @@ object SparkEntry {
     * updates / deletes symbolically, and a row leaking from the compact
     * or rename steps (or a carried row surviving the join) breaks the
     * hash. */
-  private val versionedCdfBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean)]
   private def versionedCdfInfo(s: SparkSession, dir: String)
       : (String, Boolean) =
-    versionedCdfBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_cdf/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_cdf", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       Versioned.init(docs.repartition(8), path)
       Versioned.append(docs.filter(col("doc_id") % 10 === 0).select(
@@ -4438,24 +4372,20 @@ object SparkEntry {
       Versioned.compact(s, path, targetBytes = 32L << 20)
       Versioned.renameColumn(s, path, "n_chars", "len")
       (path, v3.files == v2.files && v3.dvFiles.nonEmpty)
-    })
+    }
 
-  /** Materialized-change-file twins, built once per (ctx, dir): the
+  /** Materialized-change-file twins, built once: the
     * SAME three commits (init, COW upsert, COW delete) run against two
     * tables — one with `cdf` enabled at init, one without. The enabled
     * table writes `_changes/v*` at each rewrite commit (pinned), the
     * plain table writes none (pinned), and the FEEDS must agree
     * exactly: the materialized fast path can never change what the
     * feed says, only what it costs. */
-  private val versionedCdfFilesBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, String, Boolean)]
   private def versionedCdfFilesInfo(s: SparkSession, dir: String)
       : (String, String, Boolean) =
-    versionedCdfFilesBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_cdff/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_cdff", dir) { path =>
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       val docs = Tables.documents(s, dir)
         .filter(col("doc_id") % 2 === 0).select("doc_id", "lang", "n_chars")
       val (on, off) = (s"$path/on", s"$path/off")
@@ -4472,9 +4402,9 @@ object SparkEntry {
         fs.exists(new org.apache.hadoop.fs.Path(f"$t/_changes/v$v%05d"))
       (on, off,
         chFile(on, 1) && chFile(on, 2) && !chFile(off, 1) && !chFile(off, 2))
-    })
+    }
 
-  /** CDC-consumer lifecycle, built once per (ctx, dir): a dedicated
+  /** CDC-consumer lifecycle, built once: a dedicated
     * table whose commits are INTERLEAVED with checkpointed
     * [[Versioned.consumeChanges]] calls — round 1 consumes the append
     * window (0,1], a crashing consumer then provably does NOT advance
@@ -4482,15 +4412,9 @@ object SparkEntry {
     * delete), round 3 finds nothing. Records the window tuples and
     * discipline facts the row pins; the row's gate then checks the
     * consumed windows PARTITION the full feed exactly. */
-  private val versionedCdcBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean)]
   private def versionedCdcInfo(s: SparkSession, dir: String)
       : (String, Boolean) =
-    versionedCdcBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_cdc/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_cdc", dir) { path =>
       val state = s"$path/_consumer"
       val docs = Tables.documents(s, dir)
         .filter(col("doc_id") % 3 === 0).select("doc_id", "lang", "n_chars")
@@ -4517,21 +4441,18 @@ object SparkEntry {
       (s"$path/t",
         w1.contains((0, 1)) && none1 && crashed &&
           w2.contains((1, 3)) && none2)
-    })
+    }
 
-  /** Streamed change-feed consumption, run ONCE per (ctx, dir) — the
+  /** Streamed change-feed consumption, run ONCE — the
     * established fixture-memo pattern: the streaming query over the CDF
     * lifecycle table (`format("graft-changes")`, 2 commits per
     * micro-batch so the row-bearing commits provably span >1 batch)
     * fills a memory sink; the row serves the sink table and pins the
     * batch-count fact. */
-  private val versionedCfsBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Int)]
   private def versionedCfsInfo(s: SparkSession, dir: String): (String, Int) =
-    versionedCfsBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "cfs_ckpt", dir) { ckpt =>
       val (path, _) = versionedCdfInfo(s, dir)
       val name = "cfs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val ckpt = s"${System.getProperty("java.io.tmpdir")}/graft_cfs_ckpt/$name"
       val q = s.readStream.format("graft-changes")
         .option("tableDir", path).option("idColumn", "doc_id")
         .option("startingVersion", "earliest")
@@ -4544,9 +4465,9 @@ object SparkEntry {
         try { q.processAllAvailable(); q.recentProgress.count(_.numInputRows > 0) }
         finally q.stop()
       (name, batches)
-    })
+    }
 
-  /** End-to-end CDC pipeline, built once per (ctx, dir): a BASE
+  /** End-to-end CDC pipeline, built once: a BASE
     * versioned table takes an upsert, a merge-on-read delete, and an
     * append; a Structured Streaming query reads its change feed
     * (`format("graft-changes")`, one commit per micro-batch), turns
@@ -4560,15 +4481,9 @@ object SparkEntry {
     * facts the row pins: the downstream table took one commit per
     * row-bearing batch (v0 seed + 3), and a REPLAYED batch id is
     * skipped without publishing. */
-  private val versionedPipeBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, String, Boolean)]
   private def versionedPipeInfo(s: SparkSession, dir: String)
       : (String, String, Boolean) =
-    versionedPipeBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_pipe/${artifactKey(dir)}"
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    memo(s, "versioned_pipe", dir) { root =>
       val (base, down) = (s"$root/base", s"$root/down")
       val docs = Tables.documents(s, dir)
         .filter(col("doc_id") % 5 === 0).select("doc_id", "lang", "n_chars")
@@ -4616,9 +4531,9 @@ object SparkEntry {
       val replaySkipped = last.isDefined && TableStream.commitBatch(
         Versioned.read(s, down).limit(1), down, last.get).isEmpty
       (base, down, commits && replaySkipped)
-    })
+    }
 
-  /** Maintenance-tick lifecycle, built once per (ctx, dir): init(4
+  /** Maintenance-tick lifecycle, built once: init(4
     * files) -> merge-on-read delete of every doc_id % 6 == 1 (~17%
     * mask, over the 10% debt bar) -> `detail` must nudge ->
     * `compactIfNeeded` must materialize (one commit) and clear the
@@ -4626,15 +4541,9 @@ object SparkEntry {
     * versions -> reading reclaimed history throws the TYPED
     * VersionRetentionException and the latest count stays
     * metadata-only. Records (path, all facts held). */
-  private val maintenanceTickBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean)]
   private def maintenanceTickInfo(s: SparkSession, dir: String)
       : (String, Boolean) =
-    maintenanceTickBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_maintenance_tick/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "maintenance_tick", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       Versioned.init(docs.repartition(4), path) // v0
       Versioned.deleteIdsMergeOnRead(
@@ -4656,9 +4565,9 @@ object SparkEntry {
       (path,
         nudgedAfterDelete && ticked.contains(2) && clearedAfterTick &&
           swept.droppedVersions.nonEmpty && typedRetention && metadataCount)
-    })
+    }
 
-  /** Streaming small-file debt lifecycle, built once per (ctx, dir):
+  /** Streaming small-file debt lifecycle, built once:
     * a base table takes 19 per-trigger appends; the change feed streams
     * them (capped 1/batch) through the `graft-versioned` SINK into a
     * downstream table — one tiny file per trigger, the debt profile the
@@ -4667,15 +4576,9 @@ object SparkEntry {
     * anywhere), `compactIfNeeded` must collapse the files, and the
     * nudge must clear. Records (basePath, downPath, filesBefore,
     * filesAfter, nudgedBefore, nudgedAfter). */
-  private val versionedStreamCompactBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, String, Int, Int, Boolean, Boolean)]
   private def versionedStreamCompactInfo(s: SparkSession, dir: String)
       : (String, String, Int, Int, Boolean, Boolean) =
-    versionedStreamCompactBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_scompact/${artifactKey(dir)}"
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    memo(s, "versioned_scompact", dir) { root =>
       val (base, down) = (s"$root/base", s"$root/down")
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       Versioned.init(docs.filter(col("doc_id") % 3 === 0).repartition(2), base)
@@ -4708,24 +4611,18 @@ object SparkEntry {
       Versioned.compactIfNeeded(s, down): Unit
       val (filesAfter, nudgedAfter) = state()
       (base, down, filesBefore, filesAfter, nudgedBefore, nudgedAfter)
-    })
+    }
 
-  /** CONCURRENT streaming sinks, built once per (ctx, dir): two writers
+  /** CONCURRENT streaming sinks, built once: two writers
     * — distinct `writerId`s, distinct checkpoints, distinct change-feed
     * sources — ingest into ONE downstream table with their triggers
     * genuinely interleaved (both queries live simultaneously, 1-commit
     * batches). Every commit lands through append's conflict REBASE;
     * each writer's replay guard stays intact (its own high-water batch
     * id skips). Records (downPath, bothLanded, replayGuardsIntact). */
-  private val versionedSinkConcBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean, Boolean)]
   private def versionedSinkConcInfo(s: SparkSession, dir: String)
       : (String, Boolean, Boolean) =
-    versionedSinkConcBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_sinkconc/${artifactKey(dir)}"
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    memo(s, "versioned_sinkconc", dir) { root =>
       val (baseA, baseB, down) = (s"$root/a", s"$root/b", s"$root/down")
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       // two disjoint upstream tables, 6 commits each past the baseline
@@ -4771,9 +4668,9 @@ object SparkEntry {
           Versioned.read(s, down).limit(1), down, last.get, w).isEmpty
       }
       (down, bothLanded, guards)
-    })
+    }
 
-  /** Mid-stream SCHEMA EVOLUTION lifecycle, built once per (ctx, dir):
+  /** Mid-stream SCHEMA EVOLUTION lifecycle, built once:
     * a change-feed stream (projected to the evolution-stable
     * doc_id/change/version columns) consumes v1 and checkpoints; a
     * rename + an append land MID-STREAM; the next trigger must refuse
@@ -4782,15 +4679,9 @@ object SparkEntry {
     * the evolved schema and drains the remaining commits exactly once
     * through the `graft-versioned` sink. Records the refused-typed
     * fact; the downstream content is gated 1.0 against the batch feed. */
-  private val versionedEvolveBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, String, Boolean)]
   private def versionedEvolveInfo(s: SparkSession, dir: String)
       : (String, String, Boolean) =
-    versionedEvolveBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_evolve/${artifactKey(dir)}"
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    memo(s, "versioned_evolve", dir) { root =>
       val (base, down) = (s"$root/base", s"$root/down")
       val docs = Tables.documents(s, dir)
         .filter(col("doc_id") % 7 === 0).select("doc_id", "lang", "n_chars")
@@ -4827,9 +4718,9 @@ object SparkEntry {
       val q2 = start() // same checkpoint, fresh anchor on the evolved schema
       try q2.processAllAvailable() finally q2.stop()
       (base, down, refusedTyped)
-    })
+    }
 
-  /** CHECK-constraint lifecycle, built once per (ctx, dir): init ->
+  /** CHECK-constraint lifecycle, built once: init ->
     * `addConstraint(nonneg, n_chars >= 0)` (metadata commit validating
     * the standing table once) -> a VALID append lands -> violating
     * append AND upsert refuse typed publishing nothing -> compact (the
@@ -4838,15 +4729,9 @@ object SparkEntry {
     * the constraint now refuses on the standing data. Records the facts
     * the row pins; the final content is fully determined from
     * documents.parquet. */
-  private val versionedConsBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Boolean)]
   private def versionedConsInfo(s: SparkSession, dir: String)
       : (String, Boolean) =
-    versionedConsBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_cons/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_cons", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       Versioned.init(docs.repartition(6), path)
       Versioned.addConstraint(s, path, "nonneg", "n_chars >= 0")
@@ -4873,23 +4758,17 @@ object SparkEntry {
         Versioned.addConstraint(s, path, "nonneg2", "n_chars >= 0"))
       (path, refusedAppend && refusedUpsert && nothingPublished &&
         survivedCompact && refusedAfterCompact && readdRefused)
-    })
+    }
 
-  /** Vacuumed versioned table + its pre-vacuum latest, built once per
-    * (ctx, dir): a fifth of documents over 4 files, three versions
+  /** Vacuumed versioned table + its pre-vacuum latest, built once: a fifth
+    * of documents over 4 files, three versions
     * (init, append, COW upsert — so vacuum has both an orphaned
     * rewrite and dropped manifests to reclaim), pre-vacuum latest
     * dumped to parquet as the byte-identity baseline, then
     * vacuum(keepVersions=1). Returns (tableDir, baselineDir, stats). */
-  private val versionedVacuumBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, String, Versioned.VacuumStats)]
   private def versionedVacuumPaths(s: SparkSession, dir: String)
       : (String, String, Versioned.VacuumStats) =
-    versionedVacuumBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_vac/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_vac", dir) { path =>
       val docs = Tables.documents(s, dir)
         .filter(col("doc_id") % 5 === 0).select("doc_id", "lang", "n_chars")
         .repartition(4)
@@ -4904,47 +4783,35 @@ object SparkEntry {
         .write.mode("overwrite").parquet(s"$path/baseline")
       val stats = Versioned.vacuum(s, s"$path/t", keepVersions = 1)
       (s"$path/t", s"$path/baseline", stats)
-    })
+    }
 
   /** Bloom-enabled versioned documents: lang-clustered into 8 hash
     * partitions, committed with a per-file Bloom on `lang` — the
     * string-equality skipping layer `versioned_bloom_read` probes.
-    * Built once per (SparkContext, fixture dir). */
-  private val versionedBloomBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
+    * Built once. */
   private def versionedBloomPath(s: SparkSession, dir: String): String =
-    versionedBloomBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_bloom/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_bloom", dir) { path =>
       Versioned.init(
         Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
           .repartition(8, col("lang")),
         path, bloomCol = Some("lang"))
       path
-    })
+    }
 
   /** Stats-enabled versioned documents: range-clustered by doc_id into
     * 8 files, committed with manifest-level per-file min/max — the
     * Iceberg-style skipping layer `versioned_pruned_read` reads through.
-    * Built once per (SparkContext, fixture dir). */
-  private val versionedStatsBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
+    * Built once. */
   private def versionedStatsPath(s: SparkSession, dir: String): String =
-    versionedStatsBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_stats/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_stats", dir) { path =>
       Versioned.init(
         Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
           .repartitionByRange(8, col("doc_id")),
         path, statsCol = Some("doc_id"))
       path
-    })
+    }
 
-  /** Versioned-table stream-vs-batch twin pair, once per JVM — the
+  /** Versioned-table stream-vs-batch twin pair, once — the
     * [[ivfStreamIngestPaths]] pattern for TABLE ingest: one base table
     * initialized twice, the delta streamed into one copy as two
     * micro-batch commits ([[graft.streaming.TableStream]]) and
@@ -4952,15 +4819,9 @@ object SparkEntry {
     * order-insensitive set-wise, so the stream==batch contract is exact
     * set equality of the latest reads, plus lineage shape (3 versions,
     * last batch id 1). */
-  private val versionedStreamBuilt =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def versionedStreamPaths(s: SparkSession, dir: String): (String, String) =
-    versionedStreamBuilt.getOrElseUpdate(dir, {
+    memo(s, "versioned_stream", dir) { root =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_stream/${artifactKey(dir)}"
-      val fsRoot = new org.apache.hadoop.fs.Path(root)
-      val fs = fsRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(fsRoot)) fs.delete(fsRoot, true)
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       val base = docs.filter(col("doc_id") % 2 === 0)
       val delta = docs.filter(col("doc_id") % 2 =!= 0)
@@ -4984,50 +4845,41 @@ object SparkEntry {
         input.addData(b2.toSeq); q.processAllAvailable()
       } finally q.stop()
       (streamed, batched)
-    })
+    }
 
-  /** Z-ordered events layout (user_id × epoch micros), built once per
-    * (SparkContext, fixture dir) — the 2-D zone-map write half of
+  /** Z-ordered events layout (user_id × epoch micros), built once — the 2-D
+    * zone-map write half of
     * `scale_zorder_box`; the query entry pays only the pruned read.
     * `unix_micros` keeps the time dimension numeric (ANSI forbids the
     * timestamp→double cast). */
-  private val zorderBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
   private def zorderedEventsPath(s: SparkSession, dir: String): String =
-    zorderBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_zorder/${artifactKey(dir)}"
+    memo(s, "zorder", dir) { path =>
       Scale.dumpZOrdered(Tables.events(s, dir), path,
         col("user_id"), unix_micros(col("ts")))
       path
-    })
+    }
 
   /** Quantile-bucketed 3-d layout (user × time × RANK(value)), built
-    * once per (SparkContext, fixture dir) — the skew-proof write half
+    * once — the skew-proof write half
     * of `scale_zorder_skew`. */
-  private val zorderSkewBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
   private def zorderedSkewEventsPath(s: SparkSession, dir: String): String =
-    zorderSkewBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_zorderskew/${artifactKey(dir)}"
+    memo(s, "zorderskew", dir) { path =>
       val events = Tables.events(s, dir)
       Scale.dumpZOrderedK(events, path,
         Seq(col("user_id"), unix_micros(col("ts")),
           Scale.quantileBucket(events, col("value"), 256)))
       path
-    })
+    }
 
   /** 3-d z-ordered events layout (user × epoch micros × value), built
-    * once per (SparkContext, fixture dir) — the k-dim write half of
+    * once — the k-dim write half of
     * `scale_zorder_3d`. */
-  private val zorder3dBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
   private def zordered3dEventsPath(s: SparkSession, dir: String): String =
-    zorder3dBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_zorder3d/${artifactKey(dir)}"
+    memo(s, "zorder3d", dir) { path =>
       Scale.dumpZOrderedK(Tables.events(s, dir), path,
         Seq(col("user_id"), unix_micros(col("ts")), col("value")))
       path
-    })
+    }
 
   /** The `versioned_zorder_read` box probe: users 10–25 × event-time in
     * [2024-01-08, 2024-01-22) as inclusive epoch-micros bounds (micros
@@ -5051,8 +4903,8 @@ object SparkEntry {
   private val zHealProbe = Seq(("user_id", 10.0, 25.0),
     ("ts_us", zHealLoUs.toDouble, zHealHiUs.toDouble))
 
-  /** Drift → warn → rebucketize → re-pruned, staged once per (ctx,
-    * dir): v0 = pre-cut events in 8 files, v1 = OPTIMIZE ZORDER
+  /** Drift → warn → rebucketize → re-pruned, staged once: v0 = pre-cut
+    * events in 8 files, v1 = OPTIMIZE ZORDER
     * (user_id, ts_us) with stats recorded over the narrow early
     * domain, v2 = the whole late half appended (drift planted), v3 =
     * [[Versioned.rebucketize]] healing the layout with fresh stats.
@@ -5060,15 +4912,9 @@ object SparkEntry {
     * condition), the post-heal drift (must be zero — everything
     * re-clustered), and the late-region probe's (kept, total) pruning
     * decision on the healed layout. */
-  private val versionedZHealBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Seq[Int], Double, Double, Int, Int)]
   private def versionedZHealInfo(s: SparkSession, dir: String)
       : (String, Seq[Int], Double, Double, Int, Int) =
-    versionedZHealBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_zheal/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_zheal", dir) { path =>
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         col("event_type"), col("value"), unix_micros(col("ts")).as("ts_us"))
       Versioned.init(ev.filter(col("ts_us") < zHealCutUs).repartition(8), path)
@@ -5086,23 +4932,17 @@ object SparkEntry {
           s"healed layout at $path lost its zorder.* metadata for $zHealProbe"))
       (path, Versioned.versions(s, path), drift.clampFraction,
         after.clampFraction, kept.size, total)
-    })
+    }
 
   /** Versioned events table carried through an OPTIMIZE ZORDER commit,
-    * built once per (SparkContext, dir): v0 = the events projection in
+    * built once: v0 = the events projection in
     * 8 arbitrary files, v1 = [[Versioned.compactZOrder]] on (user_id,
     * ts_us). Also records the box probe's manifest pruning decision —
     * (kept, total) file counts from [[Versioned.boxFilePruning]]'s pure
     * driver arithmetic — so the row pins the layout win, not just
     * result purity. */
-  private val versionedZOrderBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), (String, Int, Int)]
   private def versionedZOrderInfo(s: SparkSession, dir: String): (String, Int, Int) =
-    versionedZOrderBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_zorder/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_zorder", dir) { path =>
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         col("event_type"), col("value"), unix_micros(col("ts")).as("ts_us"))
       Versioned.init(ev.repartition(8), path)
@@ -5111,10 +4951,10 @@ object SparkEntry {
         .getOrElse(throw new IllegalStateException(
           s"z-order commit at $path carries no prunable metadata for $zBoxProbe"))
       (path, kept.size, total)
-    })
+    }
 
   /** Versioned events table exercised through the INCREMENTAL z-order
-    * loop, built once per (ctx, dir): v0 = half the events in 8 files,
+    * loop, built once: v0 = half the events in 8 files,
     * v1 = full compactZOrder(user × time), v2 = the other half
     * APPENDED (the ingest burst — zorder metadata must carry through),
     * v3 = compactZOrderIncremental — only the appended tail clusters,
@@ -5123,15 +4963,9 @@ object SparkEntry {
     * untouched, whether every live file now carries __z stats, and the
     * box probe's (kept, total) pruning decision spanning old AND new
     * files. */
-  private val versionedZIncBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Seq[Int], Boolean, Boolean, Int, Int, Long, Long)]
   private def versionedZIncInfo(s: SparkSession, dir: String)
       : (String, Seq[Int], Boolean, Boolean, Int, Int, Long, Long) =
-    versionedZIncBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_zinc/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_zinc", dir) { path =>
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         col("event_type"), col("value"), unix_micros(col("ts")).as("ts_us"))
       Versioned.init(ev.filter(col("event_id") % 2 === 0).repartition(8), path)
@@ -5158,23 +4992,17 @@ object SparkEntry {
             s"for $zBoxProbe — mutations must carry standing table metadata"))
       (path, Versioned.versions(s, path), carried, allClustered, kept.size, total,
         drift.tailRows, drift.clampedRows)
-    })
+    }
 
-  /** Two REAL racing writers on one versioned table, staged once per
-    * (SparkContext, dir): init = even docs in 4 files, then two threads
+  /** Two REAL racing writers on one versioned table, staged once: init =
+    * even docs in 4 files, then two threads
     * released by a single barrier each append a disjoint odd-id delta.
     * Append-only races rebase inside the commit loop — BOTH must land,
     * in scheduler order — so the final content is deterministic and the
     * `versioned_concurrent_commit` row can hash-oracle it; the helper
     * returns the committed version chain for the lineage gate. */
-  private val versionedRaceBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), (String, Seq[Int])]
   private def versionedRaceInfo(s: SparkSession, dir: String): (String, Seq[Int]) =
-    versionedRaceBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_versioned_race/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "versioned_race", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       Versioned.init(docs.filter(col("doc_id") % 2 === 0).repartition(4), path)
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
@@ -5187,7 +5015,7 @@ object SparkEntry {
       writers.foreach(_.start()); writers.foreach(_.join())
       if (!errs.isEmpty) throw errs.peek()
       (path, Versioned.versions(s, path))
-    })
+    }
 
   /** Outcome of the versioned-IVF race matrix ([[ivfVersionedRace]]):
     * the committed version chain, whether each staged stale replay
@@ -5200,7 +5028,7 @@ object SparkEntry {
                                     v0RowsServed: Long)
 
   /** The versioned ANN index's multi-writer race matrix, staged ONCE
-    * per (SparkContext, dir) — the `ann_ivf_concurrent_ingest` fixture.
+    * — the `ann_ivf_concurrent_ingest` fixture.
     * v0 = saveVersioned(base half of the quarter slice). The delta half
     * is cell-assigned with the STORED model and split along a committed
     * FILE boundary (manifest stats boxes partition the cell space, so
@@ -5212,14 +5040,8 @@ object SparkEntry {
     * rewritten), and after compactVersioned lands, an append pinned to
     * the PRE-COMPACT snapshot must refuse typed (compact rewrites
     * everything). */
-  private val ivfVersionedRaceBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), IvfRaceOutcome]
   private def ivfVersionedRace(s: SparkSession, dir: String): IvfRaceOutcome =
-    ivfVersionedRaceBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_versioned/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "ivf_versioned", dir) { path =>
       val slice = Tables.embeddings(s, dir).filter(col("vec_id") % 4 === 0)
       val idx = KnnIvf.build(slice.filter(col("vec_id") % 8 === 0), numCells = 8)
       KnnIvf.saveVersioned(idx, path)
@@ -5265,7 +5087,7 @@ object SparkEntry {
       val v0Served = KnnIvf.loadVersioned(s, path, Some(0)).corpusWithCell.count()
       IvfRaceOutcome(path, Versioned.versions(s, s"$path/corpus"),
         staleOverlapTyped, staleAfterCompactTyped, expected, v0Rows, v0Served)
-    })
+    }
 
   /** Outcome of the versioned-GRAPH race matrix ([[hnswVersionedRace]]):
     * version chain, typed-refusal flags, the committed-latest graph's
@@ -5277,7 +5099,7 @@ object SparkEntry {
                                      expected: DataFrame)
 
   /** The versioned NSW graph's multi-writer race matrix, staged once
-    * per (SparkContext, dir) — the `ann_hnsw_concurrent_ingest`
+    * — the `ann_hnsw_concurrent_ingest`
     * fixture, closing the graph half of the index-commit story (the
     * IVF half is [[ivfVersionedRace]]). v0 = saveVersioned(base half of
     * the quarter slice, 4 shards); the delta half splits along a
@@ -5289,14 +5111,8 @@ object SparkEntry {
     * determinism gives the end-state contract frame IDENTITY: the
     * committed graph must equal a from-scratch build of the final live
     * corpus row-for-row. */
-  private val hnswVersionedRaceBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), HnswRaceOutcome]
   private def hnswVersionedRace(s: SparkSession, dir: String): HnswRaceOutcome =
-    hnswVersionedRaceBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_versioned/${artifactKey(dir)}"
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+    memo(s, "hnsw_versioned", dir) { path =>
       val slice = Tables.embeddings(s, dir).filter(col("vec_id") % 4 === 0)
       val base = slice.filter(col("vec_id") % 8 === 0)
       val delta = slice.filter(col("vec_id") % 8 === 4).localCheckpoint(true)
@@ -5338,44 +5154,38 @@ object SparkEntry {
       val expected = KnnHnsw.build(live, numShards = 4).localCheckpoint(true)
       HnswRaceOutcome(path, Versioned.versions(s, path),
         staleOverlapTyped, staleAfterCompactTyped, expected)
-    })
+    }
 
   /** The efConstruction-sweep graphs (efC ∈ {16, 64, 200} at fixed
-    * m=8), half corpus, built once per JVM — the insert-beam twin of
+    * m=8), half corpus, built once — the insert-beam twin of
     * [[hnswBuildSweepGraphs]]'s degree sweep, covering the reference's
     * last un-swept build knob (executor.py:22). The efC=64 point is the
     * shared [[hnswHalfDefaultGraph]], not a fresh build. */
-  private val hnswEfcSweepBuilt = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), Map[Int, DataFrame]]
   private def hnswEfcSweepGraphs(s: SparkSession, dir: String): Map[Int, DataFrame] =
-    hnswEfcSweepBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "hnsw_efc_sweep", dir) { root =>
       val half = Tables.embeddings(s, dir).filter(col("vec_id") % 2 === 0)
       Seq(16, 200).map { efc =>
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_efc$efc/${artifactKey(dir)}"
+        val path = s"$root/efc$efc"
         KnnHnsw.save(KnnHnsw.build(half, numShards = 4, efConstruction = efc), path)
         efc -> KnnHnsw.load(s, path).localCheckpoint(true)
       }.toMap + (64 -> hnswHalfDefaultGraph(s, dir))
-    })
+    }
 
-  /** PQ codebooks trained AND corpus encoded once per (SparkContext,
-    * fixture dir) — the build-once/serve-many split of [[ivfIndexPath]]:
+  /** PQ codebooks trained AND corpus encoded once — the
+    * build-once/serve-many split of [[ivfIndexPath]]:
     * a deployment stores codes, not floats, so the query path reads the
     * 26x-smaller encoded table and never re-runs the 16 per-subspace
-    * model transforms. Keyed by context, not dir alone: artifacts built
-    * under a stopped context must not serve a fresh one. */
-  private val pqBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), (Pq.PqIndex, String)]
+    * model transforms. */
   private def pqIndexFor(s: SparkSession, dir: String): (Pq.PqIndex, String) =
-    pqBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "pq", dir) { path =>
       val idx = Pq.train(Tables.embeddings(s, dir), dim = 64, m = 16, k = 32)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_pq/${artifactKey(dir)}"
       Pq.encode(idx, Tables.embeddings(s, dir))
         .write.mode("overwrite").parquet(path)
       (idx, path)
-    })
+    }
 
-  /** CELL-carrying PQ-encoded corpus, persisted once per (SparkContext,
-    * fixture dir) — the stored form an IVFPQ deployment actually serves
+  /** CELL-carrying PQ-encoded corpus, persisted once — the stored form an
+    * IVFPQ deployment actually serves
     * from (codes + cell; Jégou §V stores codes in the inverted lists).
     * [[pqResidualFor]] already persists ITS cell-carrying encoding; the
     * plain-PQ probed rows (`ann_ivfpq`, `ann_ivfpq_recall`) were instead
@@ -5383,31 +5193,25 @@ object SparkEntry {
     * EVERY call. Same build-once/serve-many lifecycle as [[pqIndexFor]];
     * encoding is deterministic and ints/longs round-trip parquet
     * exactly, so served results are bit-identical. */
-  private val pqCellEncBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
   private def pqCellEncodedPath(s: SparkSession, dir: String): String =
-    pqCellEncBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "pqcell", dir) { path =>
       val ivf = ivfIndexLoaded(s, dir)
       val (idx, _) = pqIndexFor(s, dir)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_pqcell/${artifactKey(dir)}"
       Pq.encode(idx, ivf.corpusWithCell).write.mode("overwrite").parquet(path)
       path
-    })
+    }
 
-  /** Residual-PQ codebooks + encoded corpus, built once per
-    * (SparkContext, fixture dir) like [[pqIndexFor]] — trained on
+  /** Residual-PQ codebooks + encoded corpus, built once like [[pqIndexFor]]
+    * — trained on
     * residuals against the session IVF's centroids, so it always pairs
     * with [[ivfIndexPath]]'s index. */
-  private val pqResidualBuilt =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), (Pq.PqIndex, String)]
   private def pqResidualFor(s: SparkSession, dir: String): (Pq.PqIndex, String) =
-    pqResidualBuilt.getOrElseUpdate((System.identityHashCode(s.sparkContext), dir), {
+    memo(s, "pqres", dir) { path =>
       val ivf = ivfIndexLoaded(s, dir)
       val idx = Pq.trainResidual(ivf, dim = 64, m = 16, k = 32)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_pqres/${artifactKey(dir)}"
       Pq.encodeResidual(idx, ivf).write.mode("overwrite").parquet(path)
       (idx, path)
-    })
+    }
 
   /** Pin a decoded-features frame: the payload-build + image-decode
     * mapPartitions subtree is the expensive part of every multimodal
@@ -5888,8 +5692,8 @@ object SparkEntry {
     * Before round 9 each gate rebuilt the planted-dupe corpus and its
     * signatures from scratch, and every band self-join re-executed the
     * signature subplan on both sides — the suite paid signature
-    * construction ~6x per run. Pinned with `localCheckpoint` once per
-    * (SparkContext, fixture dir), the repo's own fixed-point pattern
+    * construction ~6x per run. Pinned with `localCheckpoint` once, the
+    * repo's own fixed-point pattern
     * (`Dedup.semdedupSelect`); the frames are narrow (id + 32 longs /
     * 60-64 ints per doc), so the pinned footprint is a few MB at any
     * fixture scale. The flagship QUERY entries (dedup_minhash,
@@ -5897,17 +5701,13 @@ object SparkEntry {
     * do NOT read these frames: their benched time stays the honest
     * full-pipeline cost; only the agreement GATES — whose value is the
     * comparison, not the pipeline timing — feed from the shared frames. */
-  private val sharedDedupFrames =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
   private def sharedSigFrame(s: SparkSession, dir: String, key: String)
                             (build: => DataFrame): DataFrame =
-    sharedDedupFrames.getOrElseUpdate(
-      (System.identityHashCode(s.sparkContext), dir, key),
-      build.localCheckpoint(true))
+    memo(s, s"frame_$key", dir) { _ => build.localCheckpoint(true) }
   /** Exact cosine top-5 over the default query batch — the baseline side
     * every ANN recall gate compares against. Ten gate queries each
     * recomputed this identical scan (~0.2-0.4s apiece of pure repeat);
-    * pinned once per (context, dir) under the same policy as the dedup
+    * pinned once under the same policy as the dedup
     * gate frames: a gate's value is the COMPARISON, so only the
     * approximate side should pay benched time. The flagship `knn_*`
     * oracle rows keep their own full computations. */
@@ -5923,7 +5723,7 @@ object SparkEntry {
         Tables.embeddings(s, dir).filter(col("vec_id") % 2 === 0), k = 5) }
 
   /** The exact MaxSim top-10 — the baseline side of the cascade recall
-    * gate, pinned once per (context, dir) under the exactTop5 policy:
+    * gate, pinned once under the exactTop5 policy:
     * the gate's value is the CASCADE comparison; the flagship
     * `retrieval_maxsim` keeps the exact computation's honest cost. */
   private def maxSimExactShared(s: SparkSession, dir: String): DataFrame =
@@ -5932,8 +5732,8 @@ object SparkEntry {
       Retrieval.maxSim(q, d, k = 10) }
 
   /** The BM25 top-20 over the corpus scan path — the baseline/feed side
-    * of the retrieval gate and composition rows, pinned once per
-    * (context, dir) under the exactTop5 policy: `retrieval_bm25_append_
+    * of the retrieval gate and composition rows, pinned once under the
+    * exactTop5 policy: `retrieval_bm25_append_
     * agreement`'s value is the appended-index COMPARISON, `retrieval_rrf`
     * / `retrieval_hard_negatives` / `retrieval_eval_*`'s value is the
     * fusion / mining / metric step — five rows each re-paid the
@@ -5945,8 +5745,8 @@ object SparkEntry {
       Retrieval.bm25(Tables.documents(s, dir), BmQueryTerms, k = 20) }
 
   /** The near-dup corpus's duplicate-components frame (ngram-Jaccard
-    * pairs at 0.5 through the min-label fixed point), pinned once per
-    * (context, dir): `dedup_components` IS this computation and keeps
+    * pairs at 0.5 through the min-label fixed point), pinned once:
+    * `dedup_components` IS this computation and keeps
     * its own honest full cost; `pipeline_clean` composes it with the
     * quality gate and feeds from the shared frame (tiny: id+component
     * per doc). UNFANNED corpus, same A/B rationale as the flagship. */
@@ -5961,7 +5761,7 @@ object SparkEntry {
 
   /** The near-dup corpus's positional gram-hash frame (n=10) — the
     * tokenize + gram-hash + posexplode prefix of the spans family,
-    * pinned once per (context, dir): `dedup_spans` and its SQL-surface
+    * pinned once: `dedup_spans` and its SQL-surface
     * twin `sql_spans` explode the SAME grams of the SAME corpus — the
     * explode is the pipelines' shared prefix (the fuzzy_vars
     * precedent), and each row's own value is the dup-gram shuffle +
@@ -5973,7 +5773,7 @@ object SparkEntry {
     }
 
   /** The near-dup corpus's duplicated-spans frame (n=10), pinned once
-    * per (context, dir) — `dedup_spans` IS this computation and keeps
+    * — `dedup_spans` IS this computation and keeps
     * honest timing; `dedup_span_clean` composes the removal step on
     * top and feeds from the shared frame (built off the shared gram
     * prefix, so the pinned build never re-pays the explode). */
@@ -5983,8 +5783,8 @@ object SparkEntry {
     }
 
   /** The fuzzy-title corpus's deletion-neighborhood variants (doc_id,
-    * title, var — one row per <=1-deletion variant), pinned once per
-    * (context, dir): `dedup_fuzzy` and its SQL-surface twin `sql_fuzzy`
+    * title, var — one row per <=1-deletion variant), pinned once:
+    * `dedup_fuzzy` and its SQL-surface twin `sql_fuzzy`
     * explode the SAME variants of the SAME titles — the explode is the
     * pipelines' shared prefix (the dedup_spans/dedup_span_clean
     * precedent), and each row's own value is the bucket join + verify
@@ -5999,7 +5799,7 @@ object SparkEntry {
     }
 
   /** Parity-half duplicate components (split_leakage_safe's input
-    * pipeline), pinned once per (context, dir): the split row's value
+    * pipeline), pinned once: the split row's value
     * is the component-keyed assignment; the components pipeline keeps
     * its honest full-corpus timing under `dedup_components`. Narrow
     * frame (doc_id, component). */
@@ -6041,27 +5841,16 @@ object SparkEntry {
           when(element_at(col("embedding"), i) >= 0, 1).otherwise(0)),
         threshold = 0.99) }
 
-  /** The TTL gate's replay, once per (SparkContext): unlike every other
-    * gate input, the replay's cost is dominated by WALL-CLOCK sleeps
-    * (the idle gap that expires the horizon) plus ProcessingTimeTimeout
-    * trigger churn — re-running it per bench sweep times Thread.sleep,
-    * not engine work. Memoized under the same once-per-JVM policy as the
-    * index builds (ivfBuilt/hnswBuilt): the contract plan (agreement +
-    * drop-count gates) still builds and executes on every call. The
-    * replay is fixture-independent (a planted 4-doc corpus), so the memo
-    * keys on the context alone. */
   /** Watermark late-data replay for `events_stream_late_gate`, memoized
-    * per JVM like [[ttlReplayMemo]] (the replay is three micro-batches of
+    * like [[ttlGateReplay]] (the replay is three micro-batches of
     * a MemoryStream; its cost is stream-harness overhead, and the
     * contract can't drift within one process). Event-time only — no
     * processing-time timeouts, so `processAllAvailable` observes
     * quiescence and no sleeps are needed.
     * @return the append-mode emitted rows (window_start, event_type, n) */
-  private val lateGateMemo =
-    scala.collection.concurrent.TrieMap.empty[Int, Set[(Long, String, Long)]]
   private[graft] val LateGateT0 = 1704067200L // 2024-01-01 00:00:00 UTC
   private def lateGateReplay(s: SparkSession): Set[(Long, String, Long)] =
-    lateGateMemo.getOrElseUpdate(System.identityHashCode(s.sparkContext), {
+    memo(s, "late_gate_replay", "") { _ =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val sink = s"__events_late_gate_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
       val s2 = s.newSession()
@@ -6094,10 +5883,10 @@ object SparkEntry {
         s2.table(sink).collect()
           .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
       } finally { q.stop(); s2.catalog.dropTempView(sink) }
-    })
+    }
 
   /** Stream-stream interval-join replay for `events_stream_join_gate`,
-    * memoized per (JVM, fixture): a 1/50-of-users slice of the REAL
+    * memoized: a 1/50-of-users slice of the REAL
     * events fixture (bounded collect, documented) replayed through
     * [[graft.streaming.EventStream.joinRecentPriors]] in two
     * time-ordered micro-batches. Splitting by event time is safe: the
@@ -6106,85 +5895,86 @@ object SparkEntry {
     * currents > 2h30m away — outside the interval anyway. Event-time
     * only, no sleeps. Result pre-aggregated to (pair, n) so the gate
     * compares MULTIPLICITIES, not just the set. */
-  private val streamJoinMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), Seq[(Long, Long, Long, String, String, Long)]]
   private def streamJoinReplay(s: SparkSession, dir: String)
       : Seq[(Long, Long, Long, String, String, Long)] =
-    streamJoinMemo.getOrElseUpdate(
-      (System.identityHashCode(s.sparkContext), dir), {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val sink = s"__events_join_gate_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "4")
-        implicit val sqlCtx = s2.sqlContext
-        import s2.implicits._
-        val slice = Tables.events(s2, dir).where(col("user_id") % 50 === 0)
-          .select(col("user_id"), col("ts"), col("event_type"))
-          .orderBy("ts").collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2)))
-        val (b1, b2) = slice.splitAt(slice.length / 2)
-        val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-        val q = graft.streaming.EventStream.joinRecentPriors(
-            input.toDF().toDF("user_id", "ts", "event_type"))
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          input.addData(b1.toSeq); q.processAllAvailable()
-          input.addData(b2.toSeq); q.processAllAvailable()
-          s2.table(sink)
-            .groupBy("user_id", "ts", "prior_ts", "event_type", "prior_type")
-            .agg(count(lit(1)).as("n")).collect()
-            .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
-              r.getTimestamp(2).getTime, r.getString(3), r.getString(4),
-              r.getLong(5))).toSeq
-        } finally { q.stop(); s2.catalog.dropTempView(sink) }
-      })
+    memo(s, "stream_join_replay", dir) { _ =>
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      val sink = s"__events_join_gate_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
+      val s2 = s.newSession()
+      s2.conf.set("spark.sql.shuffle.partitions", "4")
+      implicit val sqlCtx = s2.sqlContext
+      import s2.implicits._
+      val slice = Tables.events(s2, dir).where(col("user_id") % 50 === 0)
+        .select(col("user_id"), col("ts"), col("event_type"))
+        .orderBy("ts").collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2)))
+      val (b1, b2) = slice.splitAt(slice.length / 2)
+      val input = MemoryStream[(Long, java.sql.Timestamp, String)]
+      val q = graft.streaming.EventStream.joinRecentPriors(
+          input.toDF().toDF("user_id", "ts", "event_type"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName(sink).start()
+      try {
+        input.addData(b1.toSeq); q.processAllAvailable()
+        input.addData(b2.toSeq); q.processAllAvailable()
+        s2.table(sink)
+          .groupBy("user_id", "ts", "prior_ts", "event_type", "prior_type")
+          .agg(count(lit(1)).as("n")).collect()
+          .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
+            r.getTimestamp(2).getTime, r.getString(3), r.getString(4),
+            r.getLong(5))).toSeq
+      } finally { q.stop(); s2.catalog.dropTempView(sink) }
+    }
 
   /** Event-time-timeout sessionization replay for
     * `events_stream_session_gate` — same harness discipline as
     * [[streamJoinReplay]] (bounded real-fixture slice, two time-ordered
-    * batches, memoized per (JVM, fixture), event-time only) plus a
+    * batches, memoized, event-time only) plus a
     * far-future sentinel batch whose watermark closes every real
     * session; the sentinel user's own (correctly still-open) session is
     * excluded from the comparison. */
-  private val sessionGateMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), Seq[(Long, Long, Long, Long)]]
   private def sessionGateReplay(s: SparkSession, dir: String)
       : Seq[(Long, Long, Long, Long)] =
-    sessionGateMemo.getOrElseUpdate(
-      (System.identityHashCode(s.sparkContext), dir), {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val sink = s"__events_session_gate_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-        val sentinelUser = 999999999L
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "4")
-        implicit val sqlCtx = s2.sqlContext
-        import s2.implicits._
-        val slice = Tables.events(s2, dir).where(col("user_id") % 50 === 0)
-          .select(col("user_id"), col("ts")).orderBy("ts").collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1)))
-        val (b1, b2) = slice.splitAt(slice.length / 2)
-        val sentinel = (sentinelUser,
-          new java.sql.Timestamp(slice.last._2.getTime + 1000000000L))
-        val input = MemoryStream[(Long, java.sql.Timestamp)]
-        val q = graft.streaming.EventStream.sessionizeStream(
-            input.toDF().toDF("user_id", "ts"))
-          .toDF().writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          input.addData(b1.toSeq); q.processAllAvailable()
-          input.addData(b2.toSeq); q.processAllAvailable()
-          input.addData(sentinel); q.processAllAvailable()
-          s2.table(sink).filter(col("user_id") =!= sentinelUser).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-            .toSeq
-        } finally { q.stop(); s2.catalog.dropTempView(sink) }
-      })
+    memo(s, "session_gate_replay", dir) { _ =>
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      val sink = s"__events_session_gate_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
+      val sentinelUser = 999999999L
+      val s2 = s.newSession()
+      s2.conf.set("spark.sql.shuffle.partitions", "4")
+      implicit val sqlCtx = s2.sqlContext
+      import s2.implicits._
+      val slice = Tables.events(s2, dir).where(col("user_id") % 50 === 0)
+        .select(col("user_id"), col("ts")).orderBy("ts").collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1)))
+      val (b1, b2) = slice.splitAt(slice.length / 2)
+      val sentinel = (sentinelUser,
+        new java.sql.Timestamp(slice.last._2.getTime + 1000000000L))
+      val input = MemoryStream[(Long, java.sql.Timestamp)]
+      val q = graft.streaming.EventStream.sessionizeStream(
+          input.toDF().toDF("user_id", "ts"))
+        .toDF().writeStream.outputMode("append").format("memory")
+        .queryName(sink).start()
+      try {
+        input.addData(b1.toSeq); q.processAllAvailable()
+        input.addData(b2.toSeq); q.processAllAvailable()
+        input.addData(sentinel); q.processAllAvailable()
+        s2.table(sink).filter(col("user_id") =!= sentinelUser).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+          .toSeq
+      } finally { q.stop(); s2.catalog.dropTempView(sink) }
+    }
 
-  private val ttlReplayMemo =
-    scala.collection.concurrent.TrieMap.empty[Int, (Set[(Long, Long)], Long)]
+  /** The TTL gate's replay, once: unlike every other
+    * gate input, the replay's cost is dominated by WALL-CLOCK sleeps
+    * (the idle gap that expires the horizon) plus ProcessingTimeTimeout
+    * trigger churn — re-running it per bench sweep times Thread.sleep,
+    * not engine work. Memoized like the index builds ([[ivfIndexPath]],
+    * [[hnswIndexPath]]): the contract plan (agreement +
+    * drop-count gates) still builds and executes on every call. The
+    * replay is fixture-independent (a planted 4-doc corpus), so the memo
+    * keys on the application alone. */
   private def ttlGateReplay(s: SparkSession): (Set[(Long, Long)], Long) =
-    ttlReplayMemo.getOrElseUpdate(System.identityHashCode(s.sparkContext), {
+    memo(s, "ttl_gate_replay", "") { _ =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val text = "ttl horizon gate shared text body"
       val sink = s"__dedup_ttl_gate_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
@@ -6237,7 +6027,7 @@ object SparkEntry {
         } finally { q.stop(); s2.catalog.dropTempView(sink) }
       }
       (streamed, acc.value)
-    })
+    }
 
   /** Pair-preserving slice guard for the O(N^2) brute agreement gate:
     * above [[BruteGateMaxDocs]] signatures the gate runs on the id-parity
@@ -6292,14 +6082,10 @@ object SparkEntry {
     * width. Results are unaffected: everything downstream of every
     * call site is order-independent (exact decimal sums, min/max,
     * counts, per-row projections). */
-  /** A/B kill-switch (SPARK_GRAFT_FANOUT=off) so the fan's effect can be
-    * profiled in adjacent windows without a rebuild — the same pattern
-    * the AQE/shuffle knobs use in ProfileQueries. Default on. */
-  private val fanOutEnabled = !sys.env.get("SPARK_GRAFT_FANOUT").contains("off")
   private[graft] def fanOut(s: SparkSession, df: DataFrame,
                      keys: org.apache.spark.sql.Column*): DataFrame = {
     val p = s.sparkContext.defaultParallelism
-    if (!fanOutEnabled || df.inputFiles.length >= p) df
+    if (df.inputFiles.length >= p) df
     else if (keys.isEmpty) df.repartition(p)
     else df.repartition(p, keys: _*)
   }
