@@ -500,6 +500,10 @@ object SparkEntry {
         .filter(when(col("n_dropped") >= 16L, lit(true))
           .otherwise(raise_error(concat(
             lit("ttl gate: evictions must be observable, dropped="), col("n_dropped")))))
+        // the raw count varies with how many processing-time triggers
+        // fire during the replay's sleep; the row carries the gated fact
+        .withColumn("evictions_observed", col("n_dropped") >= 16L)
+        .drop("n_dropped")
     }),
     // GATED watermark lateness contract — the event-time semantic the
     // whole streaming family's state bound rests on, driver-visible: a

@@ -3,8 +3,15 @@ package graft.operators
 import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNotContainsNull
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Graph-shaped ANN: shard-partitioned navigable-small-world graphs — the
   * Spark-native rendition of the reference's actual index structure
@@ -49,12 +56,16 @@ object KnnHnsw {
     * entirely inside a task. Distances are cosine (1 − cos) computed
     * with the same double-accumulator loop as the codegen'd
     * `VectorExprs.CosineSim`, so emitted scores agree bit-for-bit with
-    * the exact twin's. */
-  private[operators] final class NswGraph(m: Int, efConstruction: Int) {
+    * the exact twin's. Nodes live in growable primitive arrays; a
+    * node's adjacency is `deg(i)` entries of `adj(i)`, whose build-time
+    * capacity `mMax + 1` takes the reverse edge before a prune. */
+  private[graft] final class NswGraph(m: Int, efConstruction: Int) {
     private val mMax = 2 * m // reverse-edge degree cap (layer-0 HNSW rule)
-    private[operators] val ids = new mutable.ArrayBuffer[Long]
-    private[operators] val vecs = new mutable.ArrayBuffer[Array[Float]]
-    private[operators] val adj = new mutable.ArrayBuffer[Array[Int]]
+    private var n = 0
+    private var ids = new Array[Long](16)
+    private var vecs = new Array[Array[Float]](16)
+    private var adj = new Array[Array[Int]](16)
+    private var deg = new Array[Int](16)
 
     /** Restore one persisted shard for serving. Adjacency arrives as
       * persisted LOCAL indices, so restore is one array placement per
@@ -63,99 +74,194 @@ object KnnHnsw {
       * its build knobs are unused. */
     def this(shard: Array[ShardRow]) = {
       this(0, 0)
-      val byIdx = new Array[ShardRow](shard.length)
-      shard.foreach(r => byIdx(r._2) = r)
-      byIdx.foreach { case (_, _, id, vec, nbs, _) =>
-        ids += id; vecs += vec; adj += nbs
+      n = shard.length
+      ids = new Array[Long](n); vecs = new Array[Array[Float]](n)
+      adj = new Array[Array[Int]](n); deg = new Array[Int](n)
+      shard.foreach { case (_, i, id, vec, nbs, _) =>
+        ids(i) = id; vecs(i) = vec; adj(i) = nbs; deg(i) = nbs.length
       }
     }
 
-    private def dist(q: Array[Float], idx: Int): Double =
-      cosineDist(q, vecs(idx))
+    def size: Int = n
+    def id(i: Int): Long = ids(i)
+    def vec(i: Int): Array[Float] = vecs(i)
+    /** Node `i`'s out-edges in stored order (a copy). */
+    def neighbors(i: Int): Array[Int] = java.util.Arrays.copyOf(adj(i), deg(i))
+
+    /** The beam's total order on (distance, local index): distance by
+      * `java.lang.Double.compare`, then vec id, so ties (exact duplicate
+      * vectors) break identically every run. */
+    private def compare(d1: Double, i1: Int, d2: Double, i2: Int): Int = {
+      val c = java.lang.Double.compare(d1, d2)
+      if (c != 0) c else java.lang.Long.compare(ids(i1), ids(i2))
+    }
+
+    /** A binary heap of (distance, local index) under [[compare]]:
+      * nearest entry on top, or farthest when `farFirst`. */
+    private final class Heap(farFirst: Boolean) {
+      private var ds = new Array[Double](64)
+      private var xs = new Array[Int](64)
+      var size = 0
+      def topDist: Double = ds(0)
+      def topNode: Int = xs(0)
+      private def above(a: Int, b: Int): Boolean = {
+        val c = compare(ds(a), xs(a), ds(b), xs(b))
+        if (farFirst) c > 0 else c < 0
+      }
+      private def swap(a: Int, b: Int): Unit = {
+        val d = ds(a); ds(a) = ds(b); ds(b) = d
+        val x = xs(a); xs(a) = xs(b); xs(b) = x
+      }
+      def push(d: Double, x: Int): Unit = {
+        if (size == ds.length) {
+          ds = java.util.Arrays.copyOf(ds, 2 * size)
+          xs = java.util.Arrays.copyOf(xs, 2 * size)
+        }
+        ds(size) = d; xs(size) = x
+        var c = size
+        size += 1
+        while (c > 0 && above(c, (c - 1) >>> 1)) {
+          swap(c, (c - 1) >>> 1); c = (c - 1) >>> 1
+        }
+      }
+      def pop(): Unit = {
+        size -= 1
+        ds(0) = ds(size); xs(0) = xs(size)
+        var p = 0
+        var done = false
+        while (!done) {
+          val l = 2 * p + 1
+          if (l >= size) done = true
+          else {
+            val c = if (l + 1 < size && above(l + 1, l)) l + 1 else l
+            if (above(c, p)) { swap(c, p); p = c } else done = true
+          }
+        }
+      }
+    }
+
+    private val candidates = new Heap(farFirst = false)
+    private val results = new Heap(farFirst = true)
+    // visited(i) == stamp marks node i seen by the running search
+    private var visited = new Array[Int](0)
+    private var stamp = 0
+
+    private[graft] def searchBeam(q: Array[Float], ef: Int,
+        allowed: Int => Boolean = _ => true): IndexedSeq[(Double, Int)] =
+      searchBeamWith(i => cosineDist(q, vecs(i)), ef, allowed)
 
     /** Beam search: best-first expansion keeping the ef closest found;
       * stops when the nearest open candidate is farther than the worst
-      * kept result. Returns local indices sorted by (distance, id).
+      * kept result. Returns (distance, local index) sorted by [[compare]].
       * `allowed` is the tombstone filter (hnswlib `mark_deleted`
       * semantics, the reference's delete path `executor.py:223`):
       * DISALLOWED nodes still route the expansion — their edges are what
       * keep the graph connected — but never enter the result heap, so
       * they are excluded from every result list. With the default
       * always-true filter the control flow is identical to the unfiltered
-      * beam (same admissions, same terminations, same results). */
-    private[operators] def searchBeam(q: Array[Float], ef: Int,
-        allowed: Int => Boolean = _ => true): IndexedSeq[(Double, Int)] =
-      searchBeamWith(i => dist(q, i), ef, allowed)
-
-    /** The beam core, parameterized by the node-distance function — the
-      * cosine path ([[searchBeam]]) and the binary-quantized Hamming
-      * path ([[KnnHnsw.searchBq]]) share identical control flow. */
-    private[operators] def searchBeamWith(distFn: Int => Double, ef: Int,
+      * beam (same admissions, same terminations, same results).
+      *
+      * Parameterized by the node-distance function, so the cosine path
+      * ([[searchBeam]]) and the binary-quantized Hamming path
+      * ([[KnnHnsw.searchBq]]) share identical control flow. */
+    private[graft] def searchBeamWith(distFn: Int => Double, ef: Int,
         allowed: Int => Boolean = _ => true): IndexedSeq[(Double, Int)] = {
-      if (ids.isEmpty) return IndexedSeq.empty
-      // priority = (distance, id); candidates pop NEAREST first, results
-      // track the WORST kept entry on top. Ordering includes the id so
-      // ties (exact duplicate vectors) break identically every run.
-      val byFar = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-        .on[(Double, Int)] { case (d, i) => (d, ids(i)) }
-      val candidates = mutable.PriorityQueue.empty[(Double, Int)](byFar.reverse)
-      val results = mutable.PriorityQueue.empty[(Double, Int)](byFar)
-      val visited = new java.util.HashSet[Int]
+      if (n == 0) return IndexedSeq.empty
+      if (visited.length < n) visited = new Array[Int](ids.length)
+      if (stamp == Int.MaxValue) { java.util.Arrays.fill(visited, 0); stamp = 0 }
+      stamp += 1
+      candidates.size = 0; results.size = 0
       val d0 = distFn(0)
-      visited.add(0); candidates.enqueue((d0, 0))
-      if (allowed(0)) results.enqueue((d0, 0))
-      while (candidates.nonEmpty &&
-             !(results.size >= ef && byFar.gt(candidates.head, results.head))) {
-        val (_, c) = candidates.dequeue()
+      visited(0) = stamp; candidates.push(d0, 0)
+      if (allowed(0)) results.push(d0, 0)
+      while (candidates.size > 0 && !(results.size >= ef &&
+          compare(candidates.topDist, candidates.topNode,
+            results.topDist, results.topNode) > 0)) {
+        val c = candidates.topNode
+        candidates.pop()
         val nbs = adj(c)
         var i = 0
-        while (i < nbs.length) {
+        while (i < deg(c)) {
           val nb = nbs(i)
-          if (visited.add(nb)) {
+          if (visited(nb) != stamp) {
+            visited(nb) = stamp
             val d = distFn(nb)
-            if (results.size < ef || byFar.lt((d, nb), results.head)) {
-              candidates.enqueue((d, nb))
+            if (results.size < ef ||
+                compare(d, nb, results.topDist, results.topNode) < 0) {
+              candidates.push(d, nb)
               if (allowed(nb)) {
-                results.enqueue((d, nb))
-                if (results.size > ef) results.dequeue()
+                results.push(d, nb)
+                if (results.size > ef) results.pop()
               }
             }
           }
           i += 1
         }
       }
-      results.dequeueAll.reverse.toIndexedSeq
+      val out = new Array[(Double, Int)](results.size)
+      var j = out.length - 1
+      while (j >= 0) {
+        out(j) = (results.topDist, results.topNode); results.pop(); j -= 1
+      }
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
     }
 
     /** NSW insert: beam-find efConstruction closest, link to the m
       * nearest bidirectionally, cap any over-degree neighbor at mMax
-      * closest (its own distances, id tiebreak). */
-    private[operators] def insert(id: Long, vec: Array[Float]): Unit = {
-      val idx = ids.length
-      ids += id; vecs += vec; adj += Array.emptyIntArray
-      if (idx == 0) return
-      val near = searchBeam(vec, efConstruction).take(m).map(_._2).toArray
-      adj(idx) = near
-      near.foreach { nb =>
-        val grown = adj(nb) :+ idx
-        adj(nb) =
-          if (grown.length <= mMax) grown
-          else grown
-            .map(x => (cosineDist(vecs(nb), vecs(x)), x))
-            .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
-              .on[(Double, Int)] { case (d, i) => (d, i) })
-            .take(mMax).map(_._2)
+      * closest (its own distances, local-index tiebreak). */
+    private[graft] def insert(id: Long, vec: Array[Float]): Unit = {
+      if (n == ids.length) {
+        ids = java.util.Arrays.copyOf(ids, 2 * n)
+        vecs = java.util.Arrays.copyOf(vecs, 2 * n)
+        adj = java.util.Arrays.copyOf(adj, 2 * n)
+        deg = java.util.Arrays.copyOf(deg, 2 * n)
       }
+      val idx = n
+      ids(idx) = id; vecs(idx) = vec; adj(idx) = new Array[Int](mMax + 1)
+      n += 1
+      if (idx == 0) return
+      val near = searchBeam(vec, efConstruction)
+      deg(idx) = math.min(m, near.length)
+      var j = 0
+      while (j < deg(idx)) {
+        val nb = near(j)._2
+        adj(idx)(j) = nb
+        adj(nb)(deg(nb)) = idx
+        deg(nb) += 1
+        if (deg(nb) > mMax) prune(nb)
+        j += 1
+      }
+    }
+
+    /** Keep node `nb`'s mMax closest out-edges, ordered by (distance from
+      * `nb`, local index): an insertion sort of its mMax + 1 entries. */
+    private def prune(nb: Int): Unit = {
+      val xs = adj(nb)
+      val ds = Array.tabulate(deg(nb))(k => cosineDist(vecs(nb), vecs(xs(k))))
+      var k = 1
+      while (k < ds.length) {
+        val d = ds(k); val x = xs(k)
+        var p = k - 1
+        while (p >= 0 && {
+            val c = java.lang.Double.compare(ds(p), d)
+            c > 0 || (c == 0 && xs(p) > x)
+          }) {
+          ds(p + 1) = ds(p); xs(p + 1) = xs(p); p -= 1
+        }
+        ds(p + 1) = d; xs(p + 1) = x
+        k += 1
+      }
+      deg(nb) = mMax
     }
   }
 
   /** A served graph row: (shard, local_idx, vec_id, embedding, neighbor_idx, deleted). */
-  private[operators] type ShardRow = (Int, Int, Long, Array[Float], Array[Int], Boolean)
+  private[graft] type ShardRow = (Int, Int, Long, Array[Float], Array[Int], Boolean)
 
   /** Same arithmetic as the codegen'd CosineSim kernel (double
     * accumulators over float reads, same loop order) so JVM-side scores
     * match the Catalyst exact twin's bit-for-bit. */
-  private[operators] def cosineDist(a: Array[Float], b: Array[Float]): Double = {
+  private[graft] def cosineDist(a: Array[Float], b: Array[Float]): Double = {
     val n = math.min(a.length, b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
@@ -176,8 +282,10 @@ object KnnHnsw {
     val shard = sorted.head._1
     val g = new NswGraph(m, efConstruction)
     sorted.foreach { case (_, id, vec) => g.insert(id, vec) }
-    (0 until g.ids.length).iterator.map { i =>
-      (shard, i, g.ids(i), g.vecs(i), g.adj(i).sorted)
+    (0 until g.size).iterator.map { i =>
+      val nbs = g.neighbors(i)
+      java.util.Arrays.sort(nbs)
+      (shard, i, g.id(i), g.vec(i), nbs)
     }
   }
 
@@ -212,13 +320,49 @@ object KnnHnsw {
   def save(graph: DataFrame, path: String): Unit =
     Scale.dumpPartitionedBy(graph, path, "shard")
 
+  /** Read a [[save]]d graph. The schema comes from one data file's
+    * footer, read here on the driver: left to Spark, the read infers it
+    * with a one-task job on every call, which a serve batch would pay. */
   def load(spark: SparkSession, path: String): DataFrame =
-    restoreColumns(Scale.loadPartitioned(spark, path))
+    restoreColumns(savedSchema(spark, path).fold(spark.read)(spark.read.schema)
+      .parquet(path))
+
+  /** The data schema Spark stamped into a data file's footer. Spark's
+    * own inference also reads just one file: every file of a saved
+    * graph shares one schema (the rewrites keep or drop `deleted` for
+    * the whole table), and the first path by name makes the pick
+    * stable. None when there is no data file or no stamp: the plain
+    * read then infers, or fails as it always has. */
+  private def savedSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val root = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
+    // plain listStatus: the located listing reads each local file's
+    // permissions, which forks a process per file
+    def firstDataFile(dir: Path): Option[Path] =
+      fs.listStatus(dir).sortBy(_.getPath.getName).iterator
+        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+        .flatMap(f => if (f.isDirectory) firstDataFile(f.getPath)
+                      else Some(f.getPath).filter(_.getName.endsWith(".parquet")))
+        .nextOption()
+    (if (fs.exists(root)) firstDataFile(root) else None).flatMap { f =>
+      // the footer alone: opening a full reader costs ~25× as much
+      val file = HadoopInputFile.fromPath(f, conf)
+      val in = file.newStream()
+      val footer = try ParquetFileReader.readFooter(file, HadoopReadOptions.builder(conf)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build(), in)
+        finally in.close()
+      Option(footer.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+    }
+  }
 
   /** The schema restoration shared by [[load]] and [[loadVersioned]]. */
-  private def restoreColumns(raw: DataFrame): DataFrame = {
-    // partition-column reads widen shard to long and append it last;
-    // restore the written schema so load is a true inverse of save
+  private[graft] def restoreColumns(raw: DataFrame): DataFrame = {
+    // a partitioned read appends shard last, typed by inference (int in
+    // Spark 4.1.2); restore the written order and types so load is a
+    // true inverse of save
     val base = Seq(col("shard").cast("int").as("shard"),
       col("local_idx").cast("int").as("local_idx"),
       col("vec_id"), col("embedding"),
@@ -320,10 +464,10 @@ object KnnHnsw {
         // overwrite leaves its stale directory in place; drop it explicitly
         val emptied = touched.filterNot(shardsOf(live, numShards).toSet)
         if (emptied.nonEmpty) {
-          val root = new org.apache.hadoop.fs.Path(path)
+          val root = new Path(path)
           val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
           emptied.foreach { sh =>
-            fs.delete(new org.apache.hadoop.fs.Path(root, s"shard=$sh"), true): Unit
+            fs.delete(new Path(root, s"shard=$sh"), true): Unit
           }
         }
       }
@@ -479,9 +623,16 @@ object KnnHnsw {
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val delCol =
       if (graph.columns.contains("deleted")) col("deleted") else lit(false)
+    // a file read types both arrays as containsNull (every file-source
+    // field is nullable), which makes the decode box each element; graph
+    // rows come from [[build]], whose encoder rejects null elements, so
+    // the tag holds and the decode is one primitive array copy
+    def noNullElements(c: String) =
+      GraftColumnBridge.column(KnownNotContainsNull(GraftColumnBridge.expression(col(c))))
+        .as(c)
     graph
-      .select(col("shard"), col("local_idx"), col("vec_id"), col("embedding"),
-        col("neighbor_idx"), delCol.as("deleted"))
+      .select(col("shard"), col("local_idx"), col("vec_id"), noNullElements("embedding"),
+        noNullElements("neighbor_idx"), delCol.as("deleted"))
       .as[ShardRow]
       // shards are whole within a hash partition; a partition may hold
       // several, so restore each shard's graph separately
@@ -510,7 +661,7 @@ object KnnHnsw {
       qs: Array[(Long, Array[Float])], k: Int, ef: Int): Iterator[(Long, Long, Double)] =
     qs.iterator.flatMap { case (qid, qvec) =>
       g.searchBeam(qvec, ef, allowed).take(k).map { case (d, i) =>
-        (qid, g.ids(i), roundHalfUp4(d))
+        (qid, g.id(i), roundHalfUp4(d))
       }
     }
 
@@ -563,7 +714,7 @@ object KnnHnsw {
       words
     }
     val scored = serveShards(graph, queries, queryId, queryVec) { (g, allowed, qs) =>
-      val codes = g.vecs.map(pack)
+      val codes = Array.tabulate(g.size)(j => pack(g.vec(j)))
       qs.iterator.flatMap { case (qid, qvec) =>
         val qcode = pack(qvec)
         def hamming(j: Int): Double = {
@@ -576,11 +727,11 @@ object KnnHnsw {
         }
         val pool = g.searchBeamWith(hamming, ef, allowed)
         // exact-cosine rerank of the Hamming-routed pool, id tiebreak
-        pool.map { case (_, j) => (cosineDist(qvec, g.vecs(j)), j) }
+        pool.map { case (_, j) => (cosineDist(qvec, g.vec(j)), j) }
           .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-            .on[(Double, Int)] { case (d, j) => (d, g.ids(j)) })
+            .on[(Double, Int)] { case (d, j) => (d, g.id(j)) })
           .take(k)
-          .map { case (d, j) => (qid, g.ids(j), roundHalfUp4(d)) }
+          .map { case (d, j) => (qid, g.id(j), roundHalfUp4(d)) }
       }
     }.toDF("query_id", "match_id", "score")
     KnnTopK.boundedTopK(scored, k, asc = true)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import scala.collection.mutable
 
@@ -15,7 +14,7 @@ import graft.operators.Versioned
 class ChangeFeedSourceSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_cfs_spec").toString
+    tempDir("graft_cfs_spec")
 
   private def docs(n: Int = 60) = {
     import spark.implicits._

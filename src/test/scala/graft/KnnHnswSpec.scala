@@ -2,9 +2,78 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.operators.{KnnHnsw, KnnTopK}
 import graft.sources.Tables
+
+/** The NSW kernel as it stood before its bookkeeping went primitive
+  * (boxed tuple priority queues, a hash set of visited nodes, a copied
+  * adjacency array per reverse edge): the reference the primitive kernel
+  * must match bit for bit. */
+private final class ReferenceNsw(m: Int, efConstruction: Int) {
+  private val mMax = 2 * m
+  val ids = new mutable.ArrayBuffer[Long]
+  val vecs = new mutable.ArrayBuffer[Array[Float]]
+  val adj = new mutable.ArrayBuffer[Array[Int]]
+
+  def searchBeam(q: Array[Float], ef: Int,
+      allowed: Int => Boolean = _ => true): IndexedSeq[(Double, Int)] =
+    searchBeamWith(i => KnnHnsw.cosineDist(q, vecs(i)), ef, allowed)
+
+  def searchBeamWith(distFn: Int => Double, ef: Int,
+      allowed: Int => Boolean = _ => true): IndexedSeq[(Double, Int)] = {
+    if (ids.isEmpty) return IndexedSeq.empty
+    val byFar = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+      .on[(Double, Int)] { case (d, i) => (d, ids(i)) }
+    val candidates = mutable.PriorityQueue.empty[(Double, Int)](byFar.reverse)
+    val results = mutable.PriorityQueue.empty[(Double, Int)](byFar)
+    val visited = new java.util.HashSet[Int]
+    val d0 = distFn(0)
+    visited.add(0); candidates.enqueue((d0, 0))
+    if (allowed(0)) results.enqueue((d0, 0))
+    while (candidates.nonEmpty &&
+           !(results.size >= ef && byFar.gt(candidates.head, results.head))) {
+      val (_, c) = candidates.dequeue()
+      val nbs = adj(c)
+      var i = 0
+      while (i < nbs.length) {
+        val nb = nbs(i)
+        if (visited.add(nb)) {
+          val d = distFn(nb)
+          if (results.size < ef || byFar.lt((d, nb), results.head)) {
+            candidates.enqueue((d, nb))
+            if (allowed(nb)) {
+              results.enqueue((d, nb))
+              if (results.size > ef) results.dequeue()
+            }
+          }
+        }
+        i += 1
+      }
+    }
+    results.dequeueAll.reverse.toIndexedSeq
+  }
+
+  def insert(id: Long, vec: Array[Float]): Unit = {
+    val idx = ids.length
+    ids += id; vecs += vec; adj += Array.emptyIntArray
+    if (idx == 0) return
+    val near = searchBeam(vec, efConstruction).take(m).map(_._2).toArray
+    adj(idx) = near
+    near.foreach { nb =>
+      val grown = adj(nb) :+ idx
+      adj(nb) =
+        if (grown.length <= mMax) grown
+        else grown
+          .map(x => (KnnHnsw.cosineDist(vecs(nb), vecs(x)), x))
+          .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+            .on[(Double, Int)] { case (d, i) => (d, i) })
+          .take(mMax).map(_._2)
+    }
+  }
+}
 
 /** The sharded-NSW contract: deterministic build, connected shard
   * graphs, exact results at exhaustive beam width, useful recall at
@@ -221,7 +290,7 @@ class KnnHnswSpec extends SparkSuite {
 
   test("upsert into a tombstoned graph keeps survivor flags and revives upserted ids") {
     import graft.operators.Versioned
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hnsw_upsert_dead").toString
+    val tmp = tempDir("graft_hnsw_upsert_dead")
     val n = corpus.count().toInt
     val deleted = corpus.select(col("vec_id")).filter(col("vec_id") % 5 === 0)
     // re-upsert half of the tombstoned ids; the other half stay dead
@@ -275,7 +344,7 @@ class KnnHnswSpec extends SparkSuite {
 
   test("versioned graph: commits linearize, appendTo == scratch, lifecycle closed") {
     import graft.operators.Versioned
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_ver").toString + "/g"
+    val path = tempDir("graft_hnsw_ver") + "/g"
     val base = corpus.filter(col("vec_id") % 3 =!= 0)
     val delta = corpus.filter(col("vec_id") % 3 === 0)
     assert(KnnHnsw.saveVersioned(KnnHnsw.build(base, numShards = 4), path, 4) === 0)
@@ -301,6 +370,73 @@ class KnnHnswSpec extends SparkSuite {
     assert(structureOf(compacted.drop("deleted")) ===
       structureOf(KnnHnsw.build(live, numShards = 4)))
     assert(Versioned.versions(spark, path) === Seq(0, 1, 2, 3))
+  }
+
+  test("primitive beam kernel matches the reference kernel bit for bit") {
+    // 400 × dim 16 with every 5th vector an exact copy of an earlier one
+    // (distance ties), ids out of insertion order (the beam breaks ties
+    // by id, the prune by local index) and every 7th node tombstoned
+    val rnd = new scala.util.Random(20261019L)
+    val vecs = new mutable.ArrayBuffer[Array[Float]]
+    (0 until 400).foreach { i =>
+      vecs += (if (i % 5 == 4) vecs(rnd.nextInt(i))
+               else Array.fill(16)(rnd.nextGaussian().toFloat))
+    }
+    val ids = (0 until 400).map(i => (i * 7919L) % 1009L)
+    val queries = (0 until 20).map(i => if (i % 2 == 0) vecs(i * 13)
+      else Array.fill(16)(rnd.nextGaussian().toFloat))
+    val dead: Int => Boolean = _ % 7 == 3
+    def pack(v: Array[Float]): Array[Long] = {
+      val w = new Array[Long](1)
+      v.indices.foreach(i => if (v(i) > 0f) w(0) |= 1L << i)
+      w
+    }
+    val codes = vecs.map(pack)
+    def hamming(q: Array[Float]): Int => Double = {
+      val c = pack(q)(0)
+      j => java.lang.Long.bitCount(c ^ codes(j)(0)).toDouble
+    }
+    Seq(4 -> 24, 8 -> 64).foreach { case (m, efc) =>
+      val ref = new ReferenceNsw(m, efc)
+      val g = new KnnHnsw.NswGraph(m, efc)
+      ids.indices.foreach { i => ref.insert(ids(i), vecs(i)); g.insert(ids(i), vecs(i)) }
+      assert(g.size === ref.ids.length)
+      ids.indices.foreach { i =>
+        assert(g.neighbors(i).toSeq === ref.adj(i).toSeq, s"m=$m node $i adjacency")
+      }
+      for (ef <- Seq(1, 5, 50); q <- queries; filter <- Seq[Int => Boolean](_ => true, i => !dead(i))) {
+        assert(g.searchBeam(q, ef, filter) === ref.searchBeam(q, ef, filter), s"m=$m ef=$ef cosine")
+        assert(g.searchBeamWith(hamming(q), ef, filter) ===
+          ref.searchBeamWith(hamming(q), ef, filter), s"m=$m ef=$ef hamming")
+      }
+    }
+  }
+
+  test("load starts no Spark job and restores the schema of a plain read") {
+    val root = tempDir("graft_hnsw_load")
+    val plain = s"$root/plain"
+    val tombstoned = s"$root/tombstoned"
+    KnnHnsw.save(graph, plain)
+    KnnHnsw.save(KnnHnsw.markDeleted(graph,
+      corpus.select(col("vec_id")).filter(col("vec_id") % 3 === 0)), tombstoned)
+    Seq(plain, tombstoned).foreach { path =>
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+      }
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val loaded = try KnnHnsw.load(spark, path) finally {
+        ListenerBusDrain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(jobs.get === 0, path)
+      val inferred = KnnHnsw.restoreColumns(spark.read.parquet(path))
+      assert(loaded.schema === inferred.schema, path)
+      assert(loaded.columns.contains("deleted") === (path == tombstoned))
+      assert(loaded.exceptAll(inferred).count() === 0 &&
+        inferred.exceptAll(loaded).count() === 0, path)
+    }
   }
 
   private def sfKey: String =

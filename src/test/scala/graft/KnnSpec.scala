@@ -74,7 +74,7 @@ class KnnSpec extends SparkSuite {
   }
 
   test("IVF tombstones: marked ids vanish from load, serve stays exact on the live corpus") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
+    val path = tempDir("graft_ivf_del")
     KnnIvf.save(KnnIvf.build(corpus, numCells = 8), path)
     val dels = corpus.select("vec_id").filter(col("vec_id") % 3 === 0)
     KnnIvf.markDeletedSaved(spark, path, dels)
@@ -99,7 +99,7 @@ class KnnSpec extends SparkSuite {
   }
 
   test("IVF compact folds tombstones in: same serve, tombstone table cleared, emptied cells dropped") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_cmp").toString
+    val path = tempDir("graft_ivf_cmp")
     KnnIvf.save(KnnIvf.build(corpus, numCells = 8), path)
     // delete a scatter of ids PLUS one whole cell, so compact must both
     // rewrite touched cells and drop a fully-emptied directory
@@ -135,7 +135,7 @@ class KnnSpec extends SparkSuite {
   }
 
   test("IVF refresh refits the layout on the live corpus and subsumes compact") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_rf").toString
+    val path = tempDir("graft_ivf_rf")
     KnnIvf.save(KnnIvf.build(corpus, numCells = 4), path)
     KnnIvf.appendTo(spark, path,
       corpus.withColumn("vec_id", col("vec_id") + 10000000L))
@@ -166,7 +166,7 @@ class KnnSpec extends SparkSuite {
   }
 
   test("IVF save/load round-trips: loaded searchPruned == in-memory search") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
+    val path = tempDir("graft_ivf_spec")
     val idx = KnnIvf.build(corpus, numCells = 8)
     KnnIvf.save(idx, path)
     val loaded = KnnIvf.load(spark, path)
@@ -216,7 +216,7 @@ class KnnSpec extends SparkSuite {
   }
 
   test("BQ search over a persisted encoded layout scans codes only (no float read)") {
-    val path = java.nio.file.Files.createTempDirectory("graft_bq_spec").toString
+    val path = tempDir("graft_bq_spec")
     Quantize.bqEncodeCorpus(corpus).write.mode("overwrite").parquet(path)
     val persisted = spark.read.parquet(path)
     val viaCodes = Quantize.bqSearch(queries, persisted, k = 5)
@@ -298,7 +298,7 @@ class KnnSpec extends SparkSuite {
   }
 
   test("loaded IVF probe is a partition-pruned scan (PartitionFilters, not full read)") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_spec2").toString
+    val path = tempDir("graft_ivf_spec2")
     KnnIvf.save(KnnIvf.build(corpus, numCells = 8), path)
     val loaded = KnnIvf.load(spark, path)
     val plan = KnnIvf.searchPruned(loaded, queries, k = 5, nProbe = 2)
@@ -334,7 +334,7 @@ class KnnSpec extends SparkSuite {
 
   test("IVF appendTo grows a saved index; loaded search sees the new rows") {
     import graft.operators.KnnIvf
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val path = tempDir("graft_ivf_app")
     val half1 = corpus.filter(col("vec_id") % 2 === 0)
     val half2 = corpus.filter(col("vec_id") % 2 === 1)
     val idx = KnnIvf.build(half1, numCells = 8)
@@ -351,7 +351,7 @@ class KnnSpec extends SparkSuite {
 
   test("versioned IVF: ingest commits linearize, racing disjoint-cell appends both land") {
     import graft.operators.Versioned
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_ver").toString
+    val path = tempDir("graft_ivf_ver")
     val half1 = corpus.filter(col("vec_id") % 2 === 0)
     val half2 = corpus.filter(col("vec_id") % 2 === 1)
     val idx = KnnIvf.build(half1, numCells = 8)
@@ -407,7 +407,7 @@ class KnnSpec extends SparkSuite {
 
   test("versioned IVF: delete folds as a commit; compact racing an append refuses typed") {
     import graft.operators.Versioned
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_ver_del").toString
+    val path = tempDir("graft_ivf_ver_del")
     KnnIvf.saveVersioned(KnnIvf.build(corpus, numCells = 8), path)
     val doomed = corpus.filter(col("vec_id") % 7 === 0).select("vec_id")
     KnnIvf.deleteVersioned(spark, path, doomed)
@@ -453,7 +453,7 @@ class KnnSpec extends SparkSuite {
     // reclaims pre-compact history, time travel past retention is the
     // TYPED error (never a raw missing-parquet read), and the retained
     // index serves bit-identically to its pre-vacuum self
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_ver_vac").toString
+    val path = tempDir("graft_ivf_ver_vac")
     KnnIvf.saveVersioned(KnnIvf.build(corpus, numCells = 8), path) // v0
     val delta = corpus.select((col("vec_id") + 6000000L).as("vec_id"),
       col("embedding"), col("label")).filter(col("vec_id") % 4 === 1)
@@ -679,7 +679,7 @@ class KnnSpec extends SparkSuite {
   }
 
   test("IVF appendTo is last-wins: replayed batches never duplicate ids") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_lw").toString
+    val path = tempDir("graft_ivf_lw")
     KnnIvf.save(KnnIvf.build(corpus, numCells = 4), path)
     val delta = corpus.withColumn("vec_id", col("vec_id") + 10000000L)
     KnnIvf.appendTo(spark, path, delta)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
@@ -28,7 +27,7 @@ class ParquetStageSpec extends SparkSuite {
       Row(3L, "gamma", -0.25, Seq.empty[Float], java.sql.Timestamp.valueOf("1969-12-31 23:59:59.0"), true))
     val toInternal = ExpressionEncoder(RowEncoder.encoderFor(schema)).createSerializer()
 
-    val dir = Files.createTempDirectory("graft_pq_stage").toString
+    val dir = tempDir("graft_pq_stage")
     val file = s"$dir/staged-0.parquet"
     val w = ParquetStage.open(file, schema,
       spark.sparkContext.hadoopConfiguration)

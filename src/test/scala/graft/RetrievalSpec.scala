@@ -222,7 +222,7 @@ class RetrievalSpec extends SparkSuite {
   }
 
   test("index-served bm25 equals the scan path exactly; postings read is bucket-pruned") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_idx").toString
+    val dir = tempDir("graft_bm25_idx")
     val corpus = docs.select("doc_id", "text")
     Retrieval.buildBm25Index(corpus, dir, numBuckets = 8)
     val terms = Seq("dup", "spark", "window")
@@ -241,8 +241,8 @@ class RetrievalSpec extends SparkSuite {
     val corpus = docs.select("doc_id", "text")
     val h1 = corpus.filter(col("doc_id") % 2 === 0)
     val h2 = corpus.filter(col("doc_id") % 2 =!= 0)
-    val dirA = java.nio.file.Files.createTempDirectory("graft_bm25_app").toString
-    val dirF = java.nio.file.Files.createTempDirectory("graft_bm25_full").toString
+    val dirA = tempDir("graft_bm25_app")
+    val dirF = tempDir("graft_bm25_full")
     Retrieval.buildBm25Index(h1, dirA, numBuckets = 8)
     Retrieval.appendToBm25Index(h2, dirA)
     Retrieval.buildBm25Index(corpus, dirF, numBuckets = 8)
@@ -262,7 +262,7 @@ class RetrievalSpec extends SparkSuite {
   }
 
   test("bm25 index: single-term query equals scan; rebuild (overwrite) is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_idx2").toString
+    val dir = tempDir("graft_bm25_idx2")
     val corpus = docs.select("doc_id", "text")
     Retrieval.buildBm25Index(corpus, dir, numBuckets = 4)
     Retrieval.buildBm25Index(corpus, dir, numBuckets = 4) // overwrite, same result

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.{KnnIvf, Scale}
 import graft.sources.Tables
@@ -8,7 +7,7 @@ import graft.sources.Tables
 class ScaleSpec extends SparkSuite {
 
   test("partitioned corpus layout prunes partitions on the probe filter") {
-    val path = Files.createTempDirectory("graft_part").toString + "/corpus"
+    val path = tempDir("graft_part") + "/corpus"
     val emb = Tables.embeddings(spark, sfDir)
     Scale.dumpPartitionedBy(emb, path, "label")
     val pruned = Scale.loadPartitioned(spark, path).filter(col("label") === 3)
@@ -19,7 +18,7 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("IVF cells as partition columns: probe reads only matching cells") {
-    val path = Files.createTempDirectory("graft_ivf").toString + "/corpus"
+    val path = tempDir("graft_ivf") + "/corpus"
     val index = KnnIvf.build(Tables.embeddings(spark, sfDir), numCells = 8)
     Scale.dumpPartitionedBy(index.corpusWithCell, path, "cell")
     val probe = Scale.loadPartitioned(spark, path).filter(col("cell").isin(1, 3))
@@ -29,7 +28,7 @@ class ScaleSpec extends SparkSuite {
 
   test("dynamic partition pruning: fact partitions pruned by the dim-side filter") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_dpp").toString + "/corpus"
+    val path = tempDir("graft_dpp") + "/corpus"
     Scale.dumpPartitionedBy(Tables.embeddings(spark, sfDir), path, "label")
     val fact = Scale.loadPartitioned(spark, path)
     // selective dim: only labels 2 and 5 survive its filter — at plan
@@ -38,7 +37,7 @@ class ScaleSpec extends SparkSuite {
     // FILE source with a live Filter node: a LocalRelation constant-
     // folds the predicate away and the DPP heuristic sees no selective
     // side to prune with.
-    val dimPath = Files.createTempDirectory("graft_dpp_dim").toString + "/dim"
+    val dimPath = tempDir("graft_dpp_dim") + "/dim"
     Seq((2, "keep"), (5, "keep"), (991, "ghost")).toDF("label", "tag")
       .write.parquet(dimPath)
     val dim = spark.read.parquet(dimPath).filter(col("tag") === "keep")
@@ -51,7 +50,7 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("bucketed tables join without an exchange (co-located join)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh")
     val emb = Tables.embeddings(spark, sfDir)
     emb.write.mode("overwrite").bucketBy(8, "vec_id").sortBy("vec_id")
       .option("path", s"$wh/emb_bucketed").saveAsTable("emb_bucketed")
@@ -73,7 +72,7 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("range-sorted layout: disjoint file ranges, faithful contents") {
-    val path = Files.createTempDirectory("graft_rs").toString + "/events"
+    val path = tempDir("graft_rs") + "/events"
     val ev = Tables.events(spark, sfDir)
     Scale.dumpRangeSorted(ev, path, "ts", numRanges = 4)
     val back = spark.read.parquet(path)
@@ -114,7 +113,7 @@ class ScaleSpec extends SparkSuite {
 
   test("z-order layout: content identical, and file boxes prune a user probe the ts-sort cannot") {
     val events = Tables.events(spark, sfDir)
-    val base = Files.createTempDirectory("graft_zorder_spec").toString
+    val base = tempDir("graft_zorder_spec")
     Scale.dumpZOrdered(events, s"$base/z", col("user_id"), unix_micros(col("ts")),
       numRanges = 16)
     Scale.dumpRangeSorted(events, s"$base/ts", "ts", numRanges = 16)
@@ -216,7 +215,7 @@ class ScaleSpec extends SparkSuite {
     val rows = (0L until 4096L)
       .map(i => ((i * 13) % 64, (i * 7) % 1024, ((i * 31) % 256).toDouble))
       .toDF("u", "t", "value")
-    val base = Files.createTempDirectory("graft_zorder3d_spec").toString
+    val base = tempDir("graft_zorder3d_spec")
     Scale.dumpZOrderedK(rows, s"$base/z3",
       Seq(col("u"), col("t"), col("value")), numRanges = 16)
     Scale.dumpZOrdered(rows, s"$base/z2", col("u"), col("t"), numRanges = 16)
@@ -252,7 +251,7 @@ class ScaleSpec extends SparkSuite {
     // uniform by construction and the same probe skips files
     val events = Tables.events(spark, sfDir)
       .select("ts", "user_id", "event_type", "value")
-    val base = Files.createTempDirectory("graft_zorder_q_spec").toString
+    val base = tempDir("graft_zorder_q_spec")
     Scale.dumpZOrderedK(events, s"$base/lin",
       Seq(col("user_id"), unix_micros(col("ts")), col("value")), numRanges = 16)
     val vq = Scale.quantileBucket(events, col("value"), 256)
@@ -281,7 +280,7 @@ class ScaleSpec extends SparkSuite {
   test("compactSmallFiles: identical rows, collapsed file count, idempotent, no leftovers") {
     import graft.operators.Maintenance
     val docs = Tables.documents(spark, sfDir).select("doc_id", "lang", "text")
-    val path = Files.createTempDirectory("graft_compact_spec").toString + "/docs"
+    val path = tempDir("graft_compact_spec") + "/docs"
     docs.repartition(32).write.mode("overwrite").parquet(path)
 
     val s1 = Maintenance.compactSmallFiles(spark, path, targetBytes = 8L << 20)

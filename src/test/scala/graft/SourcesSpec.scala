@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.{Knn, Lifecycle, Traversal}
 import graft.sources.Tables
@@ -8,7 +7,7 @@ import graft.sources.Tables
 class SourcesSpec extends SparkSuite {
 
   test("dump/load round-trips the corpus exactly (O14/O17)") {
-    val path = Files.createTempDirectory("graft_dump").toString + "/corpus"
+    val path = tempDir("graft_dump") + "/corpus"
     val corpus = Tables.embeddings(spark, sfDir)
     Lifecycle.dump(corpus, path)
     val back = Lifecycle.load(spark, path)
@@ -27,7 +26,7 @@ class SourcesSpec extends SparkSuite {
   test("csv and json sinks/sources round-trip scalar tables") {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "lang", "n_chars")
     for (fmt <- Seq("csv", "json")) {
-      val path = Files.createTempDirectory(s"graft_$fmt").toString + s"/docs_$fmt"
+      val path = tempDir(s"graft_$fmt") + s"/docs_$fmt"
       docs.write.mode("overwrite").option("header", "true").format(fmt).save(path)
       val back = spark.read.option("header", "true").option("inferSchema", "true")
         .format(fmt).load(path)
@@ -46,7 +45,7 @@ class SourcesSpec extends SparkSuite {
       (4L, "d", ""), // empty string (CSV's classic empty-vs-null trap)
       (5L, "e", "plain")
     ).toDF("doc_id", "lang", "text")
-    val base = Files.createTempDirectory("graft_textsrc").toString
+    val base = tempDir("graft_textsrc")
     val j = graft.sources.TextSources.jsonlRoundTrip(hostile, s"$base/jsonl")
     assert(j.exceptAll(hostile).unionAll(hostile.exceptAll(j)).count() === 0,
       "jsonl round-trip drift")
@@ -67,14 +66,14 @@ class SourcesSpec extends SparkSuite {
     import spark.implicits._
     val plain = Seq((1L, "x", "no newlines here"), (2L, "y", "none, \"but\" quotes"))
       .toDF("doc_id", "lang", "text")
-    val path = Files.createTempDirectory("graft_csv1l").toString + "/csv"
+    val path = tempDir("graft_csv1l") + "/csv"
     val back = graft.sources.TextSources.csvRoundTrip(plain, path, multiLine = false)
     assert(back.exceptAll(plain).unionAll(plain.exceptAll(back)).count() === 0)
   }
 
   test("orc sink/source round-trips the full embeddings table (nested arrays)") {
     val emb = Tables.embeddings(spark, sfDir)
-    val path = Files.createTempDirectory("graft_orc").toString + "/emb_orc"
+    val path = tempDir("graft_orc") + "/emb_orc"
     emb.write.mode("overwrite").orc(path)
     val back = spark.read.orc(path)
     assert(back.schema === emb.schema)
@@ -99,7 +98,7 @@ class SourcesSpec extends SparkSuite {
     val canonical = Tables.events(spark, sfDir)
     assert(canonical.schema("ts").dataType === TimestampType)
     val want = canonical.agg(sum(unix_timestamp(col("ts"))), count(lit(1))).head()
-    val base = Files.createTempDirectory("graft_tsdrift").toString
+    val base = tempDir("graft_tsdrift")
     // (a) nanos-as-long — the pre-r9 fixture shape
     canonical.withColumn("ts", expr("unix_micros(ts) * 1000"))
       .write.parquet(s"$base/ns/events.parquet")
@@ -119,7 +118,7 @@ class SourcesSpec extends SparkSuite {
   test("embeddings loader conforms drifted id/element types (int32 id, double vec)") {
     import org.apache.spark.sql.types._
     val emb = Tables.embeddings(spark, sfDir)
-    val base = Files.createTempDirectory("graft_embdrift").toString
+    val base = tempDir("graft_embdrift")
     emb.select(col("vec_id").cast("int").as("vec_id"),
         col("embedding").cast("array<double>").as("embedding"), col("label"))
       .write.parquet(s"$base/embeddings.parquet")
@@ -136,7 +135,7 @@ class SourcesSpec extends SparkSuite {
   test("documents loader conforms drifted int widths (int32 doc_id / n_chars)") {
     import org.apache.spark.sql.types._
     val docs = Tables.documents(spark, sfDir)
-    val base = Files.createTempDirectory("graft_docdrift").toString
+    val base = tempDir("graft_docdrift")
     docs.withColumn("doc_id", col("doc_id").cast("int"))
       .withColumn("n_chars", col("n_chars").cast("int"))
       .write.parquet(s"$base/documents.parquet")

@@ -152,7 +152,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("foreachBatch upsert builds a last-wins corpus from the stream") {
-    val out = Files.createTempDirectory("graft_upsert").toString + "/corpus"
+    val out = tempDir("graft_upsert") + "/corpus"
     val q = EventStream.upsertEachBatch(
       EventStream.readEvents(spark, sfDir).select("event_id", "event_type"), out)
     q.awaitTermination()
@@ -163,7 +163,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("partitioned streaming upsert matches the flat one and rewrites only touched buckets") {
-    val out = Files.createTempDirectory("graft_upsert_part").toString + "/corpus"
+    val out = tempDir("graft_upsert_part") + "/corpus"
     val events = EventStream.readEvents(spark, sfDir).select("event_id", "event_type")
     EventStream.upsertEachBatchPartitioned(events, out, nBuckets = 8).awaitTermination()
     val expected = Tables.events(spark, sfDir).select("event_id").distinct().count()
@@ -180,7 +180,7 @@ class StreamingSpec extends SparkSuite {
               .foldLeft(0L)(math.max)
         }.toMap
     val before = bucketMtimes
-    val oneDir = Files.createTempDirectory("graft_one").toString + "/one"
+    val oneDir = tempDir("graft_one") + "/one"
     Tables.events(spark, sfDir).select("event_id", "event_type").limit(1)
       .coalesce(1).write.parquet(oneDir)
     val oneStream = spark.readStream
@@ -192,7 +192,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming dedup keeps one row per id across duplicated input files") {
-    val dir = Files.createTempDirectory("graft_sdedup").toString + "/in"
+    val dir = tempDir("graft_sdedup") + "/in"
     val ev = Tables.events(spark, sfDir).select("event_id", "ts", "event_type")
     ev.write.mode("append").parquet(dir)
     ev.write.mode("append").parquet(dir) // every id arrives (at least) twice
@@ -235,7 +235,7 @@ class StreamingSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val path = Files.createTempDirectory("graft_stream_ivf").toString + "/index"
+    val path = tempDir("graft_stream_ivf") + "/index"
     graft.operators.KnnIvf.save(graft.operators.KnnIvf.build(emb, numCells = 8), path)
 
     // stream in an exact copy of vector 0 under a fresh id
@@ -268,7 +268,7 @@ class StreamingSpec extends SparkSuite {
     val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
     val base = emb.filter(col("vec_id") % 2 === 0)
     val delta = emb.filter(col("vec_id") % 2 =!= 0)
-    val root = Files.createTempDirectory("graft_stream_twin").toString
+    val root = tempDir("graft_stream_twin")
     val idx = graft.operators.KnnIvf.build(base, numCells = 4)
     graft.operators.KnnIvf.save(idx, s"$root/streamed")
     graft.operators.KnnIvf.save(idx, s"$root/batched")
@@ -302,7 +302,7 @@ class StreamingSpec extends SparkSuite {
     val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
     val base = emb.filter(col("vec_id") % 2 === 0)
     val delta = emb.filter(col("vec_id") % 2 =!= 0)
-    val root = Files.createTempDirectory("graft_gstream_twin").toString
+    val root = tempDir("graft_gstream_twin")
     val g = graft.operators.KnnHnsw.build(base, numShards = 3).localCheckpoint(true)
     graft.operators.KnnHnsw.save(g, s"$root/streamed")
     graft.operators.KnnHnsw.save(g, s"$root/batched")

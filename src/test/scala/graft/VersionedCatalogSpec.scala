@@ -13,7 +13,7 @@ import graft.operators.Versioned
 class VersionedCatalogSpec extends SparkSuite {
 
   private def freshCatalog(): (String, String) = {
-    val wh = Files.createTempDirectory("graft_cat_spec").toString
+    val wh = tempDir("graft_cat_spec")
     val name = s"gc${System.nanoTime().toHexString}"
     spark.conf.set(s"spark.sql.catalog.$name",
       classOf[graft.sources.VersionedCatalog].getName)

@@ -16,7 +16,7 @@ import graft.sources.VersionedRelation
 class VersionedRelationSpec extends SparkSuite {
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft_vrel_spec").toString + "/t"
+    tempDir("graft_vrel_spec") + "/t"
 
   private def docs(n: Int = 90) = {
     import spark.implicits._

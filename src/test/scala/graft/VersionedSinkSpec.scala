@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ import graft.streaming.TableStream
 class VersionedSinkSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_vsink_spec").toString
+    tempDir("graft_vsink_spec")
 
   test("each micro-batch is one commit; checkpoint restart never redelivers") {
     implicit val sqlCtx = spark.sqlContext

@@ -7,7 +7,7 @@ import graft.operators.Versioned
 class VersionedSpec extends SparkSuite {
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft_versioned_spec").toString + "/t"
+    tempDir("graft_versioned_spec") + "/t"
 
   private def docs3(n: Int = 90) = {
     import spark.implicits._
