@@ -313,7 +313,7 @@ object KnnIvf {
     val touched = incoming.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return // empty batch: nothing to assign or rewrite
-    val surviving = spark.read.parquet(s"$path/corpus")
+    val surviving = Scale.loadPartitioned(spark, s"$path/corpus")
       .filter(col("cell").isin(touched.map(Integer.valueOf): _*))
       .join(incoming.select("vec_id"), Seq("vec_id"), "left_anti")
       .localCheckpoint(true) // read completes before its source dirs rewrite

@@ -1,7 +1,13 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Cluster-scale layout and skew utilities — the pieces that turn the
   * fixture-scale operators into 100 TB plans:
@@ -21,9 +27,45 @@ object Scale {
   def dumpPartitionedBy(corpus: DataFrame, path: String, partitionCol: String): Unit =
     corpus.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
 
-  /** Read back with partition pruning available. */
+  /** Read back with partition pruning available. The data schema comes
+    * from one data file's footer, read here on the driver: left to
+    * Spark, the read infers it with a one-task job on every call, which
+    * a serve batch would pay. Partition columns are inferred from the
+    * directory names exactly as in a plain read. */
   def loadPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    savedSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+
+  /** The data schema Spark stamped into a data file's footer. Spark's
+    * own inference also reads just one file: every file of a saved
+    * layout shares one schema (a saved HNSW graph's rewrites keep or
+    * drop `deleted` for the whole table; an IVF cell rewrite keeps the
+    * corpus columns), and the first path by name makes the pick
+    * stable. None when there is no data file or no stamp: the
+    * plain read then infers, or fails as it always has. */
+  private def savedSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val root = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
+    // plain listStatus: the located listing reads each local file's
+    // permissions, which forks a process per file
+    def firstDataFile(dir: Path): Option[Path] =
+      fs.listStatus(dir).sortBy(_.getPath.getName).iterator
+        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+        .flatMap(f => if (f.isDirectory) firstDataFile(f.getPath)
+                      else Some(f.getPath).filter(_.getName.endsWith(".parquet")))
+        .nextOption()
+    (if (fs.exists(root)) firstDataFile(root) else None).flatMap { f =>
+      // the footer alone: opening a full reader costs ~25× as much
+      val file = HadoopInputFile.fromPath(f, conf)
+      val in = file.newStream()
+      val footer = try ParquetFileReader.readFooter(file, HadoopReadOptions.builder(conf)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build(), in)
+        finally in.close()
+      Option(footer.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+    }
+  }
 
   /** Range-partitioned, sorted-within-partition layout: files carry
     * monotone, non-overlapping value ranges for `sortCol`, so parquet

@@ -231,6 +231,11 @@ object Versioned {
   private[graft] def physOf(snap: Snapshot, c: String): String =
     colMap(snap).getOrElse(c, c)
 
+  /** The LOGICAL name physical column `c` carries under the pinned
+    * snapshot — the inverse of [[physOf]]. */
+  private[graft] def logicalOf(snap: Snapshot, c: String): String =
+    colMap(snap).collectFirst { case (l, `c`) => l }.getOrElse(c)
+
   /** Scan `files` under the snapshot's PHYSICAL schema — the exact
     * on-disk column names — with no logical projection. Internal
     * machinery that writes files back (z-order maintenance, drift
@@ -841,13 +846,8 @@ object Versioned {
     val base = snapshot(s, tableDir)
     val evolved = evolvedSchemaFor(base, df) // widen-only, typed, pre-write
     requireConstraints(s, base, df, tableDir)
-    val newEntries = writeData(df, tableDir, base.version + 1,
-      statsCol.toSeq, bloomCol)
-    commitWithRebase(s, tableDir, snap =>
-      if (snap.version == base.version)
-        Some((newEntries, carriedTableMeta(base) +
-          ("schema" -> evolved.json) + ("op" -> "overwrite")))
-      else None, newEntries)
+    rewriteAll(s, base, tableDir, df, (statsCol.toSeq, bloomCol),
+      Map("schema" -> evolved.json, "op" -> "overwrite"))
   }
 
   /** SHALLOW CLONE: initialize `dstDir` as a new table whose v0
@@ -1027,10 +1027,7 @@ object Versioned {
       // scanning the logical view.
       val snap = snapshot(spark, tableDir)
       val dims = snap.meta.get("zorder.dims").filter(_.nonEmpty)
-        .map { ds =>
-          val toLogical = colMap(snap).map(_.swap)
-          ds.split(',').toSeq.map(c => toLogical.getOrElse(c, c))
-        }
+        .map(_.split(',').toSeq.map(logicalOf(snap, _)))
       Some(dims match {
         case Some(ds) =>
           val f = fs(spark, new Path(tableDir))
@@ -1614,8 +1611,9 @@ object Versioned {
     * true conflict, refuse), and races the rename. An append's data
     * files are written ONCE before the loop (their directory is
     * attempt-unique, so the retries move only manifest lines, never
-    * data). Delta/Iceberg call the same thing optimistic concurrency
-    * with conflict detection. */
+    * data); when `rebase` refuses or throws, or the retries run out,
+    * `attemptData` is discarded. Delta/Iceberg call the same thing
+    * optimistic concurrency with conflict detection. */
   private val CommitRetries = 5
   private def commitWithRebase(s: SparkSession, tableDir: String,
                                rebase: Snapshot => Option[(Seq[FileEntry], Map[String, String])],
@@ -1625,13 +1623,12 @@ object Versioned {
     var attempt = 0
     while (attempt < CommitRetries) {
       val snap = snapshot(s, tableDir)
-      val (entries, meta) = rebase(snap).getOrElse {
-        discardAttemptData(s, attemptData)
-        throw new ConcurrentWriteConflictException(
+      val (entries, meta) =
+        try rebase(snap).getOrElse(throw new ConcurrentWriteConflictException(
           s"commit to $tableDir conflicts with version ${snap.version} " +
             "committed concurrently: the interleaved commit rewrote files " +
-            "or rows this writer read — re-run against the new snapshot")
-      }
+            "or rows this writer read — re-run against the new snapshot"))
+        catch { case e: Throwable => discardAttemptData(s, attemptData); throw e }
       try return commitManifest(s, tableDir, snap.version + 1, entries, meta,
         base = Some(snap))
       catch { case e: CommitRaceLost => last = e; attempt += 1 }
@@ -1650,6 +1647,56 @@ object Versioned {
     try entries.map(e => new Path(e.path).getParent).distinct
       .foreach(d => fs(s, d).delete(d, true))
     catch { case _: Throwable => () }
+
+  /** The write-and-commit step every rewriting commit shares: write
+    * `rows` (arranged by the caller, in the column space its files
+    * store) as `base`'s next version with the given (stats columns,
+    * bloom column), then publish through [[commitWithRebase]]. `rebase`
+    * is the operation's conflict rule and commit metadata: handed the
+    * latest snapshot and the written entries, it returns the manifest
+    * to publish, or None for a true conflict. No rows = nothing to
+    * write (a delete that matched no row). */
+  private def writeAndCommit(s: SparkSession, base: Snapshot, tableDir: String,
+                             rows: Option[DataFrame],
+                             skipping: (Seq[String], Option[String]))
+                            (rebase: (Snapshot, Seq[FileEntry]) =>
+                              Option[(Seq[FileEntry], Map[String, String])]): Int = {
+    val added = rows.fold(Seq.empty[FileEntry])(
+      writeData(_, tableDir, base.version + 1, skipping._1, skipping._2))
+    commitWithRebase(s, tableDir, rebase(_, added), added)
+  }
+
+  /** A FULL rewrite (compact, z-order, overwrite): `rows` replace every
+    * file of `base`, so any interleaved commit is a true conflict and
+    * publishing is only ever over `base` itself. The fresh commit
+    * metadata is `meta` over the standing table metadata
+    * ([[carriedTableMeta]]). */
+  private def rewriteAll(s: SparkSession, base: Snapshot, tableDir: String,
+                         rows: DataFrame, skipping: (Seq[String], Option[String]),
+                         meta: Map[String, String]): Int =
+    writeAndCommit(s, base, tableDir, Some(rows), skipping) { (latest, added) =>
+      if (latest.version == base.version) Some((added, carriedTableMeta(base) ++ meta))
+      else None
+    }
+
+  /** The skipping columns a rewrite of `snap`'s rows inherits: every
+    * stats column of its entries, and their bloom column when all share
+    * one. Keyed physical as committed — or, for a RE-BASELINING rewrite
+    * (compact, z-order: physical == logical again), keyed logical, with
+    * the '__z' scaffolding dropped along with the layout it described. A
+    * column the written rows don't carry degrades in [[writeData]] to
+    * "no stats — always read". */
+  private def inheritedSkipping(snap: Snapshot, rebaseline: Boolean)
+      : (Seq[String], Option[String]) = {
+    def key(c: String) = if (rebaseline) logicalOf(snap, c) else c
+    val stats = snap.entries.flatMap(_.stats.map(_._1)).distinct
+      .filterNot(c => rebaseline && c == "__z").map(key)
+    val bloom = snap.entries.flatMap(_.bloom.map(_._1)).distinct match {
+      case Seq(c) => Some(key(c))
+      case _      => None
+    }
+    (stats, bloom)
+  }
 
   /** Append-only commit: O(delta) data write; every existing file is
     * carried into the new manifest by reference (stats included). A
@@ -1686,45 +1733,31 @@ object Versioned {
     // back with it) nor land the new rows visibly (the vector would
     // mask them) — upsert is the resurrection path.
     commitWithRebase(s, tableDir, snap => {
-      try {
-        requireNoDvOverlap(s, snap, df, tableDir)
-        // a constraint added CONCURRENTLY must gate this ingest too —
-        // re-validate only when the standing set actually changed
-        if (constraintsOf(snap) != constraintsOf(base))
-          requireConstraints(s, snap, df, tableDir)
-      } catch { case e @ (_: IllegalStateException |
-                          _: ConstraintViolationException) =>
-        discardAttemptData(s, newEntries); throw e }
+      requireNoDvOverlap(s, snap, df, tableDir)
+      // a constraint added CONCURRENTLY must gate this ingest too —
+      // re-validate only when the standing set actually changed
+      if (constraintsOf(snap) != constraintsOf(base))
+        requireConstraints(s, snap, df, tableDir)
       Some((snap.entries ++ newEntries,
         snap.meta ++ meta + ("schema" -> evolvedSchemaFor(snap, df).json)
           + ("op" -> "append")))
     }, newEntries)
   }
 
-  /** Manifest-stats pruning for copy-on-write DISCOVERY: the files that
-    * could possibly contain a delta id — files whose id-column stats
-    * box holds at least one delta id (one pass over the SMALL delta
-    * against the broadcast per-file stats table), plus every file
-    * carrying no stats on the id column (unprovable ⇒ candidate). On a
-    * clustered-id layout this turns the upsert's touched-file scan from
-    * O(table) into O(candidate files) — the difference between an
-    * upsert and a table scan at 100 TB. None = no file carries id
-    * stats (e.g. string ids, whose long-cast stats are null), caller
-    * scans everything as before. Sound by the same argument as
-    * [[filesForRange]]: a file whose stats box excludes every delta id
-    * cannot contain one. */
-  private[graft] def cowCandidateFiles(s: SparkSession, snap: Snapshot,
-                                deltaIds: DataFrame, idCol: String,
-                                physId: String): Option[Seq[String]] =
-    candidateFilesIn(s, snap.entries, deltaIds, idCol, physId)
-
-  /** Entries-level twin of [[cowCandidateFiles]] — the file subset of
-    * `entries` that could contain any id in `deltaIds`, by manifest
-    * stats arithmetic (None when no entry carries stats for the id
-    * column, i.e. pruning cannot help and the caller must take them
-    * all). Shared with [[changeFeed]], which prunes SHARED files for
-    * deletion-vector deltas the same way the COW paths prune touched
-    * files for upserts. */
+  /** Manifest-stats pruning for copy-on-write DISCOVERY: the subset of
+    * `entries` that could possibly contain an id of `deltaIds` — files
+    * whose id-column stats box holds at least one delta id (one pass
+    * over the SMALL delta against the broadcast per-file stats table),
+    * plus every file carrying no stats on the id column (unprovable ⇒
+    * candidate). On a clustered-id layout this turns the upsert's
+    * touched-file scan from O(table) into O(candidate files) — the
+    * difference between an upsert and a table scan at 100 TB. None = no
+    * entry carries id stats (e.g. string ids, whose long-cast stats are
+    * null): pruning cannot help and the caller takes them all. Sound by
+    * the same argument as [[filesForRange]]: a file whose stats box
+    * excludes every delta id cannot contain one. Shared with
+    * [[changeFeed]], which prunes SHARED files for deletion-vector
+    * deltas the same way. */
   private[graft] def candidateFilesIn(s: SparkSession, entries: Seq[FileEntry],
                                       deltaIds: DataFrame, idCol: String,
                                       physId: String): Option[Seq[String]] = {
@@ -1835,18 +1868,29 @@ object Versioned {
         case _                           => true
       }
     })
-    val keep = bloomFilesIn(snap.entries, physOf(snap, bloomCol), value)
-    if (keep.nonEmpty) scanFiles(spark, snap, keep).filter(col(bloomCol) === value)
+    readPruned(spark, tableDir, version, snap,
+      bloomFilesIn(snap.entries, physOf(snap, bloomCol), value),
+      col(bloomCol) === value)
+  }
+
+  /** The scan of a pruned read: the kept files of the pinned snapshot
+    * under the exact predicate. When nothing is kept, one carrier file
+    * filtered to no rows keeps the schema — taken from the FULL
+    * resolution when segment pruning emptied the entry list of a live
+    * table — and a fully deleted version raises the same error as
+    * [[read]]. */
+  private def readPruned(spark: SparkSession, tableDir: String,
+                         version: Option[Int], snap: Snapshot,
+                         keep: Seq[String], pred: org.apache.spark.sql.Column)
+      : DataFrame =
+    if (keep.nonEmpty) scanFiles(spark, snap, keep).filter(pred)
     else {
-      // the pruned entry list may be empty on a live table — fall back
-      // to the full resolution for the schema-carrying empty read
       val carrier = if (snap.files.nonEmpty) snap
                     else snapshot(spark, tableDir, version)
-      if (carrier.files.nonEmpty)
-        scanFiles(spark, carrier, Seq(carrier.files.head)).filter(lit(false))
-      else spark.emptyDataFrame
+      require(carrier.files.nonEmpty,
+        s"version ${carrier.version} of $tableDir has no files (fully deleted)")
+      scanFiles(spark, carrier, Seq(carrier.files.head)).filter(lit(false))
     }
-  }
 
   /** Range read through manifest-level skipping: only the
     * [[filesForRange]] subset is handed to the scan, then the exact
@@ -1867,19 +1911,9 @@ object Versioned {
       val phys = colMapOf(meta).getOrElse(statsCol, statsCol)
       seg.statsFor(phys).forall { case (sLo, sHi) => sLo <= hi && sHi >= lo }
     })
-    val keep = filesForRangeIn(snap.entries, physOf(snap, statsCol), lo, hi)
-    val pred = col(statsCol) >= lo && col(statsCol) <= hi
-    if (keep.nonEmpty) scanFiles(spark, snap, keep).filter(pred)
-    else {
-      // every file proven empty for the range: keep the schema, drop
-      // rows — falling back to the FULL resolution for the carrier file
-      // when segment pruning emptied the entry list on a live table
-      val carrier = if (snap.files.nonEmpty) snap
-                    else snapshot(spark, tableDir, version)
-      require(carrier.files.nonEmpty,
-        s"version ${carrier.version} of $tableDir has no files (fully deleted)")
-      scanFiles(spark, carrier, Seq(carrier.files.head)).filter(lit(false))
-    }
+    readPruned(spark, tableDir, version, snap,
+      filesForRangeIn(snap.entries, physOf(snap, statsCol), lo, hi),
+      col(statsCol) >= lo && col(statsCol) <= hi)
   }
 
   /** Last-wins upsert as a copy-on-write commit: only files CONTAINING a
@@ -1888,13 +1922,13 @@ object Versioned {
     * discovery is a semi-join on the snapshot scan and collects ≤ |files|
     * strings — bounded by layout, not data. */
   def upsert(delta: DataFrame, tableDir: String, idCol: String): Int =
-    copyOnWrite(delta, tableDir, idCol, keepDelta = true)
+    copyOnWrite(delta, tableDir, idCol, "upsert", Some(_ => delta))
 
   /** Delete by id: the same copy-on-write commit without new rows for
     * the deleted ids; a file emptied entirely simply leaves the
     * manifest. */
   def deleteIds(ids: DataFrame, tableDir: String, idCol: String): Int =
-    copyOnWrite(ids.select(idCol), tableDir, idCol, keepDelta = false)
+    copyOnWrite(ids.select(idCol), tableDir, idCol, "delete", None)
 
   /** ONE atomic commit applying a MIXED row-level delta: every row whose
     * id appears in `upserts` or `removeIds` leaves the table (files
@@ -1916,9 +1950,16 @@ object Versioned {
     * (last-wins contract): a multi-row id is replaced as a unit. */
   def applyDelta(upserts: DataFrame, removeIds: DataFrame, tableDir: String,
                  idCol: String, baseVersion: Option[Int] = None): Int =
-    copyOnWrite(upserts, tableDir, idCol, keepDelta = true,
-      extraRemoveIds = Some(removeIds), baseVersion = baseVersion,
-      opName = Some("write_delta"))
+    copyOnWrite(upserts, tableDir, idCol, "write_delta", Some(_ => upserts),
+      extraRemoveIds = Some(removeIds), baseVersion = baseVersion)
+
+  /** Sidecar-count bound: when a MoR delete would leave MORE standing
+    * sidecars than this, the commit folds them all into ONE (an O(DV)
+    * rewrite — the vector is small next to the table by the MoR premise).
+    * Without the bound a table taking daily MoR deletes reads 365
+    * sidecars per masked scan after a year; with it every read opens at
+    * most [[DvConsolidateAt]] small parquet files. */
+  private[graft] val DvConsolidateAt = 8
 
   /** MERGE-ON-READ delete: write the deleted id set as a deletion-vector
     * sidecar (one small parquet) and commit with every data file carried
@@ -1941,14 +1982,6 @@ object Versioned {
     * The vector keys on `idCol`'s PHYSICAL name, so renames never
     * invalidate it; successive MoR deletes accumulate sidecars (each
     * commit is O(its own delta)) and must agree on the id column. */
-  /** Sidecar-count bound: when a MoR delete would leave MORE standing
-    * sidecars than this, the commit folds them all into ONE (an O(DV)
-    * rewrite — the vector is small next to the table by the MoR premise).
-    * Without the bound a table taking daily MoR deletes reads 365
-    * sidecars per masked scan after a year; with it every read opens at
-    * most [[DvConsolidateAt]] small parquet files. */
-  private[graft] val DvConsolidateAt = 8
-
   def deleteIdsMergeOnRead(ids: DataFrame, tableDir: String, idCol: String): Int = {
     val s = ids.sparkSession
     val base = snapshot(s, tableDir)
@@ -2135,13 +2168,6 @@ object Versioned {
     snap.meta.collect { case (k, v) if k.startsWith("constraint.") =>
       k.stripPrefix("constraint.") -> v }
 
-  /** Table-level metadata a full-rewrite re-baseline (compact /
-    * compactZOrder) must CARRY even though it rebuilds commit meta from
-    * scratch: constraints are properties of the table, not of a layout
-    * — dropping them on compact would silently disarm every later
-    * ingest gate. Layout keys (colmap, zorder.*, dv.*) intentionally
-    * die with the rewrite; constraint keys and the materialized-
-    * change-file opt-in (`cdf`) do not. */
   /** The standing table metadata a FULL-REWRITE commit (compact,
     * z-order, overwrite) must carry forward: constraints, the CDF
     * opt-in, and the `catalog.*` identity properties (idColumn and the
@@ -2263,70 +2289,21 @@ object Versioned {
     * tie would resolve arbitrarily. */
   def mergeIfNewer(delta: DataFrame, tableDir: String, idCol: String,
                    orderCol: String): Int = {
-    val s = delta.sparkSession
-    val snap = snapshot(s, tableDir)
-    val v = snap.version + 1
     val deltaIds = delta.select(col(idCol)).distinct()
-    // stats-pruned then exact UNMASKED discovery, masked winners — the
-    // same two-phase shape as copyOnWrite: candidates from manifest id
-    // stats, confirmation semi-join over candidates only, and the
-    // touched rows read ONLY their files (never an input_file_name()
-    // row filter over a full-table scan)
-    val candidates = cowCandidateFiles(s, snap, deltaIds, idCol,
-      physOf(snap, idCol)).getOrElse(snap.files)
-    val touchedRaw =
-      if (candidates.isEmpty) Set.empty[String]
-      else scanFilesWith(s, snap, candidates, mask = false, withFile = true)
-        .join(deltaIds, Seq(idCol), "left_semi")
-        .select("__file").distinct().collect().map(_.getString(0)).toSet
-    val touched = touchedRaw.map(normFileName)
-    val touchedRows =
-      if (touched.nonEmpty) scanFiles(s, snap, touched.toSeq.sorted)
-      else scanFiles(s, snap, snap.files.take(1)).filter(lit(false))
-    val uncontested = touchedRows.join(deltaIds, Seq(idCol), "left_anti")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol))
       .orderBy(col(orderCol).desc, col("__src").asc)
-    val winners = touchedRows.join(deltaIds, Seq(idCol), "left_semi")
-      .withColumn("__src", lit(0)) // current wins orderCol ties
-      .unionByName(delta.withColumn("__src", lit(1)),
-        allowMissingColumns = true)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1).drop("__rk", "__src")
-    // rewritten files re-derive EVERY manifest skipping column the
-    // snapshot carries (all stats triples and the bloom alike — deriving
-    // one and not the others silently cost merged files their pruning
-    // until the next compact; '__z' scaffolding the logical rewrite
-    // doesn't materialize degrades per-column to "no stats")
-    val statsCols = snap.entries.flatMap(_.stats.map(_._1)).distinct
-    val bloomCol = snap.entries.flatMap(_.bloom.map(_._1)).distinct match {
-      case Seq(c) => Some(c)
-      case _      => None
-    }
-    evolvedSchemaFor(snap, delta): Unit // early retired-name guard
-    // CHECK constraints validate the rows that actually LAND (winners:
-    // contested survivors + inserts) — a stale delta row that loses the
-    // newer-than race never lands, so it must not be able to refuse the
-    // commit. Pre-write: a violation leaves nothing on disk.
-    requireConstraints(s, snap, winners, tableDir)
-    val newEntries = writeData(
-      toPhysical(snap, uncontested.unionByName(winners, allowMissingColumns = true)),
-      tableDir, v, statsCols, bloomCol)
-    val dvCache = scala.collection.mutable.Map.empty[String, Map[String, String]]
-    def dvMeta(b: Snapshot): Map[String, String] = // merge re-adds ids too
-      dvCache.getOrElseUpdate(b.dvFiles.mkString(","),
-        retractDvFor(s, b, delta, tableDir, b.version + 1)) +
-        ("op" -> "merge")
-    val committed = commitWithRebase(s, tableDir,
-      cowRebase(s, snap, touched, newEntries, deltaIds, idCol,
-        base => evolvedSchemaFor(base, delta), dvMeta,
-        revalidate = b =>
-          if (constraintsOf(b) != constraintsOf(snap))
-            try requireConstraints(s, b, winners, tableDir)
-            catch { case e: ConstraintViolationException =>
-              discardAttemptData(s, newEntries); throw e }), newEntries)
-    maybeWriteChangeFile(s, tableDir, committed, idCol)
-    committed
+    // the rows that land: the per-id winners over (contested touched
+    // rows ∪ delta) — a stale delta row that loses the newer-than race
+    // never lands, so it can never refuse the commit on a constraint
+    def winners(touchedRows: DataFrame): DataFrame =
+      touchedRows.join(deltaIds, Seq(idCol), "left_semi")
+        .withColumn("__src", lit(0)) // current wins orderCol ties
+        .unionByName(delta.withColumn("__src", lit(1)),
+          allowMissingColumns = true)
+        .withColumn("__rk", row_number().over(w))
+        .filter(col("__rk") === 1).drop("__rk", "__src")
+    copyOnWrite(delta, tableDir, idCol, "merge", Some(winners))
   }
 
   /** Change-data capture between two committed versions: one row per id
@@ -2420,51 +2397,14 @@ object Versioned {
     * construction ([[compact]], [[compactZOrder]],
     * [[compactZOrderIncremental]] — each rewrites every referenced row
     * verbatim, folding any standing deletion-vector mask physically):
-    * the change feed skips them without reading a byte. Rebucketize's
-    * `replace_partitions` is NOT listed — it takes a caller-supplied
-    * frame, so row-identity is a convention there, not a contract —
-    * and its steps simply fall out of the join as unchanged. */
+    * the change feed skips them without reading a byte. [[rebucketize]]
+    * commits through [[compactZOrder]] (`zorder`), so it is covered.
+    * `replace_partitions`, the op of [[replacePartitions]]' HNSW/IVF
+    * index writes, is NOT listed — it takes a caller-supplied frame, so
+    * row-identity is a convention there, not a contract — and rows it
+    * carries verbatim simply fall out of the join as unchanged. */
   private val RowIdenticalOps = Set("compact", "zorder", "zorder_incremental")
 
-  /** CHANGE DATA FEED: the per-commit row-level changes over
-    * `(fromVersion, toVersion]`, one row per (id, commit) whose
-    * visibility or content changed — classified
-    * `insert | delete | update`, with `c_old`/`c_new` value pairs per
-    * non-id column (null on the absent side), plus the commit `version`
-    * and its stamped `op`. The incremental twin of [[diff]]: where diff
-    * full-outer-joins two whole snapshots (right for "what changed
-    * between last month and today" across arbitrary rewrites), the feed
-    * walks the commits and reads ONLY what each one touched —
-    *
-    *   - file churn: the removed/added file-set difference of adjacent
-    *     manifests (pure metadata), scanned under each side's own
-    *     deletion-vector mask; rows carried verbatim through a rewrite
-    *     fall out of the per-step join as unchanged;
-    *   - merge-on-read deletes/retractions: zero files churn, so the
-    *     step is driven by the DV sidecar delta — the affected SHARED
-    *     files are pruned by manifest id-stats exactly like copy-on-write
-    *     discovery ([[candidateFilesIn]]), so a clustered layout reads a
-    *     handful of files, not the table;
-    *   - metadata-only commits (rename, widen, restore-to-self) and the
-    *     row-identical maintenance rewrites ([[RowIdenticalOps]]) cost
-    *     and emit NOTHING. [[restore]] to an older version is processed
-    *     through its real file-set difference, so the feed reports the
-    *     semantic rollback as the deletes/updates it is.
-    *
-    * At 100 TB this is O(touched slice) per commit instead of O(2 ×
-    * table) — the shape that makes downstream incremental consumers
-    * (index maintenance, CDC export, cache invalidation) affordable.
-    * The one honest caveat, shared with Delta's CDF-less tables: a
-    * commit that rewrote a large slice costs a read of that slice even
-    * if few rows changed; materializing change files at write time
-    * trades write amplification for it and is out of scope here.
-    *
-    * Schema changes inside the range are aligned to the TO-version's
-    * logical schema: renames map through physical identity, widened
-    * columns cast up losslessly, later-added columns null-fill on older
-    * steps. Requires schema-stamped manifests (every table this library
-    * initializes) and an id-unique table — the same keyed contract as
-    * [[upsert]]/[[diff]]. */
   /** One (prev -> cur) step of the change feed, classified and ALIGNED
     * to `fin`'s logical schema (no version/op columns — the caller
     * stamps those). None for metadata-only steps. Shared by
@@ -2481,11 +2421,8 @@ object Versioned {
     // rename-stable through PHYSICAL identity, lossless widening casts,
     // null-fill for columns the step predates
     def alignToFinal(step: Snapshot, df: DataFrame): DataFrame = {
-      val stepInv = colMap(step).map(_.swap) // physical -> step logical
-      val finCm = colMap(fin)
       df.select(finSchema.fields.toSeq.map { f =>
-        val phys = finCm.getOrElse(f.name, f.name)
-        val stepName = stepInv.getOrElse(phys, phys)
+        val stepName = logicalOf(step, physOf(fin, f.name))
         if (df.columns.contains(stepName))
           col(stepName).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
@@ -2547,6 +2484,45 @@ object Versioned {
     }
   }
 
+  /** CHANGE DATA FEED: the per-commit row-level changes over
+    * `(fromVersion, toVersion]`, one row per (id, commit) whose
+    * visibility or content changed — classified
+    * `insert | delete | update`, with `c_old`/`c_new` value pairs per
+    * non-id column (null on the absent side), plus the commit `version`
+    * and its stamped `op`. The incremental twin of [[diff]]: where diff
+    * full-outer-joins two whole snapshots (right for "what changed
+    * between last month and today" across arbitrary rewrites), the feed
+    * walks the commits and reads ONLY what each one touched —
+    *
+    *   - file churn: the removed/added file-set difference of adjacent
+    *     manifests (pure metadata), scanned under each side's own
+    *     deletion-vector mask; rows carried verbatim through a rewrite
+    *     fall out of the per-step join as unchanged;
+    *   - merge-on-read deletes/retractions: zero files churn, so the
+    *     step is driven by the DV sidecar delta — the affected SHARED
+    *     files are pruned by manifest id-stats exactly like copy-on-write
+    *     discovery ([[candidateFilesIn]]), so a clustered layout reads a
+    *     handful of files, not the table;
+    *   - metadata-only commits (rename, widen, restore-to-self) and the
+    *     row-identical maintenance rewrites ([[RowIdenticalOps]]) cost
+    *     and emit NOTHING. [[restore]] to an older version is processed
+    *     through its real file-set difference, so the feed reports the
+    *     semantic rollback as the deletes/updates it is.
+    *
+    * At 100 TB this is O(touched slice) per commit instead of O(2 ×
+    * table) — the shape that makes downstream incremental consumers
+    * (index maintenance, CDC export, cache invalidation) affordable.
+    * The one honest caveat, shared with Delta's CDF-less tables: a
+    * commit that rewrote a large slice costs a read of that slice even
+    * if few rows changed; materializing change files at write time
+    * trades write amplification for it and is out of scope here.
+    *
+    * Schema changes inside the range are aligned to the TO-version's
+    * logical schema: renames map through physical identity, widened
+    * columns cast up losslessly, later-added columns null-fill on older
+    * steps. Requires schema-stamped manifests (every table this library
+    * initializes) and an id-unique table — the same keyed contract as
+    * [[upsert]]/[[diff]]. */
   def changeFeed(spark: SparkSession, tableDir: String, fromVersion: Int,
                  toVersion: Int, idCol: String,
                  projectToVersion: Option[Int] = None): DataFrame = {
@@ -2719,12 +2695,8 @@ object Versioned {
     if (!fs(spark, p).exists(p)) None
     else {
       val df = spark.read.parquet(p.toString)
-      val stepInv = colMap(stepSnap).map(_.swap)
-      val finCm = colMap(fin)
-      def stepName(finName: String): String = {
-        val phys = finCm.getOrElse(finName, finName)
-        stepInv.getOrElse(phys, phys)
-      }
+      def stepName(finName: String): String =
+        logicalOf(stepSnap, physOf(fin, finName))
       val fileId = df.columns.filterNot(c => c == "change" ||
         c.endsWith("_old") || c.endsWith("_new"))
       if (!(fileId.length == 1 && fileId.head == stepName(idCol))) None
@@ -2775,34 +2747,14 @@ object Versioned {
     }
     // compact RE-BASELINES column mapping: the rewrite materializes the
     // logical view, so physical == logical again and the colmap drops
-    // (its meta is rebuilt fresh below); inherited stats/bloom columns
-    // arrive keyed physical and re-key to their logical names here
-    val toLogical = colMap(snap).map(_.swap)
-    // the rewrite keeps EVERY inherited stats column (re-keyed logical;
-    // '__z' scaffolding dies with the layout it described — the rewrite
-    // doesn't materialize it) and adds the cluster key up front
-    val statsCols = (clusterBy.toSeq ++
-      snap.entries.flatMap(_.stats.map(_._1)).distinct
-        .filterNot(_ == "__z").map(c => toLogical.getOrElse(c, c))).distinct
-    // compact re-derives the table's bloom column from the snapshot and
-    // rebuilds filters for every rewritten file (copy-on-write commits
-    // now keep blooms alive per-rewrite; compact remains the point where
-    // a CLUSTERED layout makes them sharp again)
-    val bloomCol = snap.entries.flatMap(_.bloom.map(_._1)).distinct match {
-      case Seq(c) => Some(toLogical.getOrElse(c, c))
-      case _      => None
-    }
-    val v = snap.version + 1
-    val newEntries = writeData(arranged, tableDir, v, statsCols, bloomCol)
-    // compaction rewrites EVERY file, so no interleaved commit is
-    // rebasable: losing the race is always a true conflict (typed), and
-    // the caller just re-runs compact against the new snapshot
-    commitWithRebase(spark, tableDir, latest =>
-      if (latest.version == snap.version)
-        Some((newEntries, carriedTableMeta(snap) ++
-          Map("schema" -> snap.schema.getOrElse(cur.schema).json,
-            "op" -> "compact")))
-      else None, newEntries)
+    // (its meta is rebuilt fresh). It keeps every inherited skipping
+    // column, re-keyed logical (the bloom rebuilt for every rewritten
+    // file: a CLUSTERED layout makes it sharp again), and adds the
+    // cluster key up front. Losing the race is always a true conflict
+    // (typed): the caller re-runs compact against the new snapshot.
+    val (stats, bloom) = inheritedSkipping(snap, rebaseline = true)
+    rewriteAll(spark, snap, tableDir, arranged, (clusterBy.toSeq ++ stats, bloom),
+      Map("schema" -> snap.schema.getOrElse(cur.schema).json, "op" -> "compact"))
   }
 
   /** Partition-granular copy-on-write commit — the primitive a
@@ -2848,28 +2800,23 @@ object Versioned {
     }
     val baseTouched = base.entries.filter(intersects).map(_.path).toSet
     val basePaths = base.files.toSet
-    val bloomCol = base.entries.flatMap(_.bloom.map(_._1)).distinct match {
-      case Seq(c) => Some(c)
-      case _      => None
-    }
     evolvedSchemaFor(base, rewritten): Unit // early retired-name guard
-    val newEntries =
-      writeData(toPhysical(base, rewritten), tableDir, base.version + 1,
-        Seq(physStats), bloomCol)
-    commitWithRebase(s, tableDir, snap => {
-      val ok =
-        if (snap.version == base.version) true
-        else {
-          val snapPaths = snap.files.toSet
-          val added = snap.entries.filterNot(e => basePaths(e.path))
-          baseTouched.forall(snapPaths) &&
-            added.forall(e => e.stats.exists(_._1 == physStats) && !intersects(e))
-        }
-      if (!ok) None
-      else Some((snap.entries.filterNot(e => baseTouched(e.path)) ++ newEntries,
-        snap.meta ++ meta + ("schema" -> evolvedSchemaFor(snap, rewritten).json)
-          + ("op" -> "replace_partitions")))
-    }, newEntries)
+    writeAndCommit(s, base, tableDir, Some(toPhysical(base, rewritten)),
+        (Seq(physStats), inheritedSkipping(base, rebaseline = false)._2)) {
+      (snap, added) =>
+        val ok =
+          if (snap.version == base.version) true
+          else {
+            val snapPaths = snap.files.toSet
+            val interleaved = snap.entries.filterNot(e => basePaths(e.path))
+            baseTouched.forall(snapPaths) && interleaved.forall(e =>
+              e.stats.exists(_._1 == physStats) && !intersects(e))
+          }
+        if (!ok) None
+        else Some((snap.entries.filterNot(e => baseTouched(e.path)) ++ added,
+          snap.meta ++ meta + ("schema" -> evolvedSchemaFor(snap, rewritten).json)
+            + ("op" -> "replace_partitions")))
+    }
   }
 
   /** OPTIMIZE ZORDER as a COMMIT: rewrite the latest version's rows
@@ -2910,29 +2857,18 @@ object Versioned {
       .repartitionByRange(numRanges, col("__z"))
       .sortWithinPartitions("__z")
     // re-baselining rewrite: inherited skipping columns re-key to their
-    // LOGICAL names (physical == logical again below). Crucially the
-    // inherited stats (the id column a COW layout clusters on) are
-    // recorded ALONGSIDE '__z' — with a single stats slot, a z-order
-    // commit silently cost every later upsert its manifest-stats
-    // discovery pruning and sent it back to O(table) candidate scans
-    val toLogical = colMap(snap).map(_.swap)
-    val statsCols = "__z" +: snap.entries.flatMap(_.stats.map(_._1)).distinct
-      .filterNot(_ == "__z").map(c => toLogical.getOrElse(c, c))
-    val bloomCol = snap.entries.flatMap(_.bloom.map(_._1)).distinct match {
-      case Seq(c) => Some(toLogical.getOrElse(c, c))
-      case _      => None
-    }
-    val newEntries = writeData(arranged, tableDir, snap.version + 1,
-      statsCols, bloomCol)
-    val meta = carriedTableMeta(snap) ++ Map(
+    // LOGICAL names. Crucially the inherited stats (the id column a COW
+    // layout clusters on) are recorded ALONGSIDE '__z' — with a single
+    // stats slot, a z-order commit silently cost every later upsert its
+    // manifest-stats discovery pruning and sent it back to O(table)
+    // candidate scans
+    val (inherited, bloom) = inheritedSkipping(snap, rebaseline = true)
+    rewriteAll(spark, snap, tableDir, arranged, ("__z" +: inherited, bloom), Map(
       "schema" -> snap.schema.getOrElse(cur.schema).json,
       "op" -> "zorder",
       "zorder.dims" -> dims.mkString(","),
       "zorder.bits" -> bits.toString,
-      "zorder.stats" -> stats.flatMap { case (a, b) => Seq(a, b) }.mkString(","))
-    commitWithRebase(spark, tableDir, latest =>
-      if (latest.version == snap.version) Some((newEntries, meta)) else None,
-      newEntries)
+      "zorder.stats" -> stats.flatMap { case (a, b) => Seq(a, b) }.mkString(",")))
   }
 
   /** Multi-dimensional box read through a [[compactZOrder]] commit: each
@@ -2964,27 +2900,10 @@ object Versioned {
       })
     val pred = box.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
       .reduce(_ && _)
-    boxFilePruningIn(snap, box) match {
-      case Some((keep, _)) =>
-        if (keep.nonEmpty) scanFiles(spark, snap, keep).filter(pred)
-        else {
-          // a delete-emptied version must surface as the same typed
-          // error read() raises; the carrier file for the schema-only
-          // empty read comes from the FULL resolution when segment
-          // pruning emptied the entry list on a live table
-          val carrier = if (snap.files.nonEmpty) snap
-                        else snapshot(spark, tableDir, version)
-          require(carrier.files.nonEmpty,
-            s"version ${carrier.version} of $tableDir has no files (fully deleted)")
-          scanFiles(spark, carrier, Seq(carrier.files.head)).filter(lit(false))
-        }
-      case _ =>
-        // no covering z metadata: the segment predicate kept everything,
-        // so this snapshot is the COMPLETE version — full filtered read
-        require(snap.files.nonEmpty,
-          s"version ${snap.version} of $tableDir has no files (fully deleted)")
-        scanFiles(spark, snap, snap.files).filter(pred)
-    }
+    // without covering z metadata the segment predicate kept everything,
+    // so this snapshot's files are the COMPLETE version: full filtered read
+    readPruned(spark, tableDir, version, snap,
+      boxFilePruningIn(snap, box).fold(snap.files)(_._1), pred)
   }
 
   /** Incrementally EXTEND a z-order layout: cluster only the files
@@ -3028,28 +2947,21 @@ object Versioned {
       .repartitionByRange(math.max(1, math.min(numRanges, unclustered.size)), col("__z"))
       .sortWithinPartitions("__z")
     // the clustered tail keeps every inherited stats column (physical
-    // names — this whole pass runs in physical space) next to its fresh
+    // names — this whole pass runs in physical space) after its fresh
     // '__z' triple, so COW discovery pruning survives the maintenance
     // loop that runs after every ingest burst
-    val statsCols = "__z" +: snap.entries.flatMap(_.stats.map(_._1)).distinct
-      .filterNot(_ == "__z")
-    val bloomCol = snap.entries.flatMap(_.bloom.map(_._1)).distinct match {
-      case Seq(c) => Some(c)
-      case _      => None
-    }
-    val newEntries = writeData(arranged, tableDir, snap.version + 1,
-      statsCols, bloomCol)
+    val (inherited, bloom) = inheritedSkipping(snap, rebaseline = false)
     val rewritten = unclustered.map(_.path).toSet
-    commitWithRebase(spark, tableDir, latest => {
-      val latestPaths = latest.files.toSet
-      if (!rewritten.subsetOf(latestPaths)) None // my tail was rewritten under me
-      // content rewrite of existing rows: the committed schema (and
-      // zorder.*, colmap) carry via latest.meta untouched — evolving the
-      // schema from the PHYSICAL-named tail would mis-add renamed
-      // columns as new ones
-      else Some((latest.entries.filterNot(e => rewritten(e.path)) ++ newEntries,
-        latest.meta + ("op" -> "zorder_incremental")))
-    }, newEntries)
+    writeAndCommit(spark, snap, tableDir, Some(arranged), ("__z" +: inherited, bloom)) {
+      (latest, added) =>
+        if (!rewritten.subsetOf(latest.files.toSet)) None // my tail was rewritten under me
+        // content rewrite of existing rows: the committed schema (and
+        // zorder.*, colmap) carry via latest.meta untouched — evolving the
+        // schema from the PHYSICAL-named tail would mis-add renamed
+        // columns as new ones
+        else Some((latest.entries.filterNot(e => rewritten(e.path)) ++ added,
+          latest.meta + ("op" -> "zorder_incremental")))
+    }
   }
 
   /** Clamp-drift audit of a z-ordered table's unclustered tail: how
@@ -3112,8 +3024,7 @@ object Versioned {
       .split(',').toSeq
     // zorder.dims are physical-baseline names; compactZOrder takes the
     // CURRENT logical names (it reads the logical view)
-    val toLogical = colMap(snap).map(_.swap)
-    compactZOrder(spark, tableDir, dims.map(d => toLogical.getOrElse(d, d)),
+    compactZOrder(spark, tableDir, dims.map(logicalOf(snap, _)),
       numRanges, snap.meta("zorder.bits").toInt)
   }
 
@@ -3368,14 +3279,18 @@ object Versioned {
     }
   }
 
+  /** The one copy-on-write commit behind [[upsert]], [[deleteIds]],
+    * [[applyDelta]] and [[mergeIfNewer]]: every file holding an id of
+    * `delta` (or of `extraRemoveIds`) is rewritten as its surviving rows
+    * plus the rows `land` derives from those files' rows — None for a
+    * delete, where nothing lands; untouched files carry by reference.
+    * The landed rows are what the CHECK constraints validate. */
   private def copyOnWrite(delta: DataFrame, tableDir: String, idCol: String,
-                          keepDelta: Boolean,
+                          op: String, land: Option[DataFrame => DataFrame],
                           extraRemoveIds: Option[DataFrame] = None,
-                          baseVersion: Option[Int] = None,
-                          opName: Option[String] = None): Int = {
+                          baseVersion: Option[Int] = None): Int = {
     val s = delta.sparkSession
     val snap = snapshot(s, tableDir, baseVersion)
-    val v = snap.version + 1
     val deltaIds = extraRemoveIds.map(_.select(col(idCol)))
       .foldLeft(delta.select(col(idCol)))(_ unionByName _).distinct()
     // discovery: manifest id-stats prune the candidate files first (a
@@ -3386,70 +3301,54 @@ object Versioned {
     // the id. __file stays in input_file_name()'s RAW (URI-encoded)
     // form; only the manifest comparison decodes, so the joins are
     // exact on any filesystem/path bytes.
-    val physId = physOf(snap, idCol)
-    val candidates = cowCandidateFiles(s, snap, deltaIds, idCol, physId)
-      .getOrElse(snap.files)
+    val candidates = candidateFilesIn(s, snap.entries, deltaIds, idCol,
+      physOf(snap, idCol)).getOrElse(snap.files)
     val touchedRaw =
       if (candidates.isEmpty) Set.empty[String]
       else scanFilesWith(s, snap, candidates, mask = false, withFile = true)
         .join(deltaIds, Seq(idCol), "left_semi")
         .select("__file").distinct().collect().map(_.getString(0)).toSet
     val touched = touchedRaw.map(normFileName)
-    // survivors read ONLY the touched files (the file list goes to the
-    // reader — an input_file_name() filter over the full table would
+    // the touched rows read ONLY the touched files (the file list goes to
+    // the reader — an input_file_name() filter over the full table would
     // scan everything and drop rows after the fact), on the MASKED view
     // so merge-on-read-deleted rows never resurrect through a rewrite
-    val survivorBase =
+    val touchedRows =
       if (touched.nonEmpty) scanFiles(s, snap, touched.toSeq.sorted)
       else scanFiles(s, snap, snap.files.take(1)).filter(lit(false))
-    val survivors = survivorBase.join(deltaIds, Seq(idCol), "left_anti")
-    // allowMissingColumns: an upsert delta may evolve the schema (new
-    // columns null-fill on the survivor side, and vice versa)
-    val rewritten =
-      if (keepDelta) survivors.unionByName(delta, allowMissingColumns = true)
-      else survivors
-    // rewritten files inherit EVERY stats column and the bloom column of
-    // the snapshot's entries so all skipping layers survive copy-on-write
-    // — the bloom rebuild is one extra pass over only the rewritten
-    // files, and without it every COW quietly degraded equality pruning
-    // to a full read until the next compact ('__z' scaffolding the
-    // logical rewrite doesn't materialize degrades to "no stats" for
-    // that column only; the id triple stays sharp)
-    val statsCols = snap.entries.flatMap(_.stats.map(_._1)).distinct
-    val bloomCol = snap.entries.flatMap(_.bloom.map(_._1)).distinct match {
-      case Seq(c) => Some(c)
-      case _      => None
-    }
+    val survivors = touchedRows.join(deltaIds, Seq(idCol), "left_anti")
+    val landed = land.map(_(touchedRows))
     // same early guards as append: retired names and CHECK-constraint
-    // violations refuse typed pre-write (deletes introduce no rows, so
-    // only the keepDelta flavor validates)
-    if (keepDelta) {
+    // violations refuse typed pre-write (a delete lands no rows)
+    landed.foreach { rows =>
       evolvedSchemaFor(snap, delta): Unit
-      requireConstraints(s, snap, delta, tableDir)
+      requireConstraints(s, snap, rows, tableDir)
     }
-    val newEntries =
-      if (touched.isEmpty && !keepDelta) Seq.empty
-      else writeData(toPhysical(snap, rewritten), tableDir, v, statsCols, bloomCol)
-    def schema(base: Snapshot) =
-      if (keepDelta) evolvedSchemaFor(base, delta)
-      else base.schema.getOrElse(survivorBase.schema)
-    // an upsert RE-INTRODUCING merge-on-read-deleted ids retracts them
+    // allowMissingColumns: landed rows may evolve the schema (new
+    // columns null-fill on the survivor side, and vice versa)
+    val rewritten = landed.fold(survivors)(
+      survivors.unionByName(_, allowMissingColumns = true))
+    def schema(b: Snapshot) =
+      if (landed.isDefined) evolvedSchemaFor(b, delta)
+      else b.schema.getOrElse(touchedRows.schema)
+    // landed rows RE-INTRODUCING merge-on-read-deleted ids retract them
     // from the standing vector (else the fresh rows would stay masked);
-    // COW deletes introduce nothing, so they carry the vectors as-is
+    // a delete introduces nothing, so it carries the vectors as-is
     val dvCache = scala.collection.mutable.Map.empty[String, Map[String, String]]
-    def dvMeta(b: Snapshot): Map[String, String] =
-      (if (!keepDelta) Map.empty[String, String]
+    def meta(b: Snapshot): Map[String, String] =
+      (if (landed.isEmpty) Map.empty[String, String]
        else dvCache.getOrElseUpdate(b.dvFiles.mkString(","),
-         retractDvFor(s, b, delta, tableDir, b.version + 1))) +
-        ("op" -> opName.getOrElse(if (keepDelta) "upsert" else "delete"))
-    val committed = commitWithRebase(s, tableDir,
-      cowRebase(s, snap, touched, newEntries, deltaIds, idCol, schema, dvMeta,
-        revalidate = b =>
-          if (keepDelta && constraintsOf(b) != constraintsOf(snap))
-            try requireConstraints(s, b, delta, tableDir)
-            catch { case e: ConstraintViolationException =>
-              discardAttemptData(s, newEntries); throw e }),
-      newEntries)
+         retractDvFor(s, b, delta, tableDir, b.version + 1))) + ("op" -> op)
+    val rows =
+      if (touched.isEmpty && landed.isEmpty) None
+      else Some(toPhysical(snap, rewritten))
+    val committed = writeAndCommit(s, snap, tableDir, rows,
+        inheritedSkipping(snap, rebaseline = false)) { (latest, added) =>
+      cowRebase(s, snap, touched, added, deltaIds, idCol, schema, meta,
+        revalidate = b => landed.foreach(rows =>
+          if (constraintsOf(b) != constraintsOf(snap))
+            requireConstraints(s, b, rows, tableDir)))(latest)
+    }
     maybeWriteChangeFile(s, tableDir, committed, idCol)
     committed
   }

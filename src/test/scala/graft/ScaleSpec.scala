@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.operators.{KnnIvf, Scale}
 import graft.sources.Tables
@@ -24,6 +26,26 @@ class ScaleSpec extends SparkSuite {
     val probe = Scale.loadPartitioned(spark, path).filter(col("cell").isin(1, 3))
     assert(probe.queryExecution.executedPlan.toString.contains("PartitionFilters"))
     assert(probe.select(countDistinct(col("cell"))).head().getLong(0) <= 2)
+  }
+
+  test("loadPartitioned on a saved IVF corpus starts no Spark job and matches a plain read") {
+    val path = tempDir("graft_ivf_load") + "/index"
+    KnnIvf.save(KnnIvf.build(Tables.embeddings(spark, sfDir), numCells = 4), path)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val loaded = try Scale.loadPartitioned(spark, s"$path/corpus") finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get === 0)
+    val inferred = spark.read.parquet(s"$path/corpus")
+    assert(loaded.schema === inferred.schema)
+    assert(loaded.exceptAll(inferred).count() === 0 &&
+      inferred.exceptAll(loaded).count() === 0)
   }
 
   test("dynamic partition pruning: fact partitions pruned by the dim-side filter") {

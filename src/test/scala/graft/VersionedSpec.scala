@@ -1035,12 +1035,15 @@ class VersionedSpec extends SparkSuite {
       .filter(col("part") === 2L).localCheckpoint(true)
     Versioned.append(Seq((777L, 2L)).toDF("id", "part")
       .repartition(1), dir, statsCol = Some("part"))
+    def dataDirs() = new java.io.File(s"$dir/data").listFiles().count(_.isDirectory)
+    val dirsBefore = dataDirs()
     intercept[Versioned.ConcurrentWriteConflictException] {
       // the append above landed between this writer's pinned read and
       // its commit, INSIDE its touched partition — must refuse typed
       Versioned.replacePartitions(myRows.repartition(1), dir, "part",
         Seq(2L), base)
     }
+    assert(dataDirs() === dirsBefore, "a refused commit must discard its data files")
   }
 
   private def manifestLinesOf(dir: String, v: Int): Seq[String] = {
@@ -1289,6 +1292,14 @@ class VersionedSpec extends SparkSuite {
     assert(row7.length === 1 && row7.head.getAs[Long]("n_chars") === 777L,
       "exactly the fresh row must serve — the old masked row may not resurrect")
     assert(afterUp.filter(col("doc_id") === 3L).count() === 0, "3 stays deleted")
+    // a conditional MERGE re-adding deleted id 11 resurrects it the same way
+    Versioned.mergeIfNewer(Seq((11L, "merged", 1111L)).toDF("doc_id", "lang", "n_chars"),
+      dir, "doc_id", "n_chars")
+    val afterMerge = Versioned.read(spark, dir)
+    val row11 = afterMerge.filter(col("doc_id") === 11L).collect()
+    assert(row11.length === 1 && row11.head.getAs[Long]("n_chars") === 1111L,
+      "exactly the fresh merged row must serve")
+    assert(afterMerge.filter(col("doc_id") === 3L).count() === 0, "3 stays deleted")
 
     // incremental consumption refuses across a MoR delete (retractions
     // cannot ride a file-set delta)
@@ -1307,6 +1318,22 @@ class VersionedSpec extends SparkSuite {
     val stats = Versioned.vacuum(spark, dir, keepVersions = 1)
     assert(stats.deletedFiles > 0)
     assert(Versioned.read(spark, dir).collect().map(_.toSeq).toSet === preCompact)
+  }
+
+  test("a fully deleted version: every read raises the same typed error") {
+    import spark.implicits._
+    val dir = freshDir()
+    Versioned.init(docs3(12), dir, statsCol = Some("doc_id"), bloomCol = Some("lang"))
+    Versioned.deleteIds((0 until 12).map(_.toLong).toDF("doc_id"), dir, "doc_id")
+    assert(Versioned.snapshot(spark, dir).files.isEmpty)
+    val msgs = Seq[() => Any](
+      () => Versioned.read(spark, dir),
+      () => Versioned.readRange(spark, dir, None, "doc_id", 0L, 5L),
+      () => Versioned.readEquals(spark, dir, None, "lang", "lang1"),
+      () => Versioned.readBox(spark, dir, None, Seq(("doc_id", 0.0, 5.0)))
+    ).map(f => intercept[IllegalArgumentException](f()).getMessage)
+    assert(msgs.distinct.size === 1 && msgs.head.contains("has no files (fully deleted)"),
+      msgs.mkString(" | "))
   }
 
   test("merge-on-read delete keeps DV sidecars readable for retained HISTORY versions") {
@@ -1430,12 +1457,12 @@ class VersionedSpec extends SparkSuite {
     assert(snap.files.size === 8)
     // a narrow delta's candidate set is a strict subset of the table
     val narrow = Seq(3L, 7L).toDF("doc_id")
-    val cands = Versioned.cowCandidateFiles(spark, snap, narrow, "doc_id", "doc_id")
+    val cands = Versioned.candidateFilesIn(spark, snap.entries, narrow, "doc_id", "doc_id")
     assert(cands.isDefined && cands.get.size < snap.files.size && cands.get.nonEmpty,
       s"clustered layout must prune discovery, got ${cands.map(_.size)}")
     // pure inserts (ids beyond every stats box) prune to ZERO candidates
     val inserts = Seq(99999L).toDF("doc_id")
-    assert(Versioned.cowCandidateFiles(spark, snap, inserts, "doc_id", "doc_id")
+    assert(Versioned.candidateFilesIn(spark, snap.entries, inserts, "doc_id", "doc_id")
       .get.isEmpty)
     // and the pruned upsert is RESULT-identical to the semantics contract
     Versioned.upsert(Seq((3L, "up", 999L), (99999L, "new", 1L))
@@ -1456,7 +1483,7 @@ class VersionedSpec extends SparkSuite {
       (0 until 40).map(i => (s"id$i", i.toLong)).toDF("doc_id", "n")
         .repartition(4), dir2)
     val snap2 = Versioned.snapshot(spark, dir2)
-    assert(Versioned.cowCandidateFiles(spark, snap2,
+    assert(Versioned.candidateFilesIn(spark, snap2.entries,
       Seq("id3").toDF("doc_id"), "doc_id", "doc_id").isEmpty)
     Versioned.upsert(Seq(("id3", 999L)).toDF("doc_id", "n"), dir2, "doc_id")
     assert(Versioned.read(spark, dir2)
@@ -1723,7 +1750,7 @@ class VersionedSpec extends SparkSuite {
     // SNAPSHOT: a one-id delta must get a candidate list (not the
     // stats-less None fallback) that excludes provably-id-free files
     val oneId = Seq(0L).toDF("doc_id")
-    val cands = Versioned.cowCandidateFiles(spark, snap, oneId,
+    val cands = Versioned.candidateFilesIn(spark, snap.entries, oneId,
       "doc_id", "doc_id")
     assert(cands.nonEmpty, "id stats must survive the z-order commit")
     assert(cands.get.size < snap.files.size,
@@ -1744,7 +1771,7 @@ class VersionedSpec extends SparkSuite {
     assert(healed.entries.forall(e =>
       e.statsFor("__z").nonEmpty && e.statsFor("doc_id").nonEmpty),
       "incremental z-order must keep id stats on the re-clustered tail")
-    assert(Versioned.cowCandidateFiles(spark, healed, oneId,
+    assert(Versioned.candidateFilesIn(spark, healed.entries, oneId,
       "doc_id", "doc_id").nonEmpty)
   }
 
@@ -2050,6 +2077,13 @@ class VersionedSpec extends SparkSuite {
     Versioned.vacuum(spark, dir, keepVersions = 1)
     assert(!new java.io.File(ch, "v00003").exists(),
       "a dropped version's change file must be reclaimed")
+
+    // a conditional MERGE materializes like any copy-on-write commit
+    Versioned.mergeIfNewer(Seq((5L, "m", 50L), (3000L, "mi", 4L))
+      .toDF("doc_id", "lang", "n_chars"), dir, "doc_id", "n_chars") // v5
+    assert(new java.io.File(ch, "v00005").exists(), "merge must materialize")
+    assert(rows(Versioned.changeFeed(spark, dir, 4, 5, "doc_id")) ===
+      Set((5L, "update", 5), (3000L, "insert", 5)))
   }
 
   test("consumeChanges: checkpointed windows partition the feed; a crashed consumer replays") {
