@@ -150,11 +150,12 @@ object SparkEntry {
     // --- dedup suite (SURVEY §2.9 E1/E2; planted duplicates — fixtures
     //     have none naturally: 500/500 distinct texts, max cosine 0.48) ---
     "dedup_exact" -> ((s, dir) => Dedup.exactGroups(docsWithExactDupes(s, dir))),
-    // fanned, UNPINNED: minhashPairs references the corpus three times
-    // (signature build + both shingle-set verify sides), but an r19 A/B
-    // measured the per-call pin a wash-to-loss in adjacent windows
-    // (0.89 vs 0.80 control-normalized) — the narrow set-build
-    // re-derivations are cheaper than the materialize-and-read
+    // fanned, UNPINNED: minhashPairs references the corpus twice
+    // (signature build + the candidate-doc shingle-set build), and an
+    // r19 A/B (when the verify built sets on both join sides) measured
+    // the per-call pin a wash-to-loss in adjacent windows (0.89 vs 0.80
+    // control-normalized) — the narrow re-derivations are cheaper than
+    // the materialize-and-read
     "dedup_minhash" -> ((s, dir) =>
       Dedup.minhashPairs(docsWithNearDupes(s, dir), threshold = 0.5)),
     "dedup_simhash" -> ((s, dir) =>
@@ -208,9 +209,9 @@ object SparkEntry {
       // frame == signaturing the slice).
       // UNFANNED corpus (r19 A/B, adjacent windows: fan-off 0.79 vs
       // fan-on 0.96; the pinned-fanned variant recovered nothing): the
-      // half-corpus feeds the shingle-set verify of BOTH twins (id_a/
-      // id_b sides each), a narrow projection per reference — the twins'
-      // cost is their band/verify joins, which re-key by id anyway.
+      // half-corpus feeds the shingle-set verify of BOTH twins (one
+      // candidate-doc set build each), a narrow projection per reference
+      // — the twins' cost is their band/verify joins.
       val corpus = parityHalf(docsWithNearDupesRaw(s, dir))
       Recall.setAgreement(
         Dedup.minhashPairsFromSigs(corpus, parityHalf(nearDupMinhashSigs(s, dir)),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.functions.{TextExprs, VectorOps}
 
@@ -299,22 +300,13 @@ object Dedup {
   }
 
   /** [[minhashCandidatesIncremental]] with the exact-Jaccard verification
-    * of [[minhashPairsFromSigs]]: `docs` must cover BOTH sides' ids (the
-    * shingle-set build is the same corpus-wide narrow map — see the
-    * profiling note there for why it is not scoped to candidate ids). */
+    * of [[minhashPairsFromSigs]]: `docs` must cover BOTH sides' ids. */
   def minhashPairsIncremental(docs: DataFrame, oldSigs: DataFrame, newSigs: DataFrame,
                               idCol: String = "doc_id", textCol: String = "text",
                               shingleN: Int = 3, numPerms: Int = 32, bands: Int = 16,
-                              threshold: Double = 0.4): DataFrame = {
-    val cands = minhashCandidatesIncremental(oldSigs, newSigs, idCol, numPerms, bands)
-    val sets = docs.select(col(idCol), shingleHashSet(col(textCol), shingleN).as("__set"))
-    cands
-      .join(sets.select(col(idCol).as("id_a"), col("__set").as("__sa")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("__set").as("__sb")), "id_b")
-      .withColumn("jaccard", round(jaccard(col("__sa"), col("__sb")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
+                              threshold: Double = 0.4): DataFrame =
+    verifyJaccard(docs, minhashCandidatesIncremental(oldSigs, newSigs, idCol, numPerms, bands),
+      idCol, threshold)(_.select(col(idCol), shingleHashSet(col(textCol), shingleN).as("__set")))
 
   /** [[minhashCandidatesIncremental]] for the SimHash family: verified
     * pairs touching at least one NEW doc — the signature rides the band
@@ -356,26 +348,50 @@ object Dedup {
 
   /** [[minhashPairs]] with the signature frame supplied by the caller
     * (e.g. pinned once and shared across the agreement gates); `docs` is
-    * still scanned for the exact shingle-set verify. `sigs` must be the
-    * [[minhashSignatures]] of `docs` at the same (shingleN, numPerms). */
+    * still scanned for the exact shingle-set verify, which builds sets
+    * for candidate docs only and pins the candidates and those sets when
+    * called. `sigs` must be the [[minhashSignatures]] of `docs` at the
+    * same (shingleN, numPerms). */
   def minhashPairsFromSigs(docs: DataFrame, sigs: DataFrame,
                            idCol: String = "doc_id", textCol: String = "text",
                            shingleN: Int = 3, numPerms: Int = 32, bands: Int = 16,
                            threshold: Double = 0.4): DataFrame = {
-    val cands = bandCandidates(sigs, idCol, bands, numPerms / bands)
-    // Exact verify joins candidate pairs against per-doc shingle sets
-    // built corpus-wide as a pure narrow map. Scoping the set build to
-    // candidate ids sounds cheaper but is not: the semi-join's id list
-    // re-derives the ENTIRE signature + band-join DAG once per reference
-    // (profiled at 3x the whole-query cost), while the corpus-wide build
-    // is one shuffle-free projection per verify side. Sets are distinct
-    // shingle HASHES (codegen'd): Jaccard over 64-bit hash sets equals
-    // Jaccard over the string sets up to negligible collisions, without
-    // the interpreted string-slice set construction in the verify hot
-    // path. Mirrors [[wordShingles]] exactly: complete shingles only,
-    // short docs fall back to one whole-token-string hash.
-    val sets = docs.select(col(idCol), shingleHashSet(col(textCol), shingleN).as("__set"))
-    cands
+    // Sets are distinct shingle HASHES (codegen'd): Jaccard over 64-bit
+    // hash sets equals Jaccard over the string sets up to negligible
+    // collisions, without the interpreted string-slice set construction
+    // in the verify hot path. Mirrors [[wordShingles]] exactly: complete
+    // shingles only, short docs fall back to one whole-token-string hash.
+    verifyJaccard(docs, bandCandidates(sigs, idCol, bands, numPerms / bands), idCol,
+      threshold)(_.select(col(idCol), shingleHashSet(col(textCol), shingleN).as("__set")))
+  }
+
+  /** Exact-Jaccard verify shared by the MinHash pair operators: candidate
+    * pairs (id_a, id_b) joined on both sides to the per-doc sets that
+    * `setsOf` builds as `(idCol, __set)` from a frame of `docs` rows,
+    * kept at `round(jaccard, 4) >= threshold`.
+    *
+    * Only candidate docs get a set. The candidate ids are broadcast into
+    * a semi-join against `docs`, so no doc text is shuffled, and the
+    * sets of those docs are the broadcast build side of both pair joins.
+    * Building sets for the whole corpus, once per join side, was most of
+    * the verify's cost: on 10k docs with ~1.1k candidate pairs the pair
+    * step's work CPU fell from ~1.4 s to ~0.7 s (4 vCPU Xeon). The plan
+    * reads the candidates three times and the sets twice, and Spark
+    * reused none of those exchanges over a cached corpus (each reference
+    * re-ran the band join: 19 jobs, and more CPU than the corpus-wide
+    * build), so both are pinned with `localCheckpoint` at call time: the
+    * band join runs once and each candidate doc's set is built once.
+    * Sets are built BEFORE the joins, so the set expression never lands
+    * in a join condition (a variant that built them after joining raw
+    * text inlined them into the broadcast-join condition and broadcast
+    * the corpus text twice). The semi-join keeps every `docs` row of a
+    * repeated id, so such an id verifies once per row. */
+  private def verifyJaccard(docs: DataFrame, cands: DataFrame, idCol: String,
+                            threshold: Double)(setsOf: DataFrame => DataFrame): DataFrame = {
+    val pinned = cands.localCheckpoint(true)
+    val ids = pinned.select(col("id_a").as(idCol)).union(pinned.select(col("id_b").as(idCol)))
+    val sets = setsOf(docs.join(broadcast(ids), Seq(idCol), "left_semi")).localCheckpoint(true)
+    pinned
       .join(sets.select(col(idCol).as("id_a"), col("__set").as("__sa")), "id_a")
       .join(sets.select(col(idCol).as("id_b"), col("__set").as("__sb")), "id_b")
       .withColumn("jaccard", round(jaccard(col("__sa"), col("__sb")), 4))
@@ -390,31 +406,44 @@ object Dedup {
     docs.join(pairs.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
 
   /** Exact transitive duplicate groups: connected components of the
-    * near-dup pair graph by iterative min-label propagation. The pairwise
-    * keep-first policy of [[dropNearDuplicates]] misses chains (a~b, b~c
-    * but not a~c); components make "one survivor per duplicate CLUSTER"
-    * exact — the policy production dedup pipelines actually want.
+    * near-dup pair graph. The pairwise keep-first policy of
+    * [[dropNearDuplicates]] misses chains (a~b, b~c but not a~c);
+    * components make "one survivor per duplicate CLUSTER" exact — the
+    * policy production dedup pipelines actually want.
     *
-    * Each iteration is one join + aggregate over the (small, pairs-sized)
-    * edge set; labels are `localCheckpoint`ed per round to truncate the
-    * iterative lineage — the standard Spark pattern for fixed-point
-    * algorithms (convergence needs a driver-side count anyway).
-    * Iterations needed = graph diameter (duplicate clusters are
-    * near-cliques in practice, so 2-3).
+    * Two paths, one result:
+    *  - Up to a fixed edge bound (a private constant, 1M edges), with
+    *    integral ids (any other id type takes the second path), the edges
+    *    come to the driver in one bounded collect (`limit(bound + 1)`),
+    *    a union-find with min-id roots closes every component whatever
+    *    its diameter, and the labels return as `docs` left-joined to a
+    *    broadcast local (id, component) frame. The call starts one job
+    *    for the collect (a few on a many-partition pair frame); the
+    *    returned frame never re-reads `pairs`.
+    *  - Above the bound, iterative min-label propagation runs on the
+    *    cluster ([[labelPropagation]]): one join + aggregate per round
+    *    over the edge set, labels `localCheckpoint`ed per round, rounds =
+    *    graph diameter. `maxIter` caps this path only.
+    *
+    * An edge through an id that is NOT in `docs`: union-find joins its
+    * two sides through it; propagation passes no label through it (its
+    * id can still seed a neighbour's label). Every caller passes pairs
+    * drawn from its `docs` (the semantic dedup passes `docs` = every pair
+    * id), where the two paths agree.
     *
     * @param docs  corpus — every id gets a component (singletons map to
     *              themselves)
     * @param pairs (id_a, id_b) undirected near-dup edges
-    * @return (id, component) with component = min id reachable
+    * @return (idCol, component) with component = min id reachable
     */
   def duplicateComponents(docs: DataFrame, pairs: DataFrame,
                           idCol: String = "doc_id", maxIter: Int = 20): DataFrame =
     duplicateComponentsChecked(docs, pairs, idCol, maxIter)._1
 
-  /** [[duplicateComponents]] with the convergence status surfaced: the
-    * iteration count is a DEFENSIVE CAP, not a convergence proof —
-    * min-label propagation needs O(graph diameter) rounds, and while
-    * duplicate clusters are near-cliques in practice (diameter 2-3), a
+  /** [[duplicateComponents]] with the convergence status surfaced. The
+    * driver path always converges (`true`). On the propagation path the
+    * iteration count is a DEFENSIVE CAP, not a convergence proof:
+    * min-label propagation needs O(graph diameter) rounds, and a
     * pathological chain a~b~c~…~z at corpus scale could exceed any fixed
     * budget. Rather than loop unboundedly on a cluster, the cap bails
     * out with the CURRENT labels (a refinement of the true components:
@@ -422,10 +451,61 @@ object Dedup {
     * groups may not yet be fully merged) plus `converged = false` so the
     * caller can log, alert, or re-run with a larger budget.
     *
-    * @return (labels (id, component), converged) */
+    * @return (labels (idCol, component), converged) */
   def duplicateComponentsChecked(docs: DataFrame, pairs: DataFrame,
                                  idCol: String = "doc_id",
                                  maxIter: Int = 20): (DataFrame, Boolean) = {
+    val edges = pairs.select(col("id_a"), col("id_b")).na.drop()
+    val labelType = edges.select(least(col("id_a"), col("id_b"))).schema.head.dataType
+    lazy val rows = edges.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .limit(DriverComponentsMaxEdges + 1).collect()
+    if (!Seq(ByteType, ShortType, IntegerType, LongType).contains(labelType) ||
+        rows.length > DriverComponentsMaxEdges)
+      labelPropagation(docs, pairs, idCol, maxIter)
+    else {
+      val parent = minIdUnionFind(rows.iterator.map(r => (r.getLong(0), r.getLong(1))))
+      val labels = docs.sparkSession.createDataFrame(parent.toSeq).toDF("__id", "__c")
+      (docs.select(col(idCol).as("__doc"))
+        .join(broadcast(labels), col("__doc") === col("__id"), "left")
+        .select(col("__doc").as(idCol),
+          coalesce(col("__c").cast(labelType), col("__doc")).as("component")), true)
+    }
+  }
+
+  // Edge bound of the driver path of [[duplicateComponentsChecked]]: 1M
+  // edges are 16 MB of id payload in the collect and at most 2M labels
+  // (32 MB) in the frame broadcast back, well inside the 2 GiB floor of
+  // the driver heap; a duplicate graph larger than this is corpus-scale
+  // work and stays distributed.
+  private val DriverComponentsMaxEdges = 1000000
+
+  /** Union-find with min-id roots over an edge list: id -> least id of
+    * its connected component, for every id that is not that least id
+    * itself (a root labels itself). */
+  private def minIdUnionFind(edges: Iterator[(Long, Long)]): scala.collection.mutable.LongMap[Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent.contains(root)) root = parent(root)
+      var y = x
+      while (y != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.foreach(find)
+    parent
+  }
+
+  /** The propagation path of [[duplicateComponentsChecked]], also its
+    * whole result above the driver path's edge bound: the direct-
+    * neighbour minimum seeds every label, then each round takes the
+    * minimum over neighbours' labels until no label changes or `maxIter`
+    * rounds ran. */
+  private[graft] def labelPropagation(docs: DataFrame, pairs: DataFrame, idCol: String,
+                                      maxIter: Int): (DataFrame, Boolean) = {
     val edges = pairs.select(col("id_a"), col("id_b"))
     val sym = edges
       .union(edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
@@ -682,14 +762,9 @@ object Dedup {
       .select("id_a", "id_b").distinct()
     // exact verify on word-shingle STRING sets (complete shingles, short
     // docs fall back to the whole token string) — mirrors [[minhashPairs]]
-    val sets = docs.select(col(idCol), tokens(col(textCol)).as("__ts"))
-      .select(col(idCol), wordShinglesOfTokens(col("__ts"), shingleN).as("__set"))
-    cands
-      .join(sets.select(col(idCol).as("id_a"), col("__set").as("__sa")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("__set").as("__sb")), "id_b")
-      .withColumn("jaccard", round(jaccard(col("__sa"), col("__sb")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifyJaccard(docs, cands, idCol, threshold)(
+      _.select(col(idCol), tokens(col(textCol)).as("__ts"))
+        .select(col(idCol), wordShinglesOfTokens(col("__ts"), shingleN).as("__set")))
   }
 
   /** SimHash near-dup pairs over the portable hash — bigram features,
@@ -876,7 +951,7 @@ object Dedup {
                          overflowLink: Boolean = false): DataFrame = {
     val withCell = idx.corpusWithCell
     // the pair frame (tiny: verified duplicates only) fans out into
-    // members, the component propagation, and the final join — without
+    // members, the component closure, and the final join — without
     // pinning it, each reference re-executes the KMeans-transform +
     // blocked-self-join subplan (the self-join-recompute cost, measured
     // ~4x the pair stage). Hot-cluster bounds ride through to the keep

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * list is pre-bucketed on `src` so the join co-locates) plus one
   * dst-keyed hash aggregation with map-side partials. T iterations =
   * T join+agg rounds; lineage is truncated per round with
-  * `localCheckpoint` — the same fixed-point pattern the components
-  * dedup uses ([[Dedup.duplicateComponents]]).
+  * `localCheckpoint` — the same fixed-point pattern as the
+  * label-propagation path that [[Dedup.duplicateComponents]] takes for
+  * a pair graph too large to close on the driver.
   *
   * Determinism: per-edge contributions `rank(u)/outdeg(u)` round to 8dp
   * and sum in DECIMAL per destination — order-free under any

@@ -108,6 +108,45 @@ class DedupSpec extends SparkSuite {
     assert(inc === full)
   }
 
+  test("candidate-scoped verify equals the corpus-wide verify row for row") {
+    // short docs (< shingleN tokens), empty docs, a repeated doc_id and
+    // planted near-copies, besides the sf fixture's own docs
+    val base = docs.select("doc_id", "text").filter($"doc_id" % 4 === 0)
+    val planted = base.filter($"doc_id" % 8 === 0)
+      .select(($"doc_id" + 10000000L).as("doc_id"), concat($"text", lit(" extra tail words")).as("text"))
+    val firstTwo = base.orderBy("doc_id").limit(2).collect().map(r => (r.getLong(0), r.getString(1)))
+    val edge = Seq(
+      (20000001L, "hello world"), (20000002L, "hello world"), (20000003L, "Hello  WORLD"),
+      (20000004L, "lonely"), (20000005L, ""), (20000006L, "   "),
+      (20000007L, firstTwo(0)._2), (20000007L, firstTwo(1)._2 + " and a tail"))
+      .toDF("doc_id", "text")
+    val corpus = base.unionByName(planted).unionByName(edge)
+    val sigs = Dedup.minhashSignatures(corpus, "doc_id", "text", 3, 32).localCheckpoint(true)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    Seq(0.4, 0.5).foreach { t =>
+      val scoped = rows(Dedup.minhashPairsFromSigs(corpus, sigs, threshold = t))
+      assert(scoped === rows(corpusWideVerify(corpus, sigs, t)), s"threshold $t")
+      assert(scoped.exists(_._1 == 20000001L), "the short-doc copies pair")
+      assert(scoped.count(r => r._1 == firstTwo(0)._1 && r._2 == 20000007L) === 1,
+        "of the repeated id's two rows, only the copy pairs with its source")
+    }
+  }
+
+  /** The verify as it was before candidate scoping: shingle-hash sets for
+    * every doc of the corpus on both join sides. */
+  private def corpusWideVerify(corpus: org.apache.spark.sql.DataFrame,
+                               sigs: org.apache.spark.sql.DataFrame,
+                               threshold: Double): org.apache.spark.sql.DataFrame = {
+    val sets = corpus.select($"doc_id", Dedup.shingleHashSet($"text", 3).as("__set"))
+    Dedup.minhashCandidatesFromSigs(sigs)
+      .join(sets.select($"doc_id".as("id_a"), $"__set".as("__sa")), "id_a")
+      .join(sets.select($"doc_id".as("id_b"), $"__set".as("__sb")), "id_b")
+      .withColumn("jaccard", round(Dedup.jaccard($"__sa", $"__sb"), 4))
+      .filter($"jaccard" >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
+
   test("simhash incremental pairs == full pairs minus old-old") {
     val sigs = Dedup.simhashSignatures(withNearDupes, "doc_id", "text", 64)
       .localCheckpoint(true)
@@ -300,8 +339,7 @@ class DedupSpec extends SparkSuite {
     val n = 30
     val docs = (0L to n).toDF("doc_id")
     val pairs = (0L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (partial, converged) =
-      Dedup.duplicateComponentsChecked(docs, pairs, maxIter = 3)
+    val (partial, converged) = Dedup.labelPropagation(docs, pairs, "doc_id", maxIter = 3)
     assert(!converged)
     val labels = partial.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // partial labels are a refinement: every label is a reachable
@@ -311,9 +349,68 @@ class DedupSpec extends SparkSuite {
     assert(labels(n.toLong) !== 0L)
     // the same graph under an adequate budget (diameter ≈ n hops, one
     // hop per round) converges to one component
-    val (full, ok) = Dedup.duplicateComponentsChecked(docs, pairs, maxIter = n + 2)
+    val (full, ok) = Dedup.labelPropagation(docs, pairs, "doc_id", maxIter = n + 2)
     assert(ok)
     assert(full.collect().map(_.getLong(1)).toSet === Set(0L))
+    // the public call closes the chain on the driver whatever the budget
+    val (closed, closedOk) = Dedup.duplicateComponentsChecked(docs, pairs, maxIter = 3)
+    assert(closedOk)
+    assert(closed.collect().map(_.getLong(1)).toSet === Set(0L))
+  }
+
+  test("duplicateComponents: driver union-find and propagation agree on a long chain, a star and singletons") {
+    // chain 100~…~130 listed in a shuffled order (diameter 30 > the
+    // default 20-round cap), star centre 260 with leaves 250..259 and
+    // 261..269, singletons 400..404
+    val chain = new scala.util.Random(7).shuffle((100L until 130L).map(i => (i, i + 1))).toSeq
+    val star = ((250L until 260L) ++ (261L until 270L)).map(l => (260L, l))
+    val ids = (100L to 130L) ++ (250L until 270L) ++ (400L until 405L)
+    val docs = ids.toDF("doc_id")
+    val pairs = (chain ++ star).toDF("id_a", "id_b")
+    val want = ids.map(i => i -> (if (i <= 130L) 100L else if (i < 400L) 250L else i)).toMap
+    def asMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (driver, driverOk) = Dedup.duplicateComponentsChecked(docs, pairs)
+    val (fallback, fallbackOk) = Dedup.labelPropagation(docs, pairs, "doc_id", maxIter = 40)
+    assert(driverOk && fallbackOk)
+    assert(asMap(driver) === want)
+    assert(asMap(fallback) === want)
+    assert(driver.count() === ids.size.toLong)
+  }
+
+  test("duplicateComponents: an edge through an id outside docs joins on the driver path only") {
+    // docs {1, 3, 5}; pairs 1~2~3 where 2 is not a doc. Union-find closes
+    // 1 and 3 through 2; propagation passes no label through a non-doc id
+    val docs = Seq(1L, 3L, 5L).toDF("doc_id")
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    def asMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(asMap(Dedup.duplicateComponents(docs, pairs)) === Map(1L -> 1L, 3L -> 1L, 5L -> 5L))
+    assert(asMap(Dedup.labelPropagation(docs, pairs, "doc_id", maxIter = 20)._1) ===
+      Map(1L -> 1L, 3L -> 2L, 5L -> 5L))
+  }
+
+  test("duplicateComponents starts at most 2 jobs on the driver path") {
+    // a cluster-side pair frame over 4 partitions: the bounded collect is
+    // the call's only action (the propagation path pins its edges, its
+    // seed labels and every round, and runs a convergence check per round)
+    val pairs = spark.range(0, 2000, 1, 4)
+      .select(($"id" * 2).as("id_a"), ($"id" * 2 + 1).as("id_b")).localCheckpoint(true)
+    val docs = spark.range(0, 4000).toDF("doc_id")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val labels = try Dedup.duplicateComponents(docs, pairs) finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get <= 2, s"${jobs.get} jobs")
+    assert(labels.filter($"component" =!= $"doc_id").count() === 2000L)
+    assert(labels.filter($"component" === $"doc_id" - 1).count() === 2000L)
   }
 
   test("dropNearDuplicates removes every doc that pairs with a lower id") {
