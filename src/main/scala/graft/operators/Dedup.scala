@@ -21,6 +21,18 @@ import graft.functions.{TextExprs, VectorOps}
   *   shuffle on bucket key -> within-bucket pair join -> exact verify.
   * Bucket cardinality grows with N, so per-bucket pair counts stay bounded
   * and the shuffle key is the bucket — the plan that survives 100 TB.
+  *
+  * The middle of that shape is written once. Each family derives its own
+  * bucket key (an xxhash band via [[bandExplode]], a portable string
+  * band, a block struct, a deletion variant) and runs its own verify
+  * (Jaccard, Hamming, cosine, Levenshtein); the pairs in between come
+  * from three private helpers:
+  *  - [[bucketPairs]]: the within-bucket self-join with id_a < id_b, the
+  *    lowest-id cap per bucket and the star link of the overflow;
+  *  - [[bucketOverflow]]: the members past the cap, the one aggregate
+  *    behind every public overflow counter;
+  *  - [[incrementalBucketPairs]]: new × (old ∪ new) pairs for the
+  *    incremental-ingest operators.
   */
 object Dedup {
 
@@ -152,72 +164,106 @@ object Dedup {
     *   batch twin of `DedupStream.maxMembersPerBucket`'s bounded-state
     *   rule. The band hash is the shuffle key, so an adversarial corpus
     *   (every doc identical) collapses into ONE bucket and the self-join
-    *   goes quadratic in N; the cap keeps the lowest-id
-    *   `maxBucketMembers` members per bucket (deterministic — a
-    *   row_number over the same key the join shuffles on, linear work),
-    *   bounding within-bucket pairs at C(cap, 2) by construction.
-    *   Dropped membership is observable via [[bandBucketDrops]] and
-    *   gated by the `dedup_skew_gate` driver row. Default = uncapped
-    *   (exact), matching the streaming default.
+    *   goes quadratic in N; the cap keeps the lowest-id members
+    *   ([[bucketPairs]]). Dropped membership is observable via
+    *   [[bandBucketDrops]] and gated by the `dedup_skew_gate` driver
+    *   row. Default = uncapped (exact), matching the streaming default.
     * @param overflowLink hot-bucket policy for the rows past the cap:
     *   instead of vanishing from the candidate stage, each overflow
-    *   member emits ONE pair against the bucket's representative (its
-    *   lowest-id member) — C(cap,2) + (n−cap) pairs per bucket, still
-    *   linear in n. On the pathology that actually creates megabuckets
-    *   (verbatim boilerplate: every member a true duplicate) the star
-    *   links all verify downstream, so connected components stay WHOLE
-    *   — the drop policy's lost-coverage trade removed at linear cost.
-    *   A member whose star link fails verification degrades exactly to
-    *   the drop policy for that member. */
+    *   member pairs once with its bucket's lowest id (the star link of
+    *   [[bucketPairs]]), so a megabucket of verbatim copies keeps its
+    *   connected component whole at linear cost. */
   private def bandCandidates(sigs: DataFrame, idCol: String,
                              bands: Int, rowsPerBand: Int,
                              maxBucketMembers: Int = Int.MaxValue,
-                             overflowLink: Boolean = false): DataFrame = {
-    val ranked = capRanked(
-      sigs.select(col(idCol),
-        posexplode(bandHashes(col("sig"), bands, rowsPerBand)).as(Seq("__band", "__bh"))),
-      idCol, maxBucketMembers)
-    val buckets = ranked.filter(col("__rn") <= maxBucketMembers)
-    val a = buckets.select(col(idCol).as("id_a"), col("__band"), col("__bh"))
-    val b = buckets.select(col(idCol).as("id_b"), col("__band"), col("__bh"))
-    val core = a.join(b, Seq("__band", "__bh"))
+                             overflowLink: Boolean = false): DataFrame =
+    bucketPairs(sigs.select(col(idCol), bandExplode(col("sig"), bands, rowsPerBand)),
+      idCol, BandKey, cap = maxBucketMembers, overflowLink = overflowLink).distinct()
+
+  /** One (`__band`, `__bh`) row per LSH band of a signature column: the
+    * bucket key of the xxhash-banded families. */
+  private def bandExplode(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    posexplode(bandHashes(sig, bands, rowsPerBand)).as(BandKey)
+  private val BandKey = Seq("__band", "__bh")
+
+  /** The within-bucket pairs of `rows` (`idCol`, the `keys` columns and
+    * the `payload` columns): every two rows that agree on all `keys`,
+    * as (id_a, id_b, p + "a" for each payload p, p + "b" for each) with
+    * id_a < id_b — one row per shared bucket, no `distinct` (the caller
+    * dedupes where its verify wants it).
+    *
+    * `cap` keeps each bucket's lowest-id `cap` members (a row_number over
+    * the key the join shuffles on: linear work, at most C(cap, 2) pairs
+    * per bucket). With `overflowLink`, each member past the cap still
+    * emits ONE pair, against the bucket's lowest id, so C(cap, 2) +
+    * (n − cap) pairs per bucket; on verbatim boilerplate (every member a
+    * true duplicate) those star links all verify and components stay
+    * whole, and a link that fails verify degrades to the drop policy for
+    * that member. `core`, `rep` and `over` each read the ranked frame and
+    * each plans its own window: Spark reuses none of these exchanges.
+    * Uncapped rows get a constant rank, which the optimizer folds away. */
+  private def bucketPairs(rows: DataFrame, idCol: String, keys: Seq[String],
+                          payload: Seq[String] = Nil, cap: Int = Int.MaxValue,
+                          overflowLink: Boolean = false): DataFrame = {
+    val out = (Seq("id_a", "id_b") ++ payload.map(_ + "a") ++ payload.map(_ + "b")).map(col)
+    val ranked =
+      if (cap == Int.MaxValue) rows.withColumn("__rn", lit(1))
+      else rows.withColumn("__rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col(idCol))))
+    val kept = ranked.filter(col("__rn") <= cap)
+    val core = bucketSide(kept, idCol, keys, payload, "a")
+      .join(bucketSide(kept, idCol, keys, payload, "b"), keys)
       .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val cands =
-      if (!overflowLink || maxBucketMembers == Int.MaxValue) core
-      else {
-        // rep is the bucket's LOWEST id, so id_a < id_b holds by rank
-        // (both sides re-reference the `ranked` window subtree; its
-        // shuffle is identical across references and exchange-reused)
-        val rep = ranked.filter(col("__rn") === 1)
-          .select(col(idCol).as("id_a"), col("__band"), col("__bh"))
-        val over = ranked.filter(col("__rn") > maxBucketMembers)
-          .select(col(idCol).as("id_b"), col("__band"), col("__bh"))
-        core.unionByName(rep.join(over, Seq("__band", "__bh")).select("id_a", "id_b"))
-      }
-    cands.distinct()
+      .select(out: _*)
+    if (!overflowLink || cap == Int.MaxValue) core
+    else {
+      // rep is the bucket's LOWEST id, so id_a < id_b holds by rank
+      val rep = bucketSide(ranked.filter(col("__rn") === 1), idCol, keys, payload, "a")
+      val over = bucketSide(ranked.filter(col("__rn") > cap), idCol, keys, payload, "b")
+      core.unionByName(rep.join(over, keys).select(out: _*))
+    }
   }
 
-  /** Rank bucket members by ascending id within (band, bucket); uncapped
-    * input gets a constant rank with no window node in the plan. */
-  private def capRanked(buckets: DataFrame, idCol: String, cap: Int): DataFrame =
-    if (cap == Int.MaxValue) buckets.withColumn("__rn", lit(1))
-    else buckets.withColumn("__rn", row_number().over(
-      Window.partitionBy(col("__band"), col("__bh")).orderBy(col(idCol))))
+  /** One side of a bucket join: `idCol` as id_<s>, each payload p as
+    * p + s, then the keys. */
+  private def bucketSide(rows: DataFrame, idCol: String, keys: Seq[String],
+                         payload: Seq[String], s: String): DataFrame =
+    rows.select((col(idCol).as(s"id_$s") +: payload.map(p => col(p).as(p + s))) ++
+      keys.map(col): _*)
+
+  /** Pairs touching at least one NEW row: `newRows` joined on `keys` to
+    * `oldRows` ∪ `newRows`, never old × old. Output as [[bucketPairs]]'
+    * (id_a < id_b, payload oriented with the ids); a new × new pair
+    * arrives once per orientation, so the caller dedupes. */
+  private def incrementalBucketPairs(newRows: DataFrame, oldRows: DataFrame, idCol: String,
+                                     keys: Seq[String], payload: Seq[String] = Nil): DataFrame = {
+    def side(rows: DataFrame, s: String) = bucketSide(rows, idCol, keys, payload, s)
+    val newFirst = col("id_a") < col("id_b")
+    side(newRows, "a").join(side(oldRows, "b").unionByName(side(newRows, "b")), keys)
+      .filter(col("id_a") =!= col("id_b"))
+      .select(Seq(least(col("id_a"), col("id_b")).as("id_a"),
+          greatest(col("id_a"), col("id_b")).as("id_b")) ++
+        payload.map(p => when(newFirst, col(p + "a")).otherwise(col(p + "b")).as(p + "a")) ++
+        payload.map(p => when(newFirst, col(p + "b")).otherwise(col(p + "a")).as(p + "b")): _*)
+  }
+
+  /** Members past `cap`, summed over the buckets of `rows` keyed by
+    * `keys`, as one row (n_overflow) — one linear aggregate that never
+    * forms pairs. */
+  private def bucketOverflow(rows: DataFrame, keys: Seq[String], cap: Int): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
+      .agg(coalesce(sum(greatest(col("__n") - lit(cap.toLong), lit(0L))),
+        lit(0L)).as("n_overflow"))
 
   /** Observable eviction count for a capped band join: total members
     * beyond `maxBucketMembers` across all (band, bucket) groups — the
-    * batch analog of the streaming path's `droppedAcc`. One aggregate
-    * over the exploded bucket frame (linear; never forms pairs). */
+    * batch analog of the streaming path's `droppedAcc`. */
   def bandBucketDrops(sigs: DataFrame, idCol: String = "doc_id",
                       numPerms: Int = 32, bands: Int = 16,
                       maxBucketMembers: Int = Int.MaxValue): DataFrame =
-    sigs.select(col(idCol),
-        posexplode(bandHashes(col("sig"), bands, numPerms / bands)).as(Seq("__band", "__bh")))
-      .groupBy(col("__band"), col("__bh"))
-      .agg(count(lit(1)).as("__n"))
-      .agg(coalesce(sum(greatest(col("__n") - lit(maxBucketMembers.toLong), lit(0L))),
-        lit(0L)).as("n_dropped"))
+    bucketOverflow(sigs.select(col(idCol), bandExplode(col("sig"), bands, numPerms / bands)),
+      BandKey, maxBucketMembers).toDF("n_dropped")
 
   /** [[bandBucketDrops]] for the SimHash band join: members beyond
     * `maxBucketMembers` across all (band, bit-slice bucket) groups.
@@ -228,24 +274,17 @@ object Dedup {
   def simhashBucketOverflow(rawSigs: DataFrame, idCol: String = "doc_id",
                             bands: Int = 4,
                             maxBucketMembers: Int = Int.MaxValue): DataFrame =
-    rawSigs.select(col(idCol),
-        posexplode(bandHashes(col("simhash"), bands, 64 / bands)).as(Seq("__band", "__bh")))
-      .groupBy(col("__band"), col("__bh"))
-      .agg(count(lit(1)).as("__n"))
-      .agg(coalesce(sum(greatest(col("__n") - lit(maxBucketMembers.toLong), lit(0L))),
-        lit(0L)).as("n_overflow"))
+    bucketOverflow(rawSigs.select(col(idCol), bandExplode(col("simhash"), bands, 64 / bands)),
+      BandKey, maxBucketMembers)
 
   /** Block-membership overflow for [[cosinePairsBlocked]]: members beyond
-    * `maxBlockMembers` across all blocks — one linear aggregate, never
-    * forms pairs. `blockExprs` must match the pair call's. */
+    * `maxBlockMembers` across all blocks. `blockExprs` must match the
+    * pair call's. */
   def blockOverflow(emb: DataFrame, blockExprs: Seq[Column],
                     idCol: String = "vec_id",
                     maxBlockMembers: Int = Int.MaxValue): DataFrame =
-    emb.select(col(idCol), struct(blockExprs: _*).as("__blk"))
-      .groupBy(col("__blk"))
-      .agg(count(lit(1)).as("__n"))
-      .agg(coalesce(sum(greatest(col("__n") - lit(maxBlockMembers.toLong), lit(0L))),
-        lit(0L)).as("n_overflow"))
+    bucketOverflow(emb.select(col(idCol), struct(blockExprs: _*).as("__blk")),
+      Seq("__blk"), maxBlockMembers)
 
   /** Public window into the LSH candidate stage: pairs whose signatures
     * collide in >= 1 band, distinct, id_a < id_b — the batch twin the
@@ -285,18 +324,9 @@ object Dedup {
   def minhashCandidatesIncremental(oldSigs: DataFrame, newSigs: DataFrame,
                                    idCol: String = "doc_id",
                                    numPerms: Int = 32, bands: Int = 16): DataFrame = {
-    val rpb = numPerms / bands
-    def explodeB(sigs: DataFrame, as: String) =
-      sigs.select(col(idCol).as(as),
-        posexplode(bandHashes(col("sig"), bands, rpb)).as(Seq("__band", "__bh")))
-    val newB = explodeB(newSigs, "__nid")
-    val allB = explodeB(oldSigs.select(col(idCol), col("sig"))
-      .unionByName(newSigs.select(col(idCol), col("sig"))), "__aid")
-    newB.join(allB, Seq("__band", "__bh"))
-      .filter(col("__nid") =!= col("__aid"))
-      .select(least(col("__nid"), col("__aid")).as("id_a"),
-        greatest(col("__nid"), col("__aid")).as("id_b"))
-      .distinct()
+    def rows(sigs: DataFrame) =
+      sigs.select(col(idCol), bandExplode(col("sig"), bands, numPerms / bands))
+    incrementalBucketPairs(rows(newSigs), rows(oldSigs), idCol, BandKey).distinct()
   }
 
   /** [[minhashCandidatesIncremental]] with the exact-Jaccard verification
@@ -318,23 +348,10 @@ object Dedup {
   def simhashPairsIncremental(oldSigs: DataFrame, newSigs: DataFrame,
                               idCol: String = "doc_id",
                               maxHamming: Int = 3, bands: Int = 4): DataFrame = {
-    val bits = 64
-    def explodeB(sigs: DataFrame, idAs: String, sigAs: String) =
-      sigs.withColumnRenamed("simhash", "sig")
-        .select(col(idCol).as(idAs), col("sig").as(sigAs),
-          posexplode(bandHashes(col("sig"), bands, bits / bands)).as(Seq("__band", "__bh")))
-    val newB = explodeB(newSigs, "__nid", "__hn")
-    val allB = explodeB(
-      oldSigs.select(col(idCol), col("simhash"))
-        .unionByName(newSigs.select(col(idCol), col("simhash"))), "__aid", "__ha")
-    newB.join(allB, Seq("__band", "__bh"))
-      .filter(col("__nid") =!= col("__aid"))
-      .withColumn("hamming", hamming(col("__hn"), col("__ha")))
-      .filter(col("hamming") <= maxHamming)
-      .select(least(col("__nid"), col("__aid")).as("id_a"),
-        greatest(col("__nid"), col("__aid")).as("id_b"),
-        col("hamming").cast("long").as("hamming"))
-      .distinct()
+    def rows(sigs: DataFrame) = sigs.select(col(idCol), col("simhash").as("__h"),
+      bandExplode(col("simhash"), bands, 64 / bands))
+    hammingVerify(incrementalBucketPairs(rows(newSigs), rows(oldSigs), idCol, BandKey,
+      Seq("__h")), maxHamming)
   }
 
   /** MinHash near-dup pairs, exact-verified: LSH candidates filtered by
@@ -590,7 +607,6 @@ object Dedup {
                            maxHamming: Int = 3, bands: Int = 4,
                            maxBucketMembers: Int = Int.MaxValue,
                            overflowLink: Boolean = false): DataFrame = {
-    val bits = 64
     // The signature rides along through the band explode, so Hamming
     // verification happens inside the bucket join itself — no cache, no
     // re-join against the signature subplan. Costs one extra signature
@@ -598,32 +614,18 @@ object Dedup {
     // computation of the explode+64-sum subplan instead of three and
     // leaves no corpus-sized block pinned in executor memory.
     val sigs = rawSigs.withColumnRenamed("simhash", "sig")
-    val ranked = capRanked(
-      sigs.select(col(idCol), col("sig"),
-        posexplode(bandHashes(col("sig"), bands, bits / bands)).as(Seq("__band", "__bh"))),
-      idCol, maxBucketMembers)
-    val buckets = ranked.filter(col("__rn") <= maxBucketMembers)
-    val a = buckets.select(col(idCol).as("id_a"), col("sig").as("__ha"), col("__band"), col("__bh"))
-    val b = buckets.select(col(idCol).as("id_b"), col("sig").as("__hb"), col("__band"), col("__bh"))
-    val core = a.join(b, Seq("__band", "__bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("__ha"), col("__hb"))
-    val cands =
-      if (!overflowLink || maxBucketMembers == Int.MaxValue) core
-      else {
-        val rep = ranked.filter(col("__rn") === 1)
-          .select(col(idCol).as("id_a"), col("sig").as("__ha"), col("__band"), col("__bh"))
-        val over = ranked.filter(col("__rn") > maxBucketMembers)
-          .select(col(idCol).as("id_b"), col("sig").as("__hb"), col("__band"), col("__bh"))
-        core.unionByName(rep.join(over, Seq("__band", "__bh"))
-          .select(col("id_a"), col("id_b"), col("__ha"), col("__hb")))
-      }
-    cands
-      .withColumn("hamming", hamming(col("__ha"), col("__hb")))
+    hammingVerify(bucketPairs(sigs.select(col(idCol), col("sig").as("__h"),
+        bandExplode(col("sig"), bands, 64 / bands)),
+      idCol, BandKey, Seq("__h"), maxBucketMembers, overflowLink), maxHamming)
+  }
+
+  /** The SimHash verify over bucket pairs carrying signatures `__ha` /
+    * `__hb`: distinct (id_a, id_b, hamming) at hamming <= maxHamming. */
+  private def hammingVerify(pairs: DataFrame, maxHamming: Int): DataFrame =
+    pairs.withColumn("hamming", hamming(col("__ha"), col("__hb")))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
       .distinct()
-  }
 
   /** (id, char-n-gram hash) rows via [[TextExprs.ShingleHashes]] over the
     * per-char split — same narrow-map shape as [[shingleHashes]], only
@@ -657,10 +659,8 @@ object Dedup {
     val sets = charNgramHashes(docs, idCol, textCol, n)
       .groupBy(col(idCol)).agg(collect_set(col("__h")).as("__set"))
       .join(docs.select(col(idCol), blockExpr.as("__blk")), Seq(idCol))
-    val a = sets.select(col(idCol).as("id_a"), col("__set").as("__sa"), col("__blk"))
-    val b = sets.select(col(idCol).as("id_b"), col("__set").as("__sb"), col("__blk"))
-    a.join(b, "__blk")
-      .filter(col("id_a") < col("id_b"))
+      .select(col(idCol), col("__set").as("__s"), col("__blk"))
+    bucketPairs(sets, idCol, Seq("__blk"), Seq("__s"))
       .withColumn("jaccard", round(jaccard(col("__sa"), col("__sb")), 4))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
@@ -755,11 +755,7 @@ object Dedup {
     }
     val bandKeys = sigRow.select(col(idCol), explode(array(bandStructs: _*)).as("__bk"))
       .select(col(idCol), col("__bk.band").as("__band"), col("__bk.bkey").as("__bkey"))
-    val a = bandKeys.select(col(idCol).as("id_a"), col("__band"), col("__bkey"))
-    val b = bandKeys.select(col(idCol).as("id_b"), col("__band"), col("__bkey"))
-    val cands = a.join(b, Seq("__band", "__bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val cands = bucketPairs(bandKeys, idCol, Seq("__band", "__bkey")).distinct()
     // exact verify on word-shingle STRING sets (complete shingles, short
     // docs fall back to the whole token string) — mirrors [[minhashPairs]]
     verifyJaccard(docs, cands, idCol, threshold)(
@@ -800,18 +796,11 @@ object Dedup {
     // band key = the band's bits as a string; signature rides along so
     // Hamming verification happens inside the bucket join (same shape
     // as [[simhashPairs]])
-    val banded = sig.select(col(idCol), col("sig"),
+    val banded = sig.select(col(idCol), col("sig").as("__h"),
       posexplode(array((0 until bands).map(bIdx =>
         concat_ws("", transform(slice(col("sig"), bIdx * rowsPerBand + 1, rowsPerBand),
           x => x.cast("string")))): _*)).as(Seq("__band", "__bkey")))
-    val a = banded.select(col(idCol).as("id_a"), col("sig").as("__ha"), col("__band"), col("__bkey"))
-    val b = banded.select(col(idCol).as("id_b"), col("sig").as("__hb"), col("__band"), col("__bkey"))
-    a.join(b, Seq("__band", "__bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", hamming(col("__ha"), col("__hb")))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-      .distinct()
+    hammingVerify(bucketPairs(banded, idCol, Seq("__band", "__bkey"), Seq("__h")), maxHamming)
   }
 
   /** Embedding near-dup pairs within blocks (exact cosine, rounded before
@@ -828,37 +817,22 @@ object Dedup {
                          idCol: String = "vec_id", vecCol: String = "embedding",
                          threshold: Double = 0.99, decimals: Int = 4,
                          maxBlockMembers: Int = Int.MaxValue,
-                         overflowLink: Boolean = false): DataFrame = {
-    val blk = struct(blockExprs: _*)
-    val prepped = emb.select(col(idCol), col(vecCol), blk.as("__blk"))
-    val ranked =
-      if (maxBlockMembers == Int.MaxValue) prepped.withColumn("__rn", lit(1))
-      else prepped.withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__blk")).orderBy(col(idCol))))
-    val kept = ranked.filter(col("__rn") <= maxBlockMembers)
-    val a = kept.select(col(idCol).as("id_a"), col(vecCol).as("__va"), col("__blk"))
-    val b = kept.select(col(idCol).as("id_b"), col(vecCol).as("__vb"), col("__blk"))
-    val core = a.join(b, "__blk")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("__va"), col("__vb"))
-    val cands =
-      if (!overflowLink || maxBlockMembers == Int.MaxValue) core
-      else {
-        val rep = ranked.filter(col("__rn") === 1)
-          .select(col(idCol).as("id_a"), col(vecCol).as("__va"), col("__blk"))
-        val over = ranked.filter(col("__rn") > maxBlockMembers)
-          .select(col(idCol).as("id_b"), col(vecCol).as("__vb"), col("__blk"))
-        core.unionByName(rep.join(over, "__blk")
-          .select(col("id_a"), col("id_b"), col("__va"), col("__vb")))
-      }
-    cands
+                         overflowLink: Boolean = false): DataFrame =
+    cosineVerify(bucketPairs(
+      emb.select(col(idCol), col(vecCol).as("__v"), struct(blockExprs: _*).as("__blk")),
+      idCol, Seq("__blk"), Seq("__v"), maxBlockMembers, overflowLink), threshold, decimals)
+
+  /** The embedding verify over pairs carrying vectors `__va` / `__vb`:
+    * (id_a, id_b, cosine) at the cosine rounded to `decimals` >= threshold. */
+  private def cosineVerify(pairs: DataFrame, threshold: Double, decimals: Int): DataFrame =
+    pairs
       .withColumn("cosine", round(VectorOps.cosineSimilarity(col("__va"), col("__vb")), decimals))
       // NaN cosine (a zero-norm side) must not pass the threshold: Spark's
       // comparison ranks NaN LARGEST, so `NaN >= t` is true — a pair of
-      // zero vectors would otherwise emit as a "duplicate"
+      // zero vectors would otherwise emit as a "duplicate". Sign-LSH
+      // buckets DO reach it: zero vectors share the all-zero signature.
       .filter(!isnan(col("cosine")) && col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
-  }
 
   /** Sign-random-projection LSH near-dup pairs over embeddings: signature
     * bit p = sign(<v, h_p>) for `planes` fixed pseudo-random hyperplanes
@@ -880,14 +854,9 @@ object Dedup {
       VectorOps.signProjection(col(vecCol), hyper).as("sig"))
     val cands = bandCandidates(sigs.select(col(idCol), col("sig")), idCol, bands, planes / bands)
     val vecs = emb.select(col(idCol), col(vecCol))
-    cands
+    cosineVerify(cands
       .join(vecs.select(col(idCol).as("id_a"), col(vecCol).as("__va")), "id_a")
-      .join(vecs.select(col(idCol).as("id_b"), col(vecCol).as("__vb")), "id_b")
-      .withColumn("cosine", round(VectorOps.cosineSimilarity(col("__va"), col("__vb")), 4))
-      // NaN guard as in [[cosinePairsBlocked]] (zero vectors collide in
-      // every sign-bucket — all-zero signatures — so they DO reach verify)
-      .filter(!isnan(col("cosine")) && col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+      .join(vecs.select(col(idCol).as("id_b"), col(vecCol).as("__vb")), "id_b"), threshold, 4)
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic near-dedup
@@ -1223,16 +1192,9 @@ object Dedup {
     * @return (id_a, id_b, dist) with id_a < id_b, dist <= maxDist */
   def editDistancePairs(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "title", maxDist: Int = 1,
-                        maxBucketMembers: Int = Int.MaxValue): DataFrame = {
-    val vars = deletionVariants(docs, idCol, textCol, maxDist)
-      .select(col(idCol), col("__t"), explode(col("__vars")).as("__v"))
-    val ranked =
-      if (maxBucketMembers == Int.MaxValue) vars
-      else vars.withColumn("__rn", row_number().over(
-          Window.partitionBy(col("__v")).orderBy(col(idCol))))
-        .filter(col("__rn") <= maxBucketMembers)
-    editDistancePairsFromVariants(ranked, idCol, "__t", "__v", maxDist)
-  }
+                        maxBucketMembers: Int = Int.MaxValue): DataFrame =
+    editPairs(variantRows(docs, idCol, textCol, maxDist), idCol, "__t", "__v", maxDist,
+      maxBucketMembers)
 
   /** The bucket-join + verify half of [[editDistancePairs]] over an
     * ALREADY-EXPLODED variants frame (`idCol`, `textCol`, `varCol` —
@@ -1244,18 +1206,29 @@ object Dedup {
     * state. */
   def editDistancePairsFromVariants(vars: DataFrame, idCol: String,
                                     textCol: String, varCol: String,
-                                    maxDist: Int): DataFrame = {
-    val a = vars.select(col(idCol).as("id_a"), col(textCol).as("__ta"),
-      col(varCol).as("__jv"))
-    val b = vars.select(col(idCol).as("id_b"), col(textCol).as("__tb"),
-      col(varCol).as("__jv"))
-    a.join(b, "__jv")
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "__ta", "__tb").distinct()
+                                    maxDist: Int): DataFrame =
+    editPairs(vars, idCol, textCol, varCol, maxDist, Int.MaxValue)
+
+  private def editPairs(vars: DataFrame, idCol: String, textCol: String, varCol: String,
+                        maxDist: Int, cap: Int): DataFrame =
+    levenshteinVerify(bucketPairs(
+      vars.select(col(idCol), col(textCol).as("__t"), col(varCol).as("__jv")),
+      idCol, Seq("__jv"), Seq("__t"), cap), maxDist)
+
+  /** (idCol, __t, __v): one row per <= `maxDist`-deletion variant. */
+  private def variantRows(docs: DataFrame, idCol: String, textCol: String,
+                          maxDist: Int): DataFrame =
+    deletionVariants(docs, idCol, textCol, maxDist)
+      .select(col(idCol), col("__t"), explode(col("__vars")).as("__v"))
+
+  /** The edit-distance verify over pairs carrying strings `__ta` /
+    * `__tb`: distinct pairs first (a pair shares many variants), then
+    * (id_a, id_b, dist) at dist <= maxDist. */
+  private def levenshteinVerify(pairs: DataFrame, maxDist: Int): DataFrame =
+    pairs.distinct()
       .withColumn("dist", levenshtein(col("__ta"), col("__tb")).cast("long"))
       .filter(col("dist") <= maxDist)
       .select("id_a", "id_b", "dist")
-  }
 
   /** Incremental-ingest form of [[editDistancePairs]] — the recurring-
     * crawl contract the MinHash/SimHash families already carry
@@ -1269,42 +1242,16 @@ object Dedup {
   def editDistancePairsIncremental(oldDocs: DataFrame, newDocs: DataFrame,
                                    idCol: String = "doc_id",
                                    textCol: String = "title",
-                                   maxDist: Int = 1): DataFrame = {
-    def vars(df: DataFrame) = deletionVariants(df, idCol, textCol, maxDist)
-      .select(col(idCol), col("__t"), explode(col("__vars")).as("__v"))
-    val newV = vars(newDocs)
-    val oldV = vars(oldDocs)
-    val a = newV.select(col(idCol).as("id_a"), col("__t").as("__ta"), col("__v"))
-    // probe side = old ∪ new: new×new pairs come from the self side,
-    // new×old from the union's old half; old×old can never form because
-    // one side is always the new batch
-    val b = oldV.unionByName(newV)
-      .select(col(idCol).as("id_b"), col("__t").as("__tb"), col("__v"))
-    // a new×new pair arrives in BOTH orientations (each member probes
-    // the other), so ids AND titles normalize together before distinct
-    a.join(b, "__v")
-      .filter(col("id_a") =!= col("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("__ia"),
-        greatest(col("id_a"), col("id_b")).as("__ib"),
-        when(col("id_a") < col("id_b"), col("__ta")).otherwise(col("__tb")).as("__na"),
-        when(col("id_a") < col("id_b"), col("__tb")).otherwise(col("__ta")).as("__nb"))
-      .distinct()
-      .withColumn("dist", levenshtein(col("__na"), col("__nb")).cast("long"))
-      .filter(col("dist") <= maxDist)
-      .select(col("__ia").as("id_a"), col("__ib").as("id_b"), col("dist"))
-  }
+                                   maxDist: Int = 1): DataFrame =
+    levenshteinVerify(incrementalBucketPairs(variantRows(newDocs, idCol, textCol, maxDist),
+      variantRows(oldDocs, idCol, textCol, maxDist), idCol, Seq("__v"), Seq("__t")), maxDist)
 
   /** Observable eviction count for a capped [[editDistancePairs]] join:
-    * members beyond `maxBucketMembers` across all variant buckets — one
-    * linear aggregate over the exploded frame, never forms pairs (the
+    * members beyond `maxBucketMembers` across all variant buckets (the
     * [[bandBucketDrops]] contract for the deletion-variant bucket key). */
   def editBucketDrops(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "title", maxDist: Int = 1,
                       maxBucketMembers: Int = Int.MaxValue): DataFrame =
-    deletionVariants(docs, idCol, textCol, maxDist)
-      .select(col(idCol), explode(col("__vars")).as("__v"))
-      .groupBy(col("__v"))
-      .agg(count(lit(1)).as("__n"))
-      .agg(coalesce(sum(greatest(col("__n") - lit(maxBucketMembers.toLong), lit(0L))),
-        lit(0L)).as("n_dropped"))
+    bucketOverflow(variantRows(docs, idCol, textCol, maxDist), Seq("__v"), maxBucketMembers)
+      .toDF("n_dropped")
 }

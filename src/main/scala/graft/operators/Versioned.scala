@@ -1331,41 +1331,29 @@ object Versioned {
     // manifest): it is free inside the stats pass, footer-cheap when
     // computed alone (an empty read schema serves counts from parquet
     // row-group metadata), and it is what lets countAt() answer
-    // count(*)-shaped questions from ONE manifest read at any scale
-    val base =
-      if (present.isEmpty) {
-        val counts = readBack
-          .groupBy(input_file_name().as("__f")).count()
-          .collect().map(r => normFileName(r.getString(0)) -> r.getLong(1))
-          .toMap
-        // a written part absent from the count scan has zero rows —
-        // proven empty, so it never enters the manifest at all
-        paths.flatMap(p => counts.get(p).map(n => FileEntry(p, rows = Some(n))))
-      } else {
-        // ALL requested columns' min/max AND the row count in ONE pass
-        // over the freshly written, page-warm files — the multi-stats
-        // layer costs the same single scan the one-column form paid
-        val aggs = count(lit(1)).as("__n") +: present.flatMap(c =>
-          Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
-        val stats = readBack
-          .groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().map { r =>
-            // all-null (or uncastable) stats column in a file => the file
-            // commits WITHOUT that triple and is simply never pruned on
-            // it — a missing statistic must degrade to "always read",
-            // not crash a commit whose data files are already on disk
-            val trips = present.zipWithIndex.flatMap { case (c, j) =>
-              if (r.isNullAt(2 + 2 * j) || r.isNullAt(3 + 2 * j)) None
-              else Some((c, r.getLong(2 + 2 * j), r.getLong(3 + 2 * j)))
-            }
-            normFileName(r.getString(0)) -> ((trips, r.getLong(1)))
-          }.toMap
-        // a written part absent from the stats scan has zero rows —
-        // proven empty, so it never enters the manifest at all
-        paths.flatMap(p => stats.get(p).map { case (st, n) =>
-          FileEntry(p, st, rows = Some(n)) })
-      }
+    // count(*)-shaped questions from ONE manifest read at any scale.
+    // Every requested column's min/max rides in the same single pass
+    // over the freshly written, page-warm files.
+    val aggs = count(lit(1)).as("__n") +: present.flatMap(c =>
+      Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
+    val stats = readBack
+      .groupBy(input_file_name().as("__f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect().map { r =>
+        // all-null (or uncastable) stats column in a file => the file
+        // commits WITHOUT that triple and is simply never pruned on it —
+        // a missing statistic must degrade to "always read", not crash a
+        // commit whose data files are already on disk
+        val trips = present.zipWithIndex.flatMap { case (c, j) =>
+          if (r.isNullAt(2 + 2 * j) || r.isNullAt(3 + 2 * j)) None
+          else Some((c, r.getLong(2 + 2 * j), r.getLong(3 + 2 * j)))
+        }
+        normFileName(r.getString(0)) -> ((trips, r.getLong(1)))
+      }.toMap
+    // a written part absent from the stats scan has zero rows — proven
+    // empty, so it never enters the manifest at all
+    val base = paths.flatMap(p => stats.get(p).map { case (st, n) =>
+      FileEntry(p, st, rows = Some(n)) })
     bloomCol.filter(readBack.columns.contains) match {
       case None => base
       case Some(bc) =>
@@ -1613,14 +1601,28 @@ object Versioned {
     * attempt-unique, so the retries move only manifest lines, never
     * data); when `rebase` refuses or throws, or the retries run out,
     * `attemptData` is discarded. Delta/Iceberg call the same thing
-    * optimistic concurrency with conflict detection. */
+    * optimistic concurrency with conflict detection.
+    *
+    * A rebase may write a deletion-vector sidecar of its own (the
+    * consolidation of [[morDeleteRebase]], the retraction of
+    * [[retractDvFor]]); the code that writes one records its path in
+    * `written`, which is attempt data too. Whatever of the attempt data
+    * the published manifest does not reference is discarded: all of it
+    * on a refusal, a throw or when the retries run out; on success a
+    * sidecar written against a DV set that lost the race, or a MoR
+    * delete's own sidecar once consolidated away. A sidecar carried in
+    * from an existing manifest (a restore's, any carried `dv.files`) is
+    * never recorded, so never touched. */
   private val CommitRetries = 5
-  private def commitWithRebase(s: SparkSession, tableDir: String,
-                               rebase: Snapshot => Option[(Seq[FileEntry], Map[String, String])],
-                               attemptData: Seq[FileEntry] = Seq.empty)
-                              : Int = {
+  private[graft] def commitWithRebase(s: SparkSession, tableDir: String,
+                                      rebase: Snapshot => Option[(Seq[FileEntry], Map[String, String])],
+                                      attemptData: Seq[FileEntry] = Seq.empty,
+                                      written: scala.collection.Seq[String] = Seq.empty)
+                                     : Int = {
     var last: CommitRaceLost = null
     var attempt = 0
+    def discard(published: => Iterator[String]): Unit =
+      discardAttemptData(s, attemptData.map(_.path) ++ written, published)
     while (attempt < CommitRetries) {
       val snap = snapshot(s, tableDir)
       val (entries, meta) =
@@ -1628,25 +1630,40 @@ object Versioned {
           s"commit to $tableDir conflicts with version ${snap.version} " +
             "committed concurrently: the interleaved commit rewrote files " +
             "or rows this writer read — re-run against the new snapshot"))
-        catch { case e: Throwable => discardAttemptData(s, attemptData); throw e }
-      try return commitManifest(s, tableDir, snap.version + 1, entries, meta,
-        base = Some(snap))
-      catch { case e: CommitRaceLost => last = e; attempt += 1 }
+        catch { case e: Throwable => discard(Iterator.empty); throw e }
+      try {
+        val v = commitManifest(s, tableDir, snap.version + 1, entries, meta,
+          base = Some(snap))
+        discard(entries.iterator.map(_.path) ++ Snapshot(v, entries, meta).dvFiles)
+        return v
+      } catch { case e: CommitRaceLost => last = e; attempt += 1 }
     }
-    discardAttemptData(s, attemptData)
+    discard(Iterator.empty)
     throw last
   }
 
-  /** Best-effort reclamation of an attempt's data directories when its
-    * commit refuses (true conflict) or exhausts retries: the files are
-    * provably unpublished at that point — no manifest references them —
-    * so leaving them would orphan a full rewrite-sized directory per
-    * failed COW/compact attempt until someone vacuums. Failures here
-    * are swallowed: cleanup must never mask the typed conflict. */
-  private def discardAttemptData(s: SparkSession, entries: Seq[FileEntry]): Unit =
-    try entries.map(e => new Path(e.path).getParent).distinct
-      .foreach(d => fs(s, d).delete(d, true))
-    catch { case _: Throwable => () }
+  /** Best-effort reclamation of attempt data no manifest references:
+    * the directory of every path in `paths` that `published` does not
+    * name, except a directory that also holds a published one of
+    * `paths`. Each `writeData` call writes its own directory, so an
+    * unpublished write goes whole — leaving it would orphan a
+    * rewrite-sized directory (or a sidecar) per failed attempt until
+    * someone vacuums — and only attempt paths can live in it.
+    * `published` is walked only when there are attempt paths (a
+    * metadata commit does no work here). Failures here are swallowed:
+    * cleanup must never mask the typed conflict. */
+  private def discardAttemptData(s: SparkSession, paths: Seq[String],
+                                 published: => Iterator[String]): Unit =
+    if (paths.nonEmpty) try {
+      val mine = paths.toSet
+      val live = published.filter(mine).toSet
+      val dead = paths.filterNot(live)
+      if (dead.nonEmpty) {
+        val liveDirs = live.map(new Path(_).getParent)
+        dead.map(new Path(_).getParent).distinct.filterNot(liveDirs)
+          .foreach(d => fs(s, d).delete(d, true))
+      }
+    } catch { case _: Throwable => () }
 
   /** The write-and-commit step every rewriting commit shares: write
     * `rows` (arranged by the caller, in the column space its files
@@ -1658,12 +1675,13 @@ object Versioned {
     * write (a delete that matched no row). */
   private def writeAndCommit(s: SparkSession, base: Snapshot, tableDir: String,
                              rows: Option[DataFrame],
-                             skipping: (Seq[String], Option[String]))
+                             skipping: (Seq[String], Option[String]),
+                             written: scala.collection.Seq[String] = Seq.empty)
                             (rebase: (Snapshot, Seq[FileEntry]) =>
                               Option[(Seq[FileEntry], Map[String, String])]): Int = {
     val added = rows.fold(Seq.empty[FileEntry])(
       writeData(_, tableDir, base.version + 1, skipping._1, skipping._2))
-    commitWithRebase(s, tableDir, rebase(_, added), added)
+    commitWithRebase(s, tableDir, rebase(_, added), added, written)
   }
 
   /** A FULL rewrite (compact, z-order, overwrite): `rows` replace every
@@ -1996,8 +2014,10 @@ object Versioned {
     if (distinctIds.isEmpty) return base.version
     val dvEntries = writeData(distinctIds, tableDir, base.version + 1)
     val cache = scala.collection.mutable.Map.empty[String, Map[String, String]]
+    val consolidated = scala.collection.mutable.Buffer.empty[String]
     commitWithRebase(s, tableDir,
-      morDeleteRebase(s, tableDir, idCol, physId, dvEntries, cache), dvEntries)
+      morDeleteRebase(s, tableDir, idCol, physId, dvEntries, cache, consolidated),
+      dvEntries, consolidated)
   }
 
   /** The rebase rule of [[deleteIdsMergeOnRead]]'s commit loop, exposed
@@ -2011,10 +2031,13 @@ object Versioned {
     * are already delete-materialized or re-keyed). Folds sidecars into
     * one when the standing count crosses [[DvConsolidateAt]] and stamps
     * `dv.rows` (the mask-debt observability [[history]] surfaces); both
-    * are cached per base-DV-set so bounded commit retries don't rewrite. */
+    * are cached per base-DV-set so bounded commit retries don't rewrite;
+    * each consolidated sidecar's path is recorded in `written`. */
   private[graft] def morDeleteRebase(s: SparkSession, tableDir: String,
       idCol: String, physId: String, dvEntries: Seq[FileEntry],
-      cache: scala.collection.mutable.Map[String, Map[String, String]])
+      cache: scala.collection.mutable.Map[String, Map[String, String]],
+      written: scala.collection.mutable.Buffer[String] =
+        scala.collection.mutable.Buffer.empty[String])
       (snap: Snapshot): Option[(Seq[FileEntry], Map[String, String])] = {
     if (physOf(snap, idCol) != physId || !snap.dvCol.forall(_ == physId)) None
     else {
@@ -2024,6 +2047,7 @@ object Versioned {
         if (standing.size > DvConsolidateAt) {
           val rows = ids.count()
           val one = writeData(ids, tableDir, snap.version + 1)
+          written ++= one.map(_.path)
           Map("dv.files" -> one.map(_.path).mkString(","),
             "dv.rows" -> rows.toString)
         } else Map("dv.files" -> standing.mkString(","),
@@ -2039,9 +2063,12 @@ object Versioned {
     * ids present in BOTH are subtracted (one consolidated sidecar
     * rewrite — O(DV), not O(table)); with no overlap the vectors carry
     * unchanged and this costs one small join. Returns the meta updates
-    * for the commit (empty = carry as-is). */
+    * for the commit (empty = carry as-is); the rewritten sidecar's path
+    * is recorded in `written`. */
   private def retractDvFor(s: SparkSession, snap: Snapshot, delta: DataFrame,
-                           tableDir: String, v: Int): Map[String, String] =
+                           tableDir: String, v: Int,
+                           written: scala.collection.mutable.Buffer[String])
+      : Map[String, String] =
     (snap.dvFiles, snap.dvCol) match {
       case (dvs, Some(c)) if dvs.nonEmpty =>
         val deltaPhys = toPhysical(snap, delta)
@@ -2056,6 +2083,7 @@ object Versioned {
             if (n == 0L) Map("dv.files" -> "", "dv.col" -> "", "dv.rows" -> "0")
             else {
               val rewritten = writeData(survived, tableDir, v)
+              written ++= rewritten.map(_.path)
               Map("dv.files" -> rewritten.map(_.path).mkString(","),
                 "dv.rows" -> n.toString)
             }
@@ -2326,15 +2354,23 @@ object Versioned {
     require(a.columns.sorted.sameElements(b.columns.sorted),
       s"schema drift between v$fromVersion and v$toVersion: " +
         s"${a.columns.mkString(",")} vs ${b.columns.mkString(",")}")
-    val cols = a.columns.filterNot(_ == idCol).toSeq
-    val oldSide = a.select(col(idCol) +: cols.map(c => col(c).as(s"${c}_old")): _*)
-      .withColumn("__in_old", lit(true))
-    val newSide = b.select(col(idCol) +: cols.map(c => col(c).as(s"${c}_new")): _*)
-      .withColumn("__in_new", lit(true))
-    val joined = oldSide.join(newSide, Seq(idCol), "full_outer")
+    classifyChanges(a, b, idCol, a.columns.filterNot(_ == idCol).toSeq)
+  }
+
+  /** The row-level classification [[diff]] and [[stepChanges]] share:
+    * `oldRows` and `newRows` full-outer-joined on `idCol`, each value
+    * column `c` carried as `c_old` / `c_new`, and a `change` of
+    * `insert | delete | update` (null-safe per column); unchanged ids
+    * are dropped. With no value column only inserts and deletes exist. */
+  private def classifyChanges(oldRows: DataFrame, newRows: DataFrame, idCol: String,
+                              cols: Seq[String]): DataFrame = {
+    def side(rows: DataFrame, tag: String) =
+      rows.select(col(idCol) +: cols.map(c => col(c).as(s"${c}_$tag")): _*)
+        .withColumn(s"__in_$tag", lit(true))
     val changed = cols.map(c => !(col(s"${c}_old") <=> col(s"${c}_new")))
-      .reduce(_ || _)
-    joined.withColumn("change",
+      .reduceOption(_ || _).getOrElse(lit(false))
+    side(oldRows, "old").join(side(newRows, "new"), Seq(idCol), "full_outer")
+      .withColumn("change",
         when(col("__in_old").isNull, lit("insert"))
           .when(col("__in_new").isNull, lit("delete"))
           .when(changed, lit("update")))
@@ -2416,7 +2452,6 @@ object Versioned {
                           idCol: String, fin: Snapshot,
                           finSchema: org.apache.spark.sql.types.StructType)
       : Option[DataFrame] = {
-    val valueCols = finSchema.fields.toSeq.filterNot(_.name == idCol)
     // project a step's logical view onto the final logical schema:
     // rename-stable through PHYSICAL identity, lossless widening casts,
     // null-fill for columns the step predates
@@ -2465,22 +2500,8 @@ object Versioned {
         }
       val oldSlice = slice(prev, (removed ++ dvCandidates).distinct)
       val newSlice = slice(cur, (added ++ dvCandidates).distinct)
-      val oldSide = oldSlice.select(col(idCol) +:
-          valueCols.map(f => col(f.name).as(s"${f.name}_old")): _*)
-        .withColumn("__in_old", lit(true))
-      val newSide = newSlice.select(col(idCol) +:
-          valueCols.map(f => col(f.name).as(s"${f.name}_new")): _*)
-        .withColumn("__in_new", lit(true))
-      val joined = oldSide.join(newSide, Seq(idCol), "full_outer")
-      val changed = valueCols.map(f =>
-        !(col(s"${f.name}_old") <=> col(s"${f.name}_new")))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      Some(joined.withColumn("change",
-          when(col("__in_old").isNull, lit("insert"))
-            .when(col("__in_new").isNull, lit("delete"))
-            .when(changed, lit("update")))
-        .filter(col("change").isNotNull)
-        .drop("__in_old", "__in_new"))
+      Some(classifyChanges(oldSlice, newSlice, idCol,
+        finSchema.fieldNames.toSeq.filterNot(_ == idCol)))
     }
   }
 
@@ -3335,15 +3356,16 @@ object Versioned {
     // from the standing vector (else the fresh rows would stay masked);
     // a delete introduces nothing, so it carries the vectors as-is
     val dvCache = scala.collection.mutable.Map.empty[String, Map[String, String]]
+    val retracted = scala.collection.mutable.Buffer.empty[String]
     def meta(b: Snapshot): Map[String, String] =
       (if (landed.isEmpty) Map.empty[String, String]
        else dvCache.getOrElseUpdate(b.dvFiles.mkString(","),
-         retractDvFor(s, b, delta, tableDir, b.version + 1))) + ("op" -> op)
+         retractDvFor(s, b, delta, tableDir, b.version + 1, retracted))) + ("op" -> op)
     val rows =
       if (touched.isEmpty && landed.isEmpty) None
       else Some(toPhysical(snap, rewritten))
     val committed = writeAndCommit(s, snap, tableDir, rows,
-        inheritedSkipping(snap, rebaseline = false)) { (latest, added) =>
+        inheritedSkipping(snap, rebaseline = false), retracted) { (latest, added) =>
       cowRebase(s, snap, touched, added, deltaIds, idCol, schema, meta,
         revalidate = b => landed.foreach(rows =>
           if (constraintsOf(b) != constraintsOf(snap))

@@ -135,6 +135,18 @@ class VersionedSpec extends SparkSuite {
     assert(Versioned.diff(spark, dir, 2, 3, "doc_id").count() === 0)
   }
 
+  test("diff on an id-only table reports inserts and deletes") {
+    import spark.implicits._
+    val dir = freshDir()
+    Versioned.init((0L until 5L).toDF("doc_id"), dir)
+    Versioned.append(Seq(5L, 6L).toDF("doc_id"), dir)
+    Versioned.deleteIds(Seq(0L).toDF("doc_id"), dir, "doc_id")
+    val d = Versioned.diff(spark, dir, 0, 2, "doc_id").orderBy("doc_id").collect()
+    assert(d.map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("change"))).toSeq ===
+      Seq((0L, "delete"), (5L, "insert"), (6L, "insert")))
+    assert(Versioned.diff(spark, dir, 1, 1, "doc_id").count() === 0)
+  }
+
   test("schema evolution: new columns null-fill old files; time travel keeps old schemas; type change refuses") {
     import spark.implicits._
     val dir = freshDir()
@@ -1694,6 +1706,90 @@ class VersionedSpec extends SparkSuite {
     // the healthy (no-race) path on the re-baselined table works end-to-end
     Versioned.deleteIdsMergeOnRead(Seq(3L).toDF("id"), dir, "id")
     assert(Versioned.read(spark, dir).filter(col("id") === 3L).count() === 0)
+  }
+
+  test("commitWithRebase discards the sidecars a rebase wrote that no manifest references") {
+    import spark.implicits._
+    val dir = freshDir()
+    Versioned.init(docs3(10), dir)
+    Versioned.deleteIdsMergeOnRead(Seq(3L).toDF("doc_id"), dir, "doc_id")
+    val standing = Versioned.snapshot(spark, dir).dvFiles
+    def dataDirs() = new java.io.File(s"$dir/data").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    // a deletion-vector sidecar written inside a rebase and recorded, as
+    // the MoR consolidation and the copy-on-write retraction record theirs
+    val written = scala.collection.mutable.Buffer.empty[String]
+    def sidecar(ids: Long*): String = {
+      val d = s"$dir/data/sidecar_${written.size + 1}"
+      ids.toDF("doc_id").coalesce(1).write.parquet(d)
+      val side = new java.io.File(d).listFiles().map(_.getAbsolutePath)
+        .filter(_.endsWith(".parquet")).head
+      written += side
+      side
+    }
+    def stamp(snap: Versioned.Snapshot, side: String) =
+      Some((snap.entries, snap.meta + ("dv.files" -> (snap.dvFiles :+ side).mkString(","))))
+    def interleavedAppend(id: Long): Unit =
+      Versioned.append(Seq((id, "ap", 1L)).toDF("doc_id", "lang", "n_chars"), dir)
+    // refused: attempt 1 writes a sidecar and loses the publish race to
+    // an interleaved append, attempt 2 refuses
+    val before = dataDirs()
+    var attempts = 0
+    intercept[Versioned.ConcurrentWriteConflictException] {
+      Versioned.commitWithRebase(spark, dir, snap => {
+        attempts += 1
+        if (attempts > 1) None
+        else { val side = sidecar(4L); interleavedAppend(500L); stamp(snap, side) }
+      }, written = written)
+    }
+    val afterRefusal = dataDirs()
+    assert(!afterRefusal.contains("sidecar_1"), "a refused commit must discard its sidecar")
+    assert((afterRefusal -- before).size === 1, "only the interleaved append's data is new")
+    assert(Versioned.snapshot(spark, dir).dvFiles === standing)
+    assert(standing.forall(new java.io.File(_).exists()), "the standing sidecar stays")
+    // published: attempt 1's sidecar (another DV set's) goes, attempt 2's is live
+    written.clear()
+    attempts = 0
+    Versioned.commitWithRebase(spark, dir, snap => {
+      attempts += 1
+      val side = sidecar(4L)
+      if (attempts == 1) interleavedAppend(501L)
+      stamp(snap, side)
+    }, written = written)
+    val afterCommit = dataDirs()
+    assert(!afterCommit.contains("sidecar_1") && afterCommit.contains("sidecar_2"))
+    assert(Versioned.read(spark, dir).filter(col("doc_id").isin(3L, 4L)).count() === 0)
+    assert(Versioned.read(spark, dir).count() === 10)
+  }
+
+  test("a restore that runs out of retries keeps the target's carried sidecars") {
+    import spark.implicits._
+    val dir = freshDir()
+    Versioned.init(docs3(10), dir)
+    val target = Versioned.deleteIdsMergeOnRead(Seq(3L).toDF("doc_id"), dir, "doc_id")
+    val sidecars = Versioned.snapshot(spark, dir, Some(target)).dvFiles
+    assert(sidecars.nonEmpty)
+    // compact applies the delete and drops the vectors: the latest DV set
+    // (empty) now differs from the restore target's
+    Versioned.compact(spark, dir, targetBytes = 32L << 20)
+    assert(Versioned.snapshot(spark, dir).dvFiles.isEmpty)
+    // restore's publish — the target's manifest verbatim — losing every
+    // race to an interleaved append until the retries run out
+    val t = Versioned.snapshot(spark, dir, Some(target))
+    var id = 600L
+    intercept[Versioned.CommitRaceLost] {
+      Versioned.commitWithRebase(spark, dir, _ => {
+        id += 1
+        Versioned.append(Seq((id, "ap", 1L)).toDF("doc_id", "lang", "n_chars"), dir)
+        Some((t.entries, t.meta + ("op" -> "restore")))
+      })
+    }
+    assert(sidecars.forall(new java.io.File(_).exists()),
+      "a carried sidecar is referenced by the target and must stay")
+    assert(Versioned.read(spark, dir, Some(target)).filter(col("doc_id") === 3L).count() === 0)
+    val restored = Versioned.restore(spark, dir, target)
+    assert(Versioned.read(spark, dir, Some(restored)).filter(col("doc_id") === 3L).count() === 0)
+    assert(Versioned.read(spark, dir).count() === 9)
   }
 
   test("MoR sidecars consolidate at the bound; dv_rows/dv_files expose the mask debt") {
